@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlInternals}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -31,13 +31,10 @@ object ConnectedComponents {
       .persist(StorageLevel.MEMORY_AND_DISK)
     und.count()
 
-    val t0 = org.apache.spark.sql.GraftSqlInternals.truncate(
-      vertices.select(col("id"), col("id").as("component")))
-    var labelsHandle = t0.handle
-    var labels = t0.df
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
+    // each round's step is planned once; the labels come out keyed by
+    // their (shortcut) component, not by id, so the iterate claims no layout
+    val loop = GraftSqlInternals.iterate(
+        vertices.select(col("id"), col("id").as("component"))) { labels =>
       // min over closed neighborhood
       val neigh = und.join(labels, und("dst") === labels("id"))
         .groupBy(und("src").as("id"))
@@ -52,21 +49,23 @@ object ConnectedComponents {
       val byId = step1.select(col("id").as("cid"), col("component").as("cc2"))
       // labels is referenced 3× per round (neigh, step1, shortcut) — the plan
       // would grow 3^k without per-round lineage truncation.
-      val (t, obs) = org.apache.spark.sql.GraftSqlInternals.truncateObserved(
-        step1.join(byId, step1("component") === byId("cid"), "left")
-          .select(col("id"),
-            coalesce(col("cc2"), col("component")).as("component"), col("old"))
-          .observe("cc",
-            sum(when(col("component") =!= col("old"), 1L).otherwise(0L)).as("changed"))
-          .select(col("id"), col("component")))
+      step1.join(byId, step1("component") === byId("cid"), "left")
+        .select(col("id"),
+          coalesce(col("cc2"), col("component")).as("component"), col("old"))
+        .observe("cc",
+          sum(when(col("component") =!= col("old"), 1L).otherwise(0L)).as("changed"))
+        .select(col("id"), col("component"))
+    }
+    var changed = 1L
+    var iter = 0
+    while (changed > 0 && iter < maxIter) {
+      val obs = loop.step()
       changed = Option(obs("cc").get(0)).map(_.asInstanceOf[Long]).getOrElse(0L)
-      labelsHandle.unpersist(false)
-      labelsHandle = t.handle
-      labels = t.df
       iter += 1
     }
+    loop.close()
     und.unpersist(false)
-    labels
+    loop.frame
     } // withWidth
   }
 }

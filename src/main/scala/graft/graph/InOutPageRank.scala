@@ -47,6 +47,53 @@ object InOutPageRank {
       checkpointDir: Option[String] = None,
       checkpointEvery: Int = 10)
 
+  /** The iterate's carried columns: id, the static dangling indicator and,
+    * when personalized, v.
+    */
+  private def carried(fr: DataFrame): Seq[Column] =
+    Seq(col("id"), col("dang")) ++ (if (fr.columns.contains("v")) Seq(col("v")) else Nil)
+
+  /** One power step (ppagerank.cc:385-409) as one frame over the iterate
+    * (id, dang, [v,] x): x ← αPᵀx + ωv, with the residual ‖x − x_prev‖₁ and
+    * the new dᵀx and eᵀx observed as "pw". Shared with tools.InOutStepDump.
+    */
+  def powerStep(prep: PageRank.Prepared, frame: DataFrame, alpha: Double,
+      omega: Column, vCol: Column): DataFrame = {
+    val carry = carried(frame)
+    val yraw = PageRank.spmv(prep, frame.select(col("id"), col("x").as("rank")))
+    frame.select(carry :+ col("x").as("x_prev"): _*)
+      .join(yraw.hint("shuffle_hash"), Seq("id"), "left")
+      .withColumn("x", lit(alpha) * coalesce(col("y"), lit(0.0)) + omega * vCol)
+      .observe("pw",
+        sum(abs(col("x") - col("x_prev"))).as("delta"),
+        sum(col("dang") * col("x")).as("dtx"),
+        sum(col("x")).as("sx"))
+      .select(carry :+ col("x"): _*)
+  }
+
+  /** One inner Richardson sweep step (ppagerank.cc:423-435) as one frame
+    * over the sweep frame (id, dang, [v,] f, y): x ← βy + f, then
+    * y ← Bx = Pᵀx + (dᵀx)v with dᵀx known before the job (`dtx`). The
+    * observe "in" carries dᵀ(Pᵀx) for the next step's dᵀx, the inner
+    * residual ‖f + βy_new − x‖₁ and the outer residual
+    * ‖x − αy_new − (1−α)v‖₁ (ppagerank.cc:456-465). Shared with
+    * tools.InOutStepDump.
+    */
+  def innerStep(prep: PageRank.Prepared, st: DataFrame, alpha: Double,
+      beta: Double, dtx: Column, vCol: Column): DataFrame = {
+    val carry = carried(st)
+    val withX = st.withColumn("x", lit(beta) * col("y") + col("f")).drop("y")
+    val yraw = PageRank.spmv(prep, withX.select(col("id"), col("x").as("rank")))
+    withX.join(yraw.hint("shuffle_hash"), Seq("id"), "left")
+      .withColumn("yc", coalesce(col("y"), lit(0.0)))
+      .withColumn("yn", col("yc") + dtx * vCol)
+      .observe("in",
+        sum(col("dang") * col("yc")).as("dyraw"),
+        sum(abs(col("f") + lit(beta) * col("yn") - col("x"))).as("din"),
+        sum(abs(col("x") - lit(alpha) * col("yn") - lit(1 - alpha) * vCol)).as("dout"))
+      .select(carry ++ Seq(col("f"), col("x"), col("yn").as("y")): _*)
+  }
+
   def run(g: LinkGraph, cfg: InOutConfig = InOutConfig(),
       runId: String = "inout",
       personalization: Option[DataFrame] = None,
@@ -54,6 +101,7 @@ object InOutPageRank {
     val spark = g.edges.sparkSession
     import spark.implicits._
     val n = g.numVertices
+    require(n > 0, "empty vertex domain")
     val alpha = cfg.alpha
     val beta = cfg.beta.getOrElse(alpha / 2)
     val vUniform = 1.0 / n
@@ -145,8 +193,8 @@ object InOutPageRank {
       // resumed mid-inner-mode snapshot (carries y): re-measure the seeds
       val row = frame.agg(sum(col("dang") * col("y")),
         sum(col("dang") * vCol)).head()
-      dy = row.getDouble(0)
-      dv = row.getDouble(1)
+      dy = Option(row.get(0)).map(_.asInstanceOf[Double]).getOrElse(0.0)
+      dv = Option(row.get(1)).map(_.asInstanceOf[Double]).getOrElse(0.0)
     }
 
     val trace = scala.collection.mutable.ArrayBuffer[IterMetric]()
@@ -174,9 +222,8 @@ object InOutPageRank {
       * aggregation pass per step).
       */
     def enterPower(fr: DataFrame): DataFrame = {
-      val carry = Seq(col("id"), col("dang")) ++
-        (if (hasV) Seq(col("v")) else Nil)
-      val withDang = attachDang(fr).select(carry :+ col("x"): _*)
+      val attached = attachDang(fr)
+      val withDang = attached.select(carried(attached) :+ col("x"): _*)
       val (t, row) = truncateAndAgg(withDang,
         Seq(sum(col("dang") * col("x")), sum(col("x"))))
       dtxP = row.getDouble(0)
@@ -196,18 +243,8 @@ object InOutPageRank {
         // arithmetic — P is row-stochastic, so eᵀPᵀx = eᵀx − dᵀx).
         if (!powerReady) frame = enterPower(frame)
         val omega = 1.0 - alpha * (sxP - dtxP)
-        val om = GraftSqlInternals.stableLit(omega)
-        val carry = Seq(col("id"), col("dang")) ++ (if (hasV) Seq(col("v")) else Nil)
-        val yraw = PageRank.spmv(prep, frame.select(col("id"), col("x").as("rank")))
-        val xNew = lit(alpha) * coalesce(col("y"), lit(0.0)) + om * vCol
-        val next = frame.select(carry :+ col("x").as("x_prev"): _*)
-          .join(yraw.hint("shuffle_hash"), Seq("id"), "left")
-          .withColumn("x", xNew)
-          .observe("pw",
-            sum(abs(col("x") - col("x_prev"))).as("delta"),
-            sum(col("dang") * col("x")).as("dtx"),
-            sum(col("x")).as("sx"))
-          .select(carry :+ col("x"): _*)
+        val next = powerStep(prep, frame, alpha,
+          GraftSqlInternals.stableLit(omega), vCol)
         val (t, observed) = GraftSqlInternals.truncateObserved(next)
         prevHandle.foreach(_.handle.unpersist(false))
         prevHandle = Some(t)
@@ -242,25 +279,17 @@ object InOutPageRank {
           // paid a second aggregation job per sweep step for the residuals
           val dtxK = beta * dy + dfD
           val sxInner = beta * sy + sf
-          val dtL = GraftSqlInternals.stableLit(dtxK)
-          val withX = st.withColumn("x", lit(beta) * col("y") + col("f")).drop("y")
-          val yraw = PageRank.spmv(prep, withX.select(col("id"), col("x").as("rank")))
-          val carry = Seq(col("id"), col("dang")) ++ (if (hasV) Seq(col("v")) else Nil)
-          val next = withX.join(yraw.hint("shuffle_hash"), Seq("id"), "left")
-            .withColumn("yc", coalesce(col("y"), lit(0.0)))
-            .withColumn("yn", col("yc") + dtL * vCol)
-            .observe("in",
-              sum(col("dang") * col("yc")).as("dyraw"),
-              sum(abs(col("f") + lit(beta) * col("yn") - col("x"))).as("din"),
-              sum(abs(col("x") - lit(alpha) * col("yn") - lit(1 - alpha) * vCol)).as("dout"))
-            .select(carry ++ Seq(col("f"), col("x"), col("yn").as("y")): _*)
+          val next = innerStep(prep, st, alpha, beta,
+            GraftSqlInternals.stableLit(dtxK), vCol)
           val (t, observed) = GraftSqlInternals.truncateObserved(next)
           prevHandle.foreach(_.handle.unpersist(false))
           prevHandle = Some(t)
           val row = observed("in")
-          dy = row.getDouble(0) + dtxK * dv // dᵀy_new = dᵀ(Pᵀx) + (dᵀx)(dᵀv)
-          innerDelta = row.getDouble(1)
-          lastOdiff = row.getDouble(2)
+          def obs(i: Int): Double =
+            Option(row.get(i)).map(_.asInstanceOf[Double]).getOrElse(0.0)
+          dy = obs(0) + dtxK * dv // dᵀy_new = dᵀ(Pᵀx) + (dᵀx)(dᵀv)
+          innerDelta = obs(1)
+          lastOdiff = obs(2)
           st = t.df
           sy = sxInner // eᵀ(Bx) = eᵀx
           sx = sxInner
@@ -276,8 +305,7 @@ object InOutPageRank {
           // (lazy projection over the cached sweep frame; the power
           // transition job materializes it — dang rides along, so the
           // transition needs no dangling join)
-          val carry = Seq(col("id"), col("dang")) ++ (if (hasV) Seq(col("v")) else Nil)
-          frame = st.select(carry :+
+          frame = st.select(carried(st) :+
             (lit(alpha) * col("y") + lit(1 - alpha) * vCol).as("x"): _*)
           sx = alpha * sy + (1 - alpha) * sv
           powerReady = false

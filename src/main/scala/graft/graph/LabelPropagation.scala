@@ -23,9 +23,9 @@ import graft.model.Edge
   * Physical shape: the same single-action iteration kernel as the rank
   * solvers — each round is one job whose materializing tasks also fold the
   * changed-label count as an `observe` accumulator (no dedicated count
-  * action), with the iterate cached via the handle-returning truncate and the
-  * superseded round's blocks unpersisted deterministically (not left to the
-  * ContextCleaner).
+  * action). The round is planned once per run (`GraftSqlInternals.iterate`),
+  * which caches each round's labels and unpersists the superseded round's
+  * blocks deterministically (not left to the ContextCleaner).
   */
 object LabelPropagation {
 
@@ -43,12 +43,8 @@ object LabelPropagation {
       .persist(StorageLevel.MEMORY_AND_DISK)
     adj.count()
 
-    var handle = GraftSqlInternals.truncate(
-      vertices.select(col("id"), col("id").as("label")))
-    var labels = handle.df
-    var r = 0
-    var changed = -1L
-    while (r < rounds && changed != 0L) {
+    val loop = GraftSqlInternals.iterate(
+        vertices.select(col("id"), col("id").as("label")), keys = Seq("id")) { labels =>
       val votes = adj.join(labels, adj("src") === labels("id"))
         .groupBy(adj("dst").as("id"), col("label"))
         .agg(count(lit(1)).as("n"))
@@ -58,22 +54,23 @@ object LabelPropagation {
         .groupBy(col("id"))
         .agg(max(struct(col("n"), (-col("label")).as("neg"), col("label"))).as("w"))
         .select(col("id"), col("w.label").as("newlabel"))
-      val next = labels.join(winner, Seq("id"), "left")
+      labels.join(winner, Seq("id"), "left")
         .select(col("id"), col("label").as("oldlabel"),
           coalesce(col("newlabel"), col("label")).as("label"))
         .observe("lp", sum(when(col("label") =!= col("oldlabel"), 1L)
           .otherwise(0L)).as("changed"))
         .select(col("id"), col("label"))
-      val (nextHandle, observed) = GraftSqlInternals.truncateObserved(next)
+    }
+    var r = 0
+    var changed = -1L
+    while (r < rounds && changed != 0L) {
       // sum over an empty vertex domain observes NULL — treat as fixpoint
-      changed = Option(observed("lp").get(0)).map(_.asInstanceOf[Long]).getOrElse(0L)
-      handle.handle.unpersist(false)
-      handle = nextHandle
-      labels = nextHandle.df
+      changed = Option(loop.step()("lp").get(0)).map(_.asInstanceOf[Long]).getOrElse(0L)
       r += 1
     }
+    loop.close()
     adj.unpersist(false)
-    (labels, r)
+    (loop.frame, r)
     } // withWidth
   }
 }

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSqlInternals, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSqlInternals, Row, ScalarSlot, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -20,16 +20,20 @@ import graft.model._
   *   y += ω·v
   *   δ  = ‖y − x‖₁; stop when δ < tol (ppagerank.cc:319-329)
   *
-  * Physical shape — designed so one iteration is ONE Spark job with NO
-  * dedicated aggregation stage: the dangling indicator d is static, so
+  * Physical shape — one iteration is ONE Spark job with NO dedicated
+  * aggregation stage: the dangling indicator d is static, so
   * ω = α·dᵀxₖ + (1−α)·eᵀxₖ with eᵀxₖ = 1 by construction; dᵀxₖ, eᵀxₖ and
   * the residual are `observe`d (CollectMetrics accumulators) by the same
   * tasks that materialize iteration k's iterate, one iteration ahead of
   * their use — the Spark analogue of the reference's
   * one-SpMV + O(1)-allreduce step, with the allreduces folded into the
-  * SpMV tasks themselves.
-  * The per-iteration DAG stays flat (scan + join + agg) via an eager-on-use
-  * localCheckpoint or an atomic parquet snapshot (resumable, north rule).
+  * SpMV tasks themselves. The step is planned ONCE per solve
+  * (`GraftSqlInternals.iterate`): its physical plan is built over the first
+  * iterate and re-executed over each new one, with ω a driver-set slot, so
+  * an iteration pays no DataFrame build, analysis, optimization or
+  * physical planning — only code generation and the job. The iterate stays
+  * a flat cached scan (lineage truncated every iteration); checkpoints
+  * write atomic parquet snapshots beside it (resumable, north rule).
   *
   * Skew: hub sources (out-degree > saltThreshold) have their edge rows
   * salted across `saltBuckets` sub-keys and the rank vector replicated per
@@ -184,7 +188,7 @@ object PageRank {
     }
 
     var startIter = 0
-    var frame: DataFrame = (cfg.checkpointDir, resume) match {
+    val start: DataFrame = (cfg.checkpointDir, resume) match {
       case (Some(dir), true) =>
         // north rule: a snapshot is only trusted after its per-partition
         // lineage digest validates; corrupted/partial snapshots fall back
@@ -215,8 +219,6 @@ object PageRank {
         }
       case _ => initialFrame()
     }
-    var frameHandle = GraftSqlInternals.truncate(frame)
-    frame = frameHandle.df
 
     // dangling indicator + magnitude of the CURRENT iterate row, under
     // either representation
@@ -224,13 +226,44 @@ object PageRank {
       if (packed) when(rank < 0, 1.0).otherwise(0.0) else col("dang")
     def magOf(rank: Column): Column = if (packed) abs(rank) else rank
 
+    // ω = 1 − ‖αPᵀx‖₁ = 1 − α·(eᵀx − dᵀx), with eᵀx and dᵀx measured as side
+    // scalars of the previous iteration's job — same self-correcting fold as
+    // the reference (ppagerank.cc:307-315). The driver sets the slot before
+    // each step; the step itself is planned once, below.
+    val omega = new ScalarSlot(0.0)
+    val vCol = if (hasV) col("v") else lit(1.0 / n)
+    val carry = if (packed) Seq(col("id"))
+      else Seq(col("id"), col("dang")) ++ (if (hasV) Seq(col("v")) else Nil)
+    val loop = GraftSqlInternals.iterate(start, keys = Seq("id")) { frame =>
+      val contrib = spmv(prep,
+          frame.select(col("id"), magOf(col("rank")).as("rank")))
+        .withColumnRenamed("y", "yraw")
+      // the new magnitude is always positive; packed mode re-applies the
+      // (static) dangling sign carried by the previous rank value
+      val rankPos = lit(cfg.alpha) * coalesce(col("yraw"), lit(0.0)) +
+        GraftSqlInternals.slotLit(omega) * vCol
+      val rankStored = if (packed)
+        when(col("rank_prev") < 0, -col("rank_pos")).otherwise(col("rank_pos"))
+      else col("rank_pos")
+      frame.select(carry :+ col("rank").as("rank_prev"): _*)
+        .join(contrib.hint("shuffle_hash"), Seq("id"), "left")
+        .withColumn("rank_pos", rankPos)
+        // residual ‖xₖ₊₁−xₖ‖₁, next dᵀx and eᵀx are observed as accumulator
+        // side-effects of the SAME tasks that materialize the iterate (no
+        // dedicated aggregation stage, no read-back of the fresh cache)
+        .observe("it",
+          sum(abs(col("rank_pos") - magOf(col("rank_prev")))).as("delta"),
+          sum(dangOf(col("rank_prev")) * col("rank_pos")).as("dtx"),
+          sum(col("rank_pos")).as("sx"))
+        .select(carry :+ rankStored.as("rank"): _*)
+    }
+
     // scalars for iteration 0 / resume: dᵀx and eᵀx (one extra job, once)
-    val r0 = frame.agg(sum(dangOf(col("rank")) * magOf(col("rank"))),
+    val r0 = loop.frame.agg(sum(dangOf(col("rank")) * magOf(col("rank"))),
       sum(magOf(col("rank")))).head()
     var dtx = r0.getDouble(0)
     var sx = r0.getDouble(1)
 
-    val vCol = if (hasV) col("v") else lit(1.0 / n)
     val trace = scala.collection.mutable.ArrayBuffer[IterMetric]()
     var flushedUpTo = 0
     var iter = startIter
@@ -239,42 +272,10 @@ object PageRank {
 
     while (iter < cfg.maxIter && delta >= cfg.tol) {
       val t0 = System.nanoTime()
-      // ω = 1 − ‖αPᵀx‖₁ = 1 − α·(eᵀx − dᵀx), with eᵀx and dᵀx measured as
-      // side scalars of the previous iteration's aggregate — same
-      // self-correcting fold as the reference (ppagerank.cc:307-315).
-      // ω travels via GraftSqlInternals.stableLit (codegen references
-      // array), NOT an inlined literal: a changing literal would alter the
-      // generated source every iteration and force a Janino recompile of
-      // every stage touching it (tens of ms serial per stage).
-      val omega = 1.0 - cfg.alpha * (sx - dtx)
-      val contrib = spmv(prep,
-          frame.select(col("id"), magOf(col("rank")).as("rank")))
-        .withColumnRenamed("y", "yraw")
-      val carry = if (packed) Seq(col("id"))
-        else Seq(col("id"), col("dang")) ++ (if (hasV) Seq(col("v")) else Nil)
-      // the new magnitude is always positive; packed mode re-applies the
-      // (static) dangling sign carried by the previous rank value
-      val rankPos = lit(cfg.alpha) * coalesce(col("yraw"), lit(0.0)) +
-        GraftSqlInternals.stableLit(omega) * vCol
-      val rankStored = if (packed)
-        when(col("rank_prev") < 0, -col("rank_pos")).otherwise(col("rank_pos"))
-      else col("rank_pos")
-      val next = frame.select(carry :+ col("rank").as("rank_prev"): _*)
-        .join(contrib.hint("shuffle_hash"), Seq("id"), "left")
-        .withColumn("rank_pos", rankPos)
-        // residual ‖xₖ₊₁−xₖ‖₁, next dᵀx and eᵀx are observed as accumulator
-        // side-effects of the SAME tasks that materialize the iterate below
-        // (no dedicated aggregation stage, no read-back of the fresh cache)
-        .observe("it",
-          sum(abs(col("rank_pos") - magOf(col("rank_prev")))).as("delta"),
-          sum(dangOf(col("rank_prev")) * col("rank_pos")).as("dtx"),
-          sum(col("rank_pos")).as("sx"))
-        .select(carry :+ rankStored.as("rank"): _*)
-      // eager lineage truncation + metrics: ONE job per iteration; the
-      // previous iterate's blocks are unpersisted explicitly afterwards
-      val (nextHandle, observed) = GraftSqlInternals.truncateObserved(next)
-
-      val row = observed("it")
+      omega.value = 1.0 - cfg.alpha * (sx - dtx)
+      // ONE job: the next iterate materialized and lineage-truncated, the
+      // previous iterate's blocks retired
+      val row = loop.step()("it")
       delta = row.getDouble(0)
       dtx = row.getDouble(1)
       sx = row.getDouble(2)
@@ -282,16 +283,13 @@ object PageRank {
       iter += 1
       trace += IterMetric(runId, iter, delta, rankSum, (System.nanoTime() - t0) / 1000000L)
 
-      frameHandle.handle.unpersist(false)
-      frameHandle = nextHandle
-      frame = nextHandle.df
-
       val converged = delta < cfg.tol
       if (converged || (cfg.checkpointDir.isDefined && iter % cfg.checkpointEvery == 0)) {
         cfg.checkpointDir.foreach { dir =>
-          // snapshot + per-partition lineage sidecar in one commit protocol
-          frame = TableIO.commitSnapshotWithLineage(
-            frame, s"$dir/$runId", runId, "iter_", iter)
+          // snapshot + per-partition lineage sidecar in one commit protocol;
+          // the snapshot is the resume source, the iterate stays cached
+          TableIO.commitSnapshotWithLineage(
+            loop.frame, s"$dir/$runId", runId, "iter_", iter)
           // K1 convergence-trace sink: append only not-yet-flushed rows
           val fresh = trace.toSeq.drop(flushedUpTo)
           if (fresh.nonEmpty) TableIO.appendRows(fresh.toDF(), s"$dir/$runId/_metrics")
@@ -300,9 +298,10 @@ object PageRank {
       }
       if (converged) reason = ConvergedReason.ResidualBelowTol
     }
-    prep.close() // frame is lineage-truncated — independent of prep's caches
+    loop.close()
+    prep.close() // the iterate is lineage-truncated — independent of prep's caches
 
-    (frame.select(col("id"), magOf(col("rank")).as("rank")).as[VertexRank],
+    (loop.frame.select(col("id"), magOf(col("rank")).as("rank")).as[VertexRank],
       PageRankStats(iter, delta, reason, trace.toSeq))
     } // withWidth
   }
@@ -387,14 +386,40 @@ object PageRank {
       }
     } else None
 
+    // ω_j per seed: driver-set slots read by a step planned once per solve
+    val omega = Array.fill(k)(new ScalarSlot(0.0))
     // x₀_j = v_j (the reference's personalized start, ppagerank.cc:291-295)
-    var frameHandle = GraftSqlInternals.truncate(resumed.getOrElse(base.select(
-      col("id") +: col("dang") +: Seq.tabulate(k)(j => vCol(j).as(rc(j))): _*)))
-    var frame = frameHandle.df
+    val loop = GraftSqlInternals.iterate(resumed.getOrElse(base.select(
+        col("id") +: col("dang") +: Seq.tabulate(k)(j => vCol(j).as(rc(j))): _*)),
+        keys = Seq("id")) { frame =>
+      // one SpMV join for ALL seeds: k sums per dst in one hash aggregate
+      val x = frame.select(col("id") +: Seq.tabulate(k)(j => col(rc(j))): _*)
+        .hint("shuffle_hash")
+      val contrib = prep.joinEdges.join(x, prep.joinEdges("src") === x("id"))
+        .groupBy(col("dst").as("cid"))
+        .agg(sum(col("weight") * col(rc(0))).as("y0"),
+          Seq.tabulate(k - 1)(j =>
+            sum(col("weight") * col(rc(j + 1))).as(s"y${j + 1}")): _*)
+      val joined = frame.select(
+        col("id") +: col("dang") +: Seq.tabulate(k)(j => col(rc(j)).as(s"p$j")): _*)
+        .join(contrib.hint("shuffle_hash"), col("id") === col("cid"), "left")
+      val rankCols = Seq.tabulate(k) { j =>
+        (lit(cfg.alpha) * coalesce(col(s"y$j"), lit(0.0)) +
+          GraftSqlInternals.slotLit(omega(j)) * vCol(j)).as(rc(j))
+      }
+      val metricCols =
+        Seq.tabulate(k)(j => sum(abs(col(rc(j)) - col(s"p$j"))).as(s"d$j")) ++
+        Seq.tabulate(k)(j => sum(col("dang") * col(rc(j))).as(s"m$j")) ++
+        Seq.tabulate(k)(j => sum(col(rc(j))).as(s"s$j"))
+      joined.select(col("id") +: col("dang") +:
+          (rankCols ++ Seq.tabulate(k)(j => col(s"p$j"))): _*)
+        .observe("it", metricCols.head, metricCols.tail: _*)
+        .select(col("id") +: col("dang") +: Seq.tabulate(k)(j => col(rc(j))): _*)
+    }
     // per-seed scalars: x₀_j sums to 1 iff the seed is in the vertex domain
     val aggCols0 = Seq.tabulate(k)(j => sum(col("dang") * col(rc(j)))) ++
       Seq.tabulate(k)(j => sum(col(rc(j))))
-    val r0 = frame.agg(aggCols0.head, aggCols0.tail: _*).head()
+    val r0 = loop.frame.agg(aggCols0.head, aggCols0.tail: _*).head()
     val dtx = Array.tabulate(k)(j => r0.getDouble(j))
     val sx = Array.tabulate(k)(j => r0.getDouble(k + j))
     // a seed outside the vertex domain would make x₀ ≡ 0 for that column:
@@ -416,45 +441,18 @@ object PageRank {
 
     while (iter < cfg.maxIter && delta >= cfg.tol) {
       val t0 = System.nanoTime()
-      val omega = Array.tabulate(k)(j => 1.0 - cfg.alpha * (sx(j) - dtx(j)))
-      // one SpMV join for ALL seeds: k sums per dst in one hash aggregate
-      val x = frame.select(col("id") +: Seq.tabulate(k)(j => col(rc(j))): _*)
-        .hint("shuffle_hash")
-      val contrib = prep.joinEdges.join(x, prep.joinEdges("src") === x("id"))
-        .groupBy(col("dst").as("cid"))
-        .agg(sum(col("weight") * col(rc(0))).as("y0"),
-          Seq.tabulate(k - 1)(j =>
-            sum(col("weight") * col(rc(j + 1))).as(s"y${j + 1}")): _*)
-      val joined = frame.select(
-        col("id") +: col("dang") +: Seq.tabulate(k)(j => col(rc(j)).as(s"p$j")): _*)
-        .join(contrib.hint("shuffle_hash"), col("id") === col("cid"), "left")
-      val rankCols = Seq.tabulate(k) { j =>
-        (lit(cfg.alpha) * coalesce(col(s"y$j"), lit(0.0)) +
-          GraftSqlInternals.stableLit(omega(j)) * vCol(j)).as(rc(j))
-      }
-      val metricCols =
-        Seq.tabulate(k)(j => sum(abs(col(rc(j)) - col(s"p$j"))).as(s"d$j")) ++
-        Seq.tabulate(k)(j => sum(col("dang") * col(rc(j))).as(s"m$j")) ++
-        Seq.tabulate(k)(j => sum(col(rc(j))).as(s"s$j"))
-      val next = joined.select(col("id") +: col("dang") +:
-          (rankCols ++ Seq.tabulate(k)(j => col(s"p$j"))): _*)
-        .observe("it", metricCols.head, metricCols.tail: _*)
-        .select(col("id") +: col("dang") +: Seq.tabulate(k)(j => col(rc(j))): _*)
-      val (nextHandle, observed) = GraftSqlInternals.truncateObserved(next)
-      val row = observed("it")
+      for (j <- 0 until k) omega(j).value = 1.0 - cfg.alpha * (sx(j) - dtx(j))
+      val row = loop.step()("it")
       delta = (0 until k).map(j => row.getDouble(j)).max
       for (j <- 0 until k) { dtx(j) = row.getDouble(k + j); sx(j) = row.getDouble(2 * k + j) }
       iter += 1
       trace += IterMetric(runId, iter, delta,
         (0 until k).map(j => sx(j)).sum / k, (System.nanoTime() - t0) / 1000000L)
-      frameHandle.handle.unpersist(false)
-      frameHandle = nextHandle
-      frame = nextHandle.df
       val converged = delta < cfg.tol
       if (converged || (cfg.checkpointDir.isDefined && iter % cfg.checkpointEvery == 0)) {
         cfg.checkpointDir.foreach { dir =>
-          frame = TableIO.commitSnapshotWithLineage(
-            frame, s"$dir/$runId", runId, "iter_", iter)
+          TableIO.commitSnapshotWithLineage(
+            loop.frame, s"$dir/$runId", runId, "iter_", iter)
           // format marker: columns are seed-named (resume validates against
           // it; see the legacy-index-named refusal above)
           TableIO.writeMarker(spark, s"$dir/$runId/_seedfmt", "seed-named")
@@ -465,13 +463,13 @@ object PageRank {
       }
       if (converged) reason = ConvergedReason.ResidualBelowTol
     }
-
+    loop.close()
     prep.close()
 
     // long form (id, seed, rank)
     val stackArgs = seeds.zipWithIndex
       .map { case (s, j) => s"${s}L, `r$s`" }.mkString(", ")
-    val long = frame.select(col("id"),
+    val long = loop.frame.select(col("id"),
       expr(s"stack($k, $stackArgs)").as(Seq("seed", "rank")))
     (long, PageRankStats(iter, delta, reason, trace.toSeq))
     } // withWidth

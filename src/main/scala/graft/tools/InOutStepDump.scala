@@ -4,16 +4,16 @@ import org.apache.spark.sql.{GraftSqlInternals, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.TestdataGraph
-import graft.graph.PageRank
+import graft.graph.{InOutPageRank, PageRank}
 import graft.model.PageRankConfig
 
-/** Dumps the physical plan of ONE inner-outer power-phase step job as
-  * restructured in round 6 (single materializing job: SpMV join + iterate
-  * join + observe), for the plans/r06 evidence. Args: <outFile>
-  * [<innerOutFile>] — the optional second file gets the INNER-sweep step
-  * job's plan (the analytic-dᵀx single-job form: y_new in-job via a
-  * stableLit dᵀx known before the job, inner+outer residuals and the next
-  * dᵀ(Pᵀx) on the observe).
+/** Dumps the physical plan of ONE inner-outer power-phase step job
+  * (`InOutPageRank.powerStep`: SpMV join + iterate join + observe), for the
+  * plans/r06 evidence. Args: <outFile> [<innerOutFile>] — the optional
+  * second file gets the INNER-sweep step job's plan
+  * (`InOutPageRank.innerStep`: y_new in-job from a dᵀx known before the
+  * job, inner+outer residuals and the next dᵀ(Pᵀx) on the observe). Both
+  * steps are the solver's own builders, run with representative scalars.
   */
 object InOutStepDump {
   def main(args: Array[String]): Unit = {
@@ -38,16 +38,8 @@ object InOutStepDump {
       t0.handle.count()
       val frame = t0.df
       val vCol = lit(1.0 / g.numVertices)
-      val om = GraftSqlInternals.stableLit(0.15)
-      val yraw = PageRank.spmv(prep, frame.select(col("id"), col("x").as("rank")))
-      val next = frame.select(col("id"), col("dang"), col("x").as("x_prev"))
-        .join(yraw.hint("shuffle_hash"), Seq("id"), "left")
-        .withColumn("x", lit(0.85) * coalesce(col("y"), lit(0.0)) + om * vCol)
-        .observe("pw",
-          sum(abs(col("x") - col("x_prev"))).as("delta"),
-          sum(col("dang") * col("x")).as("dtx"),
-          sum(col("x")).as("sx"))
-        .select(col("id"), col("dang"), col("x"))
+      val next = InOutPageRank.powerStep(prep, frame, 0.85,
+        GraftSqlInternals.stableLit(0.15), vCol)
       val plan = next.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
@@ -61,17 +53,8 @@ object InOutStepDump {
         val st = t0.df
           .withColumn("y", col("x")) // stand-in y column of the sweep frame
           .withColumn("f", lit(alpha - beta) * col("x") + lit(1 - alpha) * vCol)
-        val dtL = GraftSqlInternals.stableLit(0.01)
-        val withX = st.withColumn("x", lit(beta) * col("y") + col("f")).drop("y")
-        val yr2 = PageRank.spmv(prep, withX.select(col("id"), col("x").as("rank")))
-        val inner = withX.join(yr2.hint("shuffle_hash"), Seq("id"), "left")
-          .withColumn("yc", coalesce(col("y"), lit(0.0)))
-          .withColumn("yn", col("yc") + dtL * vCol)
-          .observe("in",
-            sum(col("dang") * col("yc")).as("dyraw"),
-            sum(abs(col("f") + lit(beta) * col("yn") - col("x"))).as("din"),
-            sum(abs(col("x") - lit(alpha) * col("yn") - lit(1 - alpha) * vCol)).as("dout"))
-          .select(col("id"), col("dang"), col("f"), col("x"), col("yn").as("y"))
+        val inner = InOutPageRank.innerStep(prep, st, alpha, beta,
+          GraftSqlInternals.stableLit(0.01), vCol)
         val p2 = inner.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         java.nio.file.Files.write(java.nio.file.Paths.get(innerOut),

@@ -2,42 +2,46 @@ package org.apache.spark.sql
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.LeafExpression
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, LeafExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, PartitioningCollection, UnknownPartitioning}
 import org.apache.spark.sql.classic.{DataFrame => CDataFrame, Dataset => CDataset, SparkSession => CSparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{CollectMetricsExec, LogicalRDD, QueryExecution, RDDScanExec, SQLExecutionRDD, SparkPlan}
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+import org.apache.spark.sql.execution.reuse.ReuseExchangeAndSubquery
 import org.apache.spark.sql.types.{DataType, DoubleType}
 import org.apache.spark.storage.StorageLevel
 
-/** Internal bridge for iterative algorithms: persist the computed rows of a
-  * DataFrame and rebuild it as a flat LogicalRDD scan — what
-  * `Dataset.localCheckpoint` does, but returning the underlying RDD handle
-  * so the caller can unpersist the PREVIOUS iterate deterministically
-  * instead of waiting for the ContextCleaner (unbounded iteration loops
-  * would otherwise accumulate cached blocks between GCs).
-  * Output partitioning/ordering are preserved (LogicalRDD.fromDataset), so
-  * co-partitioned joins stay shuffle-free across iterations.
+/** A per-iteration scalar (ω, dᵀx, …) that the driver sets between jobs.
+  * Generated code reads it through the codegen REFERENCES ARRAY instead of
+  * an inlined literal: `lit(omega)` bakes the double into the Java text, so
+  * every iteration would produce different source and pay a fresh Janino
+  * compile of every stage touching it. With a slot the source is
+  * byte-identical across iterations and the CodeGenerator cache hits from
+  * iteration 2 on. A step planned once per solve (`GraftSqlInternals.iterate`)
+  * reads the slot's value as of each job's submission: the tasks carry the
+  * slot serialized with the job, so the driver may set it again as soon as
+  * the job has returned.
   */
-/** A per-iteration scalar (ω, dᵀx, …) that travels through the codegen
-  * REFERENCES ARRAY instead of being inlined into the generated source.
-  * `lit(omega)` bakes the double into the Java text, so every iteration of
-  * an iterative solver produces different source and pays a fresh Janino
-  * compile of every stage touching it; StableDouble keeps the source
-  * byte-identical across iterations (only `references` differs), so the
-  * CodeGenerator cache hits from iteration 2 on. foldable=false keeps the
-  * optimizer from constant-folding it back into an inline literal.
+final class ScalarSlot(@volatile var value: Double) extends Serializable {
+  override def toString: String = value.toString
+}
+
+/** Reads a ScalarSlot. foldable=false keeps the optimizer from
+  * constant-folding it into an inline literal; two reads of different slots
+  * are never equal, so distinct scalars never merge.
   */
-case class StableDouble(value: Double) extends LeafExpression {
+case class SlotValue(slot: ScalarSlot) extends LeafExpression {
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = false
   override def foldable: Boolean = false
-  override def eval(input: InternalRow): Any = value
+  override def eval(input: InternalRow): Any = slot.value
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftStableDouble",
-      java.lang.Double.valueOf(value), "java.lang.Double")
+    val ref = ctx.addReferenceObj("graftSlot", slot, classOf[ScalarSlot].getName)
     ev.copy(
-      code = code"final double ${ev.value} = $ref.doubleValue();",
+      code = code"final double ${ev.value} = $ref.value();",
       isNull = FalseLiteral)
   }
 }
@@ -92,8 +96,13 @@ private[sql] final class GraftIntBuffer(initial: Int) {
 
 object GraftSqlInternals {
 
-  /** Column carrying a per-iteration scalar with iteration-stable codegen. */
-  def stableLit(value: Double): Column = columnOf(StableDouble(value))
+  /** Column reading a slot fixed at `value`: a per-iteration scalar of a
+    * step that is rebuilt every iteration, with iteration-stable codegen.
+    */
+  def stableLit(value: Double): Column = slotLit(new ScalarSlot(value))
+
+  /** Column reading `slot`, which the driver sets before each job. */
+  def slotLit(slot: ScalarSlot): Column = columnOf(SlotValue(slot))
 
   /** Column ⇄ Expression bridge (classic.ExpressionUtils is private[sql]). */
   def columnOf(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
@@ -102,18 +111,6 @@ object GraftSqlInternals {
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 
   final case class Truncated(df: DataFrame, handle: RDD[_])
-
-  /** Escape hatch for A/B measurement: GRAFT_ROW_BLOCKS=0 restores the
-    * per-row-copy cache representation.
-    */
-  private val useRowBlocks: Boolean =
-    !sys.env.get("GRAFT_ROW_BLOCKS").contains("0")
-
-  /** A/B hatch: GRAFT_FIXED_STRIDE=0 forces the generic chunk layout even
-    * for fixed-width null-free frames.
-    */
-  private val useFixedStride: Boolean =
-    !sys.env.get("GRAFT_FIXED_STRIDE").contains("0")
 
   private val ByteArrayOffset =
     org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET
@@ -139,7 +136,7 @@ object GraftSqlInternals {
       private val nFields = types.length
       // fixed-stride eligible: every field a single 8-byte slot (no
       // variable-length region), and ≤64 fields so the bitset is one word
-      private val fixedEligible = useFixedStride && nFields <= 64 &&
+      private val fixedEligible = nFields <= 64 &&
         types.forall(org.apache.spark.sql.catalyst.expressions.UnsafeRow.isFixedLength)
       private val fixedStride = 8 + 8 * nFields // bitset word + slots
       private var demoted = false // odd-sized row seen → generic from there on
@@ -231,38 +228,42 @@ object GraftSqlInternals {
       }
     }
 
-  private def truncateImpl(cdf: CDataFrame, level: StorageLevel,
-      eagerCount: Boolean): Truncated = {
-    val spark = cdf.sparkSession
-    val qe = cdf.queryExecution
-    val nFields = cdf.schema.length
-    if (useRowBlocks) {
-      val src = qe.toRdd
-      val types = cdf.schema.fields.map(_.dataType)
-      // row buffers may be reused by the producing operator — irrelevant
-      // here, the bytes are copied into the chunk immediately
-      val chunks = src.mapPartitions(packPartition(_, types),
-        preservesPartitioning = true)
-      chunks.persist(level)
-      chunks.localCheckpoint()
-      if (eagerCount) chunks.count()
-      val rows = chunks.mapPartitions(unpackChunks(_, nFields),
-        preservesPartitioning = true)
-      val logical = LogicalRDD.fromDataset(rows, cdf, isStreaming = false)
-      Truncated(CDataset.ofRows(spark, logical), chunks)
-    } else {
-      val rdd = qe.toRdd.map(_.copy())
-      rdd.persist(level)
-      // truncate the RDD lineage too: persist alone keeps the parent-RDD
-      // object graph alive, which deepens every iteration until the
-      // scheduler or task deserializer recurses into a StackOverflowError
-      rdd.localCheckpoint()
-      if (eagerCount) rdd.count()
-      val logical = LogicalRDD.fromDataset(rdd, cdf, isStreaming = false)
-      Truncated(CDataset.ofRows(spark, logical), rdd)
-    }
+  /** Cache `rows` as GraftRowChunk blocks with truncated lineage.
+    * localCheckpoint matters as much as persist: persist alone keeps the
+    * parent-RDD object graph alive, which deepens every iteration until the
+    * scheduler or task deserializer recurses into a StackOverflowError.
+    */
+  private[sql] def cacheChunks(rows: RDD[InternalRow], types: Array[DataType],
+      level: StorageLevel, eager: Boolean): RDD[GraftRowChunk] = {
+    // row buffers may be reused by the producing operator — irrelevant
+    // here, the bytes are copied into the chunk immediately
+    val chunks = rows.mapPartitions(packPartition(_, types),
+      preservesPartitioning = true)
+    chunks.persist(level)
+    chunks.localCheckpoint()
+    if (eager) chunks.count()
+    chunks
   }
 
+  private[sql] def replay(chunks: RDD[GraftRowChunk], nFields: Int): RDD[InternalRow] =
+    chunks.mapPartitions(unpackChunks(_, nFields), preservesPartitioning = true)
+
+  private def truncateImpl(cdf: CDataFrame, level: StorageLevel,
+      eagerCount: Boolean): Truncated = {
+    val chunks = cacheChunks(cdf.queryExecution.toRdd,
+      cdf.schema.fields.map(_.dataType), level, eagerCount)
+    val logical = LogicalRDD.fromDataset(replay(chunks, cdf.schema.length), cdf,
+      isStreaming = false)
+    Truncated(CDataset.ofRows(cdf.sparkSession, logical), chunks)
+  }
+
+  /** Persist the computed rows of a DataFrame and rebuild it as a flat
+    * LogicalRDD scan — what `Dataset.localCheckpoint` does, but returning
+    * the underlying RDD handle so the caller can unpersist it
+    * deterministically instead of waiting for the ContextCleaner. Output
+    * partitioning/ordering are preserved (LogicalRDD.fromDataset), so
+    * co-partitioned joins stay shuffle-free.
+    */
   def truncate(df: DataFrame,
       level: StorageLevel = StorageLevel.MEMORY_AND_DISK): Truncated =
     truncateImpl(df.asInstanceOf[CDataFrame], level, eagerCount = false)
@@ -285,5 +286,177 @@ object GraftSqlInternals {
     val qe = cdf.queryExecution
     val t = truncateImpl(cdf, level, eagerCount = true)
     (t, qe.observedMetrics)
+  }
+
+  // ------------------------------------------------- plan once, execute many
+
+  private val stepPlans = new java.util.concurrent.atomic.AtomicLong
+
+  /** Solver steps planned by `iterate` in this JVM, one per solve. */
+  def stepPlanCount: Long = stepPlans.get
+
+  /** Start an iterative solve whose step is planned ONCE.
+    *
+    * The first iterate is `initial`, cached as chunks (as `truncate` does);
+    * its scan is the placeholder leaf. `step` builds the next iterate from a
+    * frame, and is called exactly once, over the placeholder. The physical
+    * plan of that frame is kept for the whole solve, and each
+    * `PlannedIteration.step()` executes a fresh copy of it over the current
+    * iterate's chunks: the per-iteration driver cost drops to code
+    * generation and RDD building — no DataFrame build, analysis,
+    * optimization or physical planning. Per-iteration scalars enter the
+    * step as `slotLit` columns and are set by the driver before each step.
+    *
+    * The kept plan relies on two properties of the placeholder holding for
+    * every iterate, both checked here:
+    *  - schema: the step's output has the iterate's column names and types,
+    *    nullable only where the iterate is;
+    *  - layout: with `keys`, every iterate is hash-partitioned on them at
+    *    the session's shuffle width — `initial` is repartitioned if it is
+    *    not, and the step's output must be — so joins on the keys need no
+    *    exchange on the iterate side. Without `keys` the placeholder claims
+    *    no partitioning (and no ordering in either case).
+    *
+    * The first iterate and the step are planned without adaptive execution,
+    * whatever the session's setting: AQE re-plans from the logical plan at
+    * run time, which would read the placeholder's RDD again, and a fixed
+    * plan (with a layout known before it runs) is the point.
+    */
+  def iterate(initial: DataFrame, keys: Seq[String] = Nil)(
+      step: DataFrame => DataFrame): PlannedIteration = {
+    val session = initial.asInstanceOf[CDataFrame].sparkSession
+    // optimized logical plan + physical plan, with the preparation rules of
+    // a non-adaptive query (the subquery preparations, which omit only
+    // exchange reuse, then exchange reuse)
+    def planned(df: DataFrame): (LogicalPlan, SparkPlan) = session.withActive {
+      val qe = session.sessionState.executePlan(
+        df.asInstanceOf[CDataFrame].queryExecution.analyzed)
+      (qe.optimizedPlan, ReuseExchangeAndSubquery(
+        QueryExecution.prepareExecutedPlan(session, qe.sparkPlan)))
+    }
+    val width = session.sessionState.conf.numShufflePartitions
+    def keyAttrs(output: Seq[Attribute]): Seq[Attribute] = keys.map(k =>
+      output.find(_.name == k).getOrElse(
+        throw new IllegalArgumentException(s"iterate has no column $k")))
+
+    val first0 = planned(initial)
+    val (logical0, physical0) =
+      if (keys.isEmpty || hashedOn(first0._2.outputPartitioning,
+          keyAttrs(first0._1.output), width)) first0
+      else planned(initial.repartition(width, keys.map(functions.col): _*))
+    val output = logical0.output
+    val partitioning =
+      if (keys.isEmpty) UnknownPartitioning(0)
+      else HashPartitioning(keyAttrs(output), width)
+    // size only: column statistics and constraints describe `initial`, not
+    // the iterates that follow it
+    val stats = Statistics(logical0.stats.sizeInBytes, logical0.stats.rowCount)
+    val chunks = cacheChunks(
+      new SQLExecutionRDD(physical0.execute(), session.sessionState.conf),
+      output.map(_.dataType).toArray, StorageLevel.MEMORY_AND_DISK, eager = false)
+    val rows = replay(chunks, output.length)
+    val leaf = LogicalRDD(output, rows, partitioning, Nil)(session, Some(stats))
+
+    val stepDf = step(CDataset.ofRows(session, leaf))
+    val in = leaf.schema
+    val out = stepDf.schema
+    require(out.length == in.length && out.zip(in).forall { case (o, i) =>
+      o.name == i.name && o.dataType == i.dataType && (i.nullable || !o.nullable)
+    }, s"step output ${out.simpleString} does not fit the iterate ${in.simpleString}")
+    val plan = planned(stepDf)._2
+    stepPlans.incrementAndGet()
+    require(keys.isEmpty || hashedOn(plan.outputPartitioning,
+      keys.map(k => plan.output(output.indexWhere(_.name == k))), width),
+      s"step output is not hash-partitioned on ${keys.mkString(", ")} at " +
+        s"width $width: ${plan.outputPartitioning}")
+    new PlannedIteration(session, output, partitioning, stats, rows, plan, chunks)
+  }
+
+  private def hashedOn(p: Partitioning, keys: Seq[Expression], width: Int): Boolean =
+    p match {
+      case HashPartitioning(es, n) => n == width && es.length == keys.length &&
+        es.zip(keys).forall { case (e, k) => e.semanticEquals(k) }
+      case PartitioningCollection(ps) => ps.exists(hashedOn(_, keys, width))
+      case _ => false
+    }
+
+  /** A copy of `plan` that reads `rows` wherever it read the placeholder.
+    * Every non-leaf node is a new instance: an exchange memoizes its shuffle
+    * dependency and an observe its accumulator, so re-running the kept
+    * instances would return the first run's shuffle output and metrics.
+    * Leaves other than the placeholder (cached-relation scans) are shared.
+    * A reused exchange points at the copy of the exchange it reuses.
+    */
+  private[sql] def refresh(plan: SparkPlan, placeholder: RDD[InternalRow],
+      rows: RDD[InternalRow]): SparkPlan = {
+    val copies = new java.util.IdentityHashMap[SparkPlan, SparkPlan]()
+    def copyOf(p: SparkPlan): SparkPlan = {
+      val done = copies.get(p)
+      if (done != null) return done
+      val fresh = p match {
+        case s: RDDScanExec if s.rdd eq placeholder => s.copy(rdd = rows)
+        case r: ReusedExchangeExec =>
+          r.copy(child = copyOf(r.child).asInstanceOf[Exchange])
+        case _ if p.children.isEmpty => p
+        case _ =>
+          val kids = p.children.map(copyOf)
+          def arg(a: Any): Any = a match {
+            case c: SparkPlan =>
+              val i = p.children.indexWhere(_ eq c)
+              if (i >= 0) kids(i) else c
+            case cs: Seq[_] if cs.exists(_.isInstanceOf[SparkPlan]) => cs.map(arg)
+            case other => other
+          }
+          p.makeCopy(p.productIterator.map(arg(_).asInstanceOf[AnyRef]).toArray)
+      }
+      copies.put(p, fresh)
+      fresh
+    }
+    copyOf(plan)
+  }
+
+}
+
+/** The iterate of a solve whose step was planned once
+  * (`GraftSqlInternals.iterate`). `step()` runs one iteration as ONE job —
+  * the next iterate materialized as cached chunks, with the step's observed
+  * metrics — and retires the previous iterate's blocks. `close()` drops the
+  * kept plan and the placeholder; the current iterate stays cached, since
+  * `frame` is what the solve returns.
+  */
+final class PlannedIteration private[sql] (
+    session: CSparkSession,
+    output: Seq[Attribute],
+    partitioning: Partitioning,
+    stats: Statistics,
+    private var placeholder: RDD[InternalRow],
+    private var plan: SparkPlan,
+    private var chunks: RDD[GraftRowChunk]) {
+
+  private val types = output.map(_.dataType).toArray
+
+  /** The current iterate: a scan of its cached chunks. */
+  def frame: DataFrame = CDataset.ofRows(session,
+    LogicalRDD(output, GraftSqlInternals.replay(chunks, types.length),
+      partitioning, Nil)(session, Some(stats)).newInstance())
+
+  /** Run the kept step over the current iterate; returns its observed
+    * metrics by `observe` name.
+    */
+  def step(): Map[String, Row] = {
+    require(plan != null, "iteration is closed")
+    val exec = GraftSqlInternals.refresh(plan, placeholder,
+      GraftSqlInternals.replay(chunks, types.length))
+    val next = session.withActive(GraftSqlInternals.cacheChunks(
+      new SQLExecutionRDD(exec.execute(), session.sessionState.conf),
+      types, StorageLevel.MEMORY_AND_DISK, eager = true))
+    chunks.unpersist(false)
+    chunks = next
+    exec.collect { case c: CollectMetricsExec => c.name -> c.collectedMetrics }.toMap
+  }
+
+  def close(): Unit = {
+    plan = null
+    placeholder = null
   }
 }

@@ -107,6 +107,12 @@ class SolversSpec extends AnyFunSuite with SparkTestBase {
       s"personalized vertex $i: got ${gp(i.toLong)}, expected ${expP(i)}"))
   }
 
+  test("inout on an empty vertex domain is a require error, not an NPE") {
+    val g = GraphFixtures.linkGraph(spark, 0, Nil)
+    val e = intercept[IllegalArgumentException](InOutPageRank.run(g))
+    assert(e.getMessage.contains("empty vertex domain"))
+  }
+
   test("solvers do not leak cached blocks across iterations/restarts") {
     val (n, edges) = GraphFixtures.g2
     val g = GraphFixtures.linkGraph(spark, n, edges)
