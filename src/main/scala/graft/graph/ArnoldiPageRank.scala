@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlInternals}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSqlInternals}
 import org.apache.spark.sql.functions._
 
 import graft.model._
@@ -66,89 +66,68 @@ object ArnoldiPageRank {
       checkpointDir: Option[String] = None,
       checkpointEvery: Int = 5)
 
+  /** w = M x for column `xc` of `frame` (PageRankMult,
+    * ppagerank.cc:692-718): w = αPᵀx + teleport·v, with the scalar
+    * teleport = α·dᵀx + (1−α)·eᵀx. Pure plan transformation (no action):
+    * adds column `w`. Shared with tools.PlanDump.
+    */
+  def mMult(prep: PageRank.Prepared, frame: DataFrame, xc: String, alpha: Double,
+      teleport: Column, vCol: Column): DataFrame = {
+    val yraw = PageRank.spmv(prep,
+      frame.select(col("id"), col(xc).as("rank"))).withColumnRenamed("y", "yraw")
+    frame.join(yraw.hint("shuffle_hash"), Seq("id"), "left")
+      .withColumn("w", lit(alpha) * coalesce(col("yraw"), lit(0.0)) + teleport * vCol)
+      .drop("yraw")
+  }
+
   def run(g: LinkGraph, cfg: ArnoldiConfig = ArnoldiConfig(),
       runId: String = "arnoldi",
       personalization: Option[DataFrame] = None,
       resume: Boolean = false): (Dataset[VertexRank], PageRankStats) = {
     val spark = g.edges.sparkSession
     import spark.implicits._
-    val n = g.numVertices
     val alpha = cfg.alpha
     val k = cfg.k
     // personalization v (ppagerank.cc:91-104) rides as a column; the full
     // operator becomes M x = αPᵀx + (α·dᵀx + (1−α)·eᵀx)·v
     val hasV = personalization.isDefined
-    val vCol = if (hasV) col("v") else lit(1.0 / n)
-    graft.util.ShuffleWidth.withWidth(spark, g.edges.rdd.getNumPartitions) {
+    val vCol = if (hasV) col("v") else lit(1.0 / g.numVertices)
+    RankSolve.run(g, runId, cfg.maxRestarts, cfg.tol, cfg.checkpointDir,
+        cfg.checkpointEvery, resume) { resumed =>
     val prep = PageRank.prepare(g,
       PageRankConfig(saltThreshold = cfg.saltThreshold, saltBuckets = cfg.saltBuckets))
 
-    val srcs = g.edges.select(col("src").as("id")).distinct().withColumn("nd", lit(1))
-    val base0 = g.vertices.join(srcs, Seq("id"), "left")
-      .select(col("id"), when(col("nd").isNull, 1.0).otherwise(0.0).as("dang"))
     val base = personalization match {
-      case Some(p) => base0
+      case Some(p) => PageRank.dangling(g)
         .join(p.select(col("id"), col("v").cast("double")), Seq("id"), "left")
         .select(col("id"), col("dang"), coalesce(col("v"), lit(0.0)).as("v"))
-      case None => base0
+      case None => PageRank.dangling(g)
     }
     val carry = Seq(col("id"), col("dang")) ++ (if (hasV) Seq(col("v")) else Nil)
 
-    /** w = M x for column `xc` of `frame`, given the scalars eᵀx, dᵀx.
-      * Pure plan transformation (no action): adds column `w`.
-      */
-    def mMult(frame: DataFrame, xc: String, ex: Double, dx: Double): DataFrame = {
-      val yraw = PageRank.spmv(prep,
-        frame.select(col("id"), col(xc).as("rank"))).withColumnRenamed("y", "yraw")
-      // teleport (and every other measured scalar below) travels through
-      // the codegen REFERENCES array (stableLit), never an inline literal:
-      // parallel-sum reduction order perturbs these doubles in the last ulp
-      // between runs, so a `lit` would change the generated source every
-      // run and force a full Janino recompile of every Arnoldi-step stage
-      // (~95 classes per solve — measured as the dominant, environment-
-      // sensitive cost of this solver before the fix)
-      val teleport = alpha * dx + (1 - alpha) * ex
-      frame.join(yraw.hint("shuffle_hash"), Seq("id"), "left")
-        .withColumn("w",
-          lit(alpha) * coalesce(col("yraw"), lit(0.0)) +
-            GraftSqlInternals.stableLit(teleport) * vCol)
-        .drop("yraw")
-    }
-
     // Resume (north rule): x is the whole inter-restart state; scalars are
     // re-measured below, identically for a cold and a resumed start.
-    var startRestart = 0
-    val resumed: Option[DataFrame] = if (resume) {
-      cfg.checkpointDir.flatMap { dir =>
-        graft.ingest.TableIO.latestValidSnapshot(spark, s"$dir/$runId", "restart_")
-          .map { case (kk, snap) => startRestart = kk; snap }
-      }
-    } else None
-
     // x₀ = v (ppagerank.cc:544-550)
-    val tr0 = GraftSqlInternals.truncate(resumed.getOrElse(
-      base.withColumn("x", if (hasV) col("v") else lit(1.0 / n))))
+    val tr0 = GraftSqlInternals.truncate(resumed.getOrElse(base.withColumn("x", vCol)))
     var x = tr0.df
-    var xHandle: Option[org.apache.spark.sql.GraftSqlInternals.Truncated] = Some(tr0)
+    var xHandle = tr0
     var (ex, dx, xNorm2, xNorm1) = {
       val r = x.agg(sum(col("x")), sum(col("dang") * col("x")),
         sum(col("x") * col("x")), sum(abs(col("x")))).head()
       (r.getDouble(0), r.getDouble(1), math.sqrt(r.getDouble(2)), r.getDouble(3))
     }
 
-    val trace = scala.collection.mutable.ArrayBuffer[IterMetric]()
-    var flushedUpTo = 0
-    var restart = startRestart
-    var delta = Double.MaxValue
-    var reason: ConvergedReason = ConvergedReason.MaxIterations
     // fast single-reduction CGS for relaxed tolerances; escalated to CGS2
     // when the restart residual stagnates at the fast path's cancellation
     // floor (see ArnoldiConfig.reorthog)
     var cgs2 = cfg.reorthog.getOrElse(cfg.tol < 1e-9)
     var stagnant = 0
+    var prevDelta = Double.MaxValue
 
-    while (restart < cfg.maxRestarts && delta >= cfg.tol) {
-      val t0 = System.nanoTime()
+    /** One restart: a k-step Arnoldi factorization from x, then the
+      * restarted x; returns the restart residual.
+      */
+    def restart(): Double = {
       val h = Array.ofDim[Double](k + 1, k) // (k+1)×k, ppagerank.cc:527
       // v0 = x/‖x‖₂ (ppagerank.cc:556-559)
       var frame = x.withColumn("v0",
@@ -170,8 +149,16 @@ object ArnoldiPageRank {
         prevHandle = Some(t)
       }
       while (j < k && !breakdown) {
-        // w = M v_j; H(i,j) = vᵢᵀw for i ≤ j (VecMTDot, ppagerank.cc:573)
-        frame = mMult(frame, s"v$j", evs(j), dvs(j))
+        // w = M v_j; H(i,j) = vᵢᵀw for i ≤ j (VecMTDot, ppagerank.cc:573).
+        // The teleport (and every other measured scalar below) travels
+        // through the codegen REFERENCES array (stableLit), never an inline
+        // literal: parallel-sum reduction order perturbs these doubles in the
+        // last ulp between runs, so a `lit` would change the generated source
+        // every run and force a full Janino recompile of every Arnoldi-step
+        // stage (~95 classes per solve — measured as the dominant,
+        // environment-sensitive cost of this solver before the fix)
+        frame = mMult(prep, frame, s"v$j", alpha,
+          GraftSqlInternals.stableLit(alpha * dvs(j) + (1 - alpha) * evs(j)), vCol)
         if (!cgs2) {
           // ONE observe job per step: dots, ‖w‖², eᵀw, dᵀw all ride the
           // tasks that materialize w; β and the eᵀ/dᵀ sums of the new basis
@@ -293,49 +280,41 @@ object ArnoldiPageRank {
       dx = row.getDouble(2)
       xNorm2 = math.sqrt(row.getDouble(3))
       ex = row.getDouble(4) // measured eᵀx (an analytic recursion drifts)
-      delta = num / xNorm1
+      val delta = num / xNorm1
       x = tr2.df
       // the basis-vector frame and the previous restart's x are dead now
       prevHandle.foreach(_.handle.unpersist(false))
-      xHandle.foreach(_.handle.unpersist(false))
-      xHandle = Some(tr2)
+      xHandle.handle.unpersist(false)
+      xHandle = tr2
 
-      restart += 1
       // stagnation → escalate to CGS2 (auto mode only): two consecutive
       // restarts without ≥10% residual improvement means the fast path has
       // hit its analytic-β cancellation floor above tol — without this the
       // solver would spin to maxRestarts at a flat residual
       if (!cgs2 && cfg.reorthog.isEmpty && delta >= cfg.tol) {
-        val prev = trace.lastOption.map(_.residual).getOrElse(Double.MaxValue)
-        if (delta > 0.9 * prev) stagnant += 1 else stagnant = 0
+        if (delta > 0.9 * prevDelta) stagnant += 1 else stagnant = 0
         if (stagnant >= 2) cgs2 = true
       }
-      trace += IterMetric(runId, restart, delta, xNorm1, (System.nanoTime() - t0) / 1000000L)
-      val converged = delta < cfg.tol
-      if (converged || (cfg.checkpointDir.isDefined && restart % cfg.checkpointEvery == 0)) {
-        cfg.checkpointDir.foreach { dir =>
-          x = graft.ingest.TableIO.commitSnapshotWithLineage(
-            x, s"$dir/$runId", runId, "restart_", restart)
-          val fresh = trace.toSeq.drop(flushedUpTo)
-          if (fresh.nonEmpty)
-            graft.ingest.TableIO.appendRows(fresh.toDF(), s"$dir/$runId/_metrics")
-          flushedUpTo = trace.size
-        }
-      }
-      if (converged) reason = ConvergedReason.ResidualBelowTol
+      prevDelta = delta
+      delta
     }
 
-    prep.close()
-    // sign-fix + L1-normalize (deviation from reference; see scaladoc).
-    // eᵀx of the final iterate is `ex` — measured by the observe of the job
-    // that materialized this x (restart loop) or by the init aggregate (no
-    // restarts ran); a dedicated agg job here re-measured the same sum.
-    val signedSum = ex
-    val sign = if (signedSum < 0) -1.0 else 1.0
-    val ranks = x.select(col("id"),
-      (col("x") * lit(sign) /
-        GraftSqlInternals.stableLit(math.abs(signedSum))).as("rank")).as[VertexRank]
-    (ranks, PageRankStats(restart, delta, reason, trace.toSeq))
-    } // withWidth
+    new RankSolve.Iteration[Dataset[VertexRank]] {
+      def step(): (Double, Double) = (restart(), xNorm1)
+      def snapshot: DataFrame = x
+      def result(): Dataset[VertexRank] = {
+        prep.close()
+        // sign-fix + L1-normalize (deviation from reference; see scaladoc).
+        // eᵀx of the final iterate is `ex` — measured by the observe of the
+        // job that materialized this x (restart loop) or by the init
+        // aggregate (no restarts ran); a dedicated agg job here re-measured
+        // the same sum.
+        val sign = if (ex < 0) -1.0 else 1.0
+        x.select(col("id"),
+          (col("x") * lit(sign) /
+            GraftSqlInternals.stableLit(math.abs(ex))).as("rank")).as[VertexRank]
+      }
+    }
+    } // RankSolve.run
   }
 }

@@ -100,16 +100,14 @@ object InOutPageRank {
       resume: Boolean = false): (Dataset[VertexRank], PageRankStats) = {
     val spark = g.edges.sparkSession
     import spark.implicits._
-    val n = g.numVertices
-    require(n > 0, "empty vertex domain")
     val alpha = cfg.alpha
     val beta = cfg.beta.getOrElse(alpha / 2)
-    val vUniform = 1.0 / n
     // personalization v (ppagerank.cc:91-104): carried as a column; the
     // analytic eᵀ bookkeeping generalizes with sv = eᵀv (1 for uniform)
     val hasV = personalization.isDefined
-    val vCol = if (hasV) col("v") else lit(vUniform)
-    graft.util.ShuffleWidth.withWidth(spark, g.edges.rdd.getNumPartitions) {
+    val vCol = if (hasV) col("v") else lit(1.0 / g.numVertices)
+    RankSolve.run(g, runId, cfg.maxIter, cfg.tol, cfg.checkpointDir,
+        cfg.checkpointEvery, resume) { resumed =>
     val prep = PageRank.prepare(g,
       PageRankConfig(saltThreshold = cfg.saltThreshold, saltBuckets = cfg.saltBuckets))
 
@@ -119,54 +117,31 @@ object InOutPageRank {
     // The aggregates ride as CollectMetrics accumulators on the
     // materializing tasks (same single-action kernel as PageRank.run).
     var prevHandle: Option[GraftSqlInternals.Truncated] = None
+    def retire(t: GraftSqlInternals.Truncated): DataFrame = {
+      prevHandle.foreach(_.handle.unpersist(false))
+      prevHandle = Some(t)
+      t.df
+    }
     def truncateAndAgg(df: DataFrame, aggCols: Seq[Column]): (DataFrame, Row) = {
       val (t, observed) = GraftSqlInternals.truncateObserved(
         df.observe("agg", aggCols.head, aggCols.tail: _*))
-      prevHandle.foreach(_.handle.unpersist(false))
-      prevHandle = Some(t)
-      (t.df, observed("agg"))
+      (retire(t), observed("agg"))
     }
-
-    /** Static dangling indicator (dang=1 iff no out-edges) as a lazy column —
-      * folded into whatever job materializes the frame next. Carried through
-      * the whole solve: the inner sweep's analytic dᵀx recurrence and the
-      * power kernel's observe both read it.
-      */
-    def attachDang(fr: DataFrame): DataFrame =
-      if (fr.columns.contains("dang")) fr
-      else {
-        val srcs = g.edges.select(col("src").as("id")).distinct()
-          .withColumn("nd", lit(1))
-        fr.join(srcs, Seq("id"), "left")
-          .withColumn("dang", when(col("nd").isNull, 1.0).otherwise(0.0))
-          .drop("nd")
-      }
 
     // Resume (north rule): the snapshot carries the iterate frame plus `im`
     // (the inner/power mode flag — the only non-recomputable scalar state;
-    // eᵀx and eᵀv are re-measured from the frame below).
-    var innerMode = true
-    var startIter = 0
-    val resumed: Option[DataFrame] = if (resume) {
-      cfg.checkpointDir.flatMap { dir =>
-        graft.ingest.TableIO.latestValidSnapshot(spark, s"$dir/$runId", "iter_")
-          .map { case (k, snap) =>
-            startIter = k
-            innerMode = snap.select(col("im")).head().getBoolean(0)
-            snap.drop("im")
-          }
-      }
-    } else None
-
-    // x₀ = v (ppagerank.cc:366-371); y₀ = Bx₀
-    var frame = resumed.getOrElse(personalization match {
-      case Some(p) => g.vertices
+    // eᵀx and eᵀv are re-measured from the frame below). Cold start:
+    // x₀ = v (ppagerank.cc:366-371) beside the static dangling indicator
+    // (dang=1 iff no out-edges), which the inner sweep's analytic dᵀx
+    // recurrence and the power kernel's observe both read.
+    var innerMode = resumed.forall(_.select(col("im")).head().getBoolean(0))
+    var frame = resumed.map(_.drop("im")).getOrElse(personalization match {
+      case Some(p) => PageRank.dangling(g)
         .join(p.select(col("id"), col("v").cast("double")), Seq("id"), "left")
-        .select(col("id"), coalesce(col("v"), lit(0.0)).as("v"))
+        .select(col("id"), col("dang"), coalesce(col("v"), lit(0.0)).as("v"))
         .withColumn("x", col("v"))
-      case None => g.vertices.withColumn("x", lit(vUniform))
+      case None => PageRank.dangling(g).withColumn("x", vCol)
     })
-    frame = attachDang(frame) // no-op when the (snapshot) frame carries it
     val sv = if (hasV) frame.agg(sum(col("v"))).head().getDouble(0) else 1.0
     var sx = if (resumed.isDefined) frame.agg(sum(col("x"))).head().getDouble(0) else sv
     // dᵀv (static) and dᵀy of the frame's y column — the seeds of the inner
@@ -197,34 +172,23 @@ object InOutPageRank {
       dv = Option(row.get(1)).map(_.asInstanceOf[Double]).getOrElse(0.0)
     }
 
-    val trace = scala.collection.mutable.ArrayBuffer[IterMetric]()
-    var flushedUpTo = 0
-    var delta = Double.MaxValue
-    var iter = startIter
-    var reason: ConvergedReason = ConvergedReason.MaxIterations
-
     // Power-mode scalar state: dᵀx and eᵀx of the CURRENT frame, measured by
     // the job that materialized it (the single-action kernel of
-    // PageRank.run). `powerReady` marks that the frame carries the static
-    // dangling indicator and the scalars are current; the transition job
-    // below establishes both in one materialization.
+    // PageRank.run). `powerReady` marks that the scalars are current; the
+    // transition job below establishes them in one materialization.
     var dtxP = 0.0
     var sxP = 0.0
     var powerReady = false
 
-    /** Transition into the power kernel: attach the static dangling
-      * indicator (dang=1 iff no out-edges) unless the frame already carries
-      * it (a resumed power-mode snapshot), and measure dᵀx, eᵀx — ONE job.
-      * Afterwards every power step is a single materializing job whose
-      * observe feeds the next step's ω, exactly the PageRank.run kernel
-      * (ω = 1 − α(eᵀx − dᵀx) = 1 − ‖αPᵀx‖₁, ppagerank.cc:307-315 — the
-      * measured-sum form the old two-job step computed with a dedicated
-      * aggregation pass per step).
+    /** Transition into the power kernel: drop the sweep columns and measure
+      * dᵀx, eᵀx — ONE job. Afterwards every power step is a single
+      * materializing job whose observe feeds the next step's ω, exactly the
+      * PageRank.run kernel (ω = 1 − α(eᵀx − dᵀx) = 1 − ‖αPᵀx‖₁,
+      * ppagerank.cc:307-315 — the measured-sum form the old two-job step
+      * computed with a dedicated aggregation pass per step).
       */
     def enterPower(fr: DataFrame): DataFrame = {
-      val attached = attachDang(fr)
-      val withDang = attached.select(carried(attached) :+ col("x"): _*)
-      val (t, row) = truncateAndAgg(withDang,
+      val (t, row) = truncateAndAgg(fr.select(carried(fr) :+ col("x"): _*),
         Seq(sum(col("dang") * col("x")), sum(col("x"))))
       dtxP = row.getDouble(0)
       sxP = row.getDouble(1)
@@ -232,110 +196,97 @@ object InOutPageRank {
       t
     }
 
-    while (iter < cfg.maxIter && delta >= cfg.tol) {
-      val t0 = System.nanoTime()
-      if (!innerMode) {
-        // plain power step (ppagerank.cc:385-409): y = αPᵀx; ω = 1−‖y‖₁;
-        // y += ωv; δ = ‖y − x‖₁; x ← y. ONE job: the residual, dᵀx and eᵀx
-        // of the new iterate ride the materializing tasks as observe
-        // accumulators; ω comes from the PREVIOUS step's scalars via
-        // ω = 1 − α(eᵀx − dᵀx) (identical to 1 − ‖αPᵀx‖₁ in exact
-        // arithmetic — P is row-stochastic, so eᵀPᵀx = eᵀx − dᵀx).
-        if (!powerReady) frame = enterPower(frame)
-        val omega = 1.0 - alpha * (sxP - dtxP)
-        val next = powerStep(prep, frame, alpha,
-          GraftSqlInternals.stableLit(omega), vCol)
-        val (t, observed) = GraftSqlInternals.truncateObserved(next)
-        prevHandle.foreach(_.handle.unpersist(false))
-        prevHandle = Some(t)
-        val row = observed("pw")
-        delta = row.getDouble(0)
-        dtxP = row.getDouble(1)
-        sxP = row.getDouble(2)
-        frame = t.df
-        sx = sxP
-      } else {
-        // f = (α−β)y + (1−α)v (ppagerank.cc:412-421); f is FIXED across the
-        // sweep, so dᵀf is one scalar computed from the recurrence seeds
-        var st = frame.withColumn("f",
-          lit(alpha - beta) * col("y") + lit(1 - alpha) * vCol)
-        // sums: eᵀy = eᵀx (B column-stochastic); eᵀf
-        var sy = sx
-        var sf = (alpha - beta) * sy + (1 - alpha) * sv
-        val dfD = (alpha - beta) * dy + (1 - alpha) * dv
-        var innerIter = 0
-        var innerDelta = Double.MaxValue
-        var exitedAtZero = false
-        var continue = true
-        var lastOdiff = Double.MaxValue
-        while (continue && innerIter < cfg.maxInnerIter) {
-          // x ← βy + f; y ← Bx; δ_in = ‖f + βy_new − x‖₁ (ppagerank.cc:423-435)
-          // in ONE materializing job: dᵀx = β·dᵀy + dᵀf is known BEFORE the
-          // job (d is static, f fixed across the sweep — same scalar as the
-          // old measured sx − eᵀPᵀx form in exact arithmetic), so
-          // y_new = Pᵀx + (dᵀx)v is an in-job column and the inner residual,
-          // the outer residual δ = ‖x − αy − (1−α)v‖₁ (ppagerank.cc:456-465)
-          // and the next step's dᵀ(Pᵀx) all ride the observe — the old shape
-          // paid a second aggregation job per sweep step for the residuals
-          val dtxK = beta * dy + dfD
-          val sxInner = beta * sy + sf
-          val next = innerStep(prep, st, alpha, beta,
-            GraftSqlInternals.stableLit(dtxK), vCol)
-          val (t, observed) = GraftSqlInternals.truncateObserved(next)
-          prevHandle.foreach(_.handle.unpersist(false))
-          prevHandle = Some(t)
-          val row = observed("in")
-          def obs(i: Int): Double =
-            Option(row.get(i)).map(_.asInstanceOf[Double]).getOrElse(0.0)
-          dy = obs(0) + dtxK * dv // dᵀy_new = dᵀ(Pᵀx) + (dᵀx)(dᵀv)
-          innerDelta = obs(1)
-          lastOdiff = obs(2)
-          st = t.df
-          sy = sxInner // eᵀ(Bx) = eᵀx
-          sx = sxInner
-          innerIter += 1
-          if (innerDelta < cfg.eta) {
-            if (innerIter == 1) { innerMode = false; exitedAtZero = true }
-            continue = false
-          }
-        }
-        delta = lastOdiff
-        if (exitedAtZero) {
-          // x ← αy + (1−α)v (ppagerank.cc:467-477) before switching to power
-          // (lazy projection over the cached sweep frame; the power
-          // transition job materializes it — dang rides along, so the
-          // transition needs no dangling join)
-          frame = st.select(carried(st) :+
-            (lit(alpha) * col("y") + lit(1 - alpha) * vCol).as("x"): _*)
-          sx = alpha * sy + (1 - alpha) * sv
-          powerReady = false
-        } else {
-          frame = st
-        }
-      }
-      iter += 1
-      trace += IterMetric(runId, iter, delta, sx, (System.nanoTime() - t0) / 1000000L)
-      val converged = delta < cfg.tol
-      if (converged || (cfg.checkpointDir.isDefined && iter % cfg.checkpointEvery == 0)) {
-        cfg.checkpointDir.foreach { dir =>
-          frame = graft.ingest.TableIO.commitSnapshotWithLineage(
-            frame.withColumn("im", lit(innerMode)),
-            s"$dir/$runId", runId, "iter_", iter).drop("im")
-          val fresh = trace.toSeq.drop(flushedUpTo)
-          if (fresh.nonEmpty)
-            graft.ingest.TableIO.appendRows(fresh.toDF(), s"$dir/$runId/_metrics")
-          flushedUpTo = trace.size
-        }
-      }
-      if (converged) reason = ConvergedReason.ResidualBelowTol
+    /** One power step (ppagerank.cc:385-409): y = αPᵀx; ω = 1−‖y‖₁; y += ωv;
+      * δ = ‖y − x‖₁; x ← y. ONE job: the residual, dᵀx and eᵀx of the new
+      * iterate ride the materializing tasks as observe accumulators; ω comes
+      * from the PREVIOUS step's scalars via ω = 1 − α(eᵀx − dᵀx) (identical
+      * to 1 − ‖αPᵀx‖₁ in exact arithmetic — P is row-stochastic, so
+      * eᵀPᵀx = eᵀx − dᵀx).
+      */
+    def powerIteration(): Double = {
+      if (!powerReady) frame = enterPower(frame)
+      val omega = 1.0 - alpha * (sxP - dtxP)
+      val (t, observed) = GraftSqlInternals.truncateObserved(powerStep(prep, frame, alpha,
+        GraftSqlInternals.stableLit(omega), vCol))
+      frame = retire(t)
+      val row = observed("pw")
+      dtxP = row.getDouble(1)
+      sxP = row.getDouble(2)
+      sx = sxP
+      row.getDouble(0)
     }
 
-    prep.close()
-    // In inner mode the current iterate satisfies x with y = Bx; the rank
-    // vector the solver returns is x (same convention as the reference,
-    // which leaves the iterate in p).
-    val ranks = frame.select(col("id"), col("x").as("rank")).as[VertexRank]
-    (ranks, PageRankStats(iter, delta, reason, trace.toSeq))
-    } // withWidth
+    /** One outer inner-outer iteration: an inner Richardson sweep to η
+      * (ppagerank.cc:412-465); a sweep that converges in one step switches
+      * the solve to power iterations. Returns the outer residual.
+      */
+    def innerIteration(): Double = {
+      // f = (α−β)y + (1−α)v (ppagerank.cc:412-421); f is FIXED across the
+      // sweep, so dᵀf is one scalar computed from the recurrence seeds
+      var st = frame.withColumn("f",
+        lit(alpha - beta) * col("y") + lit(1 - alpha) * vCol)
+      // sums: eᵀy = eᵀx (B column-stochastic); eᵀf
+      var sy = sx
+      val sf = (alpha - beta) * sy + (1 - alpha) * sv
+      val dfD = (alpha - beta) * dy + (1 - alpha) * dv
+      var innerIter = 0
+      var exitedAtZero = false
+      var continue = true
+      var lastOdiff = Double.MaxValue
+      while (continue && innerIter < cfg.maxInnerIter) {
+        // x ← βy + f; y ← Bx; δ_in = ‖f + βy_new − x‖₁ (ppagerank.cc:423-435)
+        // in ONE materializing job: dᵀx = β·dᵀy + dᵀf is known BEFORE the
+        // job (d is static, f fixed across the sweep — same scalar as the
+        // old measured sx − eᵀPᵀx form in exact arithmetic), so
+        // y_new = Pᵀx + (dᵀx)v is an in-job column and the inner residual,
+        // the outer residual δ = ‖x − αy − (1−α)v‖₁ (ppagerank.cc:456-465)
+        // and the next step's dᵀ(Pᵀx) all ride the observe — the old shape
+        // paid a second aggregation job per sweep step for the residuals
+        val dtxK = beta * dy + dfD
+        val sxInner = beta * sy + sf
+        val (t, observed) = GraftSqlInternals.truncateObserved(innerStep(prep, st,
+          alpha, beta, GraftSqlInternals.stableLit(dtxK), vCol))
+        st = retire(t)
+        val row = observed("in")
+        def obs(i: Int): Double =
+          Option(row.get(i)).map(_.asInstanceOf[Double]).getOrElse(0.0)
+        dy = obs(0) + dtxK * dv // dᵀy_new = dᵀ(Pᵀx) + (dᵀx)(dᵀv)
+        lastOdiff = obs(2)
+        sy = sxInner // eᵀ(Bx) = eᵀx
+        sx = sxInner
+        innerIter += 1
+        if (obs(1) < cfg.eta) {
+          if (innerIter == 1) { innerMode = false; exitedAtZero = true }
+          continue = false
+        }
+      }
+      if (exitedAtZero) {
+        // x ← αy + (1−α)v (ppagerank.cc:467-477) before switching to power
+        // (lazy projection over the cached sweep frame; the power
+        // transition job materializes it — dang rides along, so the
+        // transition needs no dangling join)
+        frame = st.select(carried(st) :+
+          (lit(alpha) * col("y") + lit(1 - alpha) * vCol).as("x"): _*)
+        sx = alpha * sy + (1 - alpha) * sv
+        powerReady = false
+      } else {
+        frame = st
+      }
+      lastOdiff
+    }
+
+    new RankSolve.Iteration[Dataset[VertexRank]] {
+      def step(): (Double, Double) =
+        (if (innerMode) innerIteration() else powerIteration(), sx)
+      def snapshot: DataFrame = frame.withColumn("im", lit(innerMode))
+      def result(): Dataset[VertexRank] = {
+        prep.close()
+        // In inner mode the current iterate satisfies x with y = Bx; the
+        // rank vector the solver returns is x (same convention as the
+        // reference, which leaves the iterate in p).
+        frame.select(col("id"), col("x").as("rank")).as[VertexRank]
+      }
+    }
+    } // RankSolve.run
   }
 }

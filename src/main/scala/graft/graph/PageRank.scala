@@ -1,10 +1,9 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSqlInternals, Row, ScalarSlot, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSqlInternals, ScalarSlot}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.ingest.TableIO
 import graft.model._
 
 /** Damped power-method PageRank, rebuilt Spark-first.
@@ -118,8 +117,18 @@ object PageRank {
       .agg(sum(col("weight") * col("rank")).as("y"))
   }
 
+  /** Static dangling indicator (id, dang): dang = 1 iff the vertex has no
+    * out-edges (C6 complement). Every rank solver carries it (or, in
+    * `run`'s uniform path, its sign) so dᵀx is a free side-aggregate.
+    */
+  def dangling(g: LinkGraph): DataFrame = {
+    val srcs = g.edges.select(col("src").as("id")).distinct().withColumn("nd", lit(1))
+    g.vertices.join(srcs, Seq("id"), "left")
+      .select(col("id"), when(col("nd").isNull, 1.0).otherwise(0.0).as("dang"))
+  }
+
   /** Run from scratch or resume from the latest committed checkpoint under
-    * cfg.checkpointDir (north-rule resumability).
+    * cfg.checkpointDir (north-rule resumability; the loop is RankSolve's).
     */
   def run(g: LinkGraph, cfg: PageRankConfig = PageRankConfig(),
       runId: String = "pr", resume: Boolean = false,
@@ -128,18 +137,9 @@ object PageRank {
     val spark = g.edges.sparkSession
     import spark.implicits._
     val n = g.numVertices
-    require(n > 0, "empty vertex domain")
-    // iteration shuffles sized to the graph's own layout width (no-op at
-    // full scale; see ShuffleWidth)
-    graft.util.ShuffleWidth.withWidth(spark, g.edges.rdd.getNumPartitions) {
+    RankSolve.run(g, runId, cfg.maxIter, cfg.tol, cfg.checkpointDir,
+        cfg.checkpointEvery, resume) { resumed =>
     val prep = prepare(g, cfg)
-
-    // static dangling indicator (C6 complement): dang=1 iff no out-edges —
-    // folded into the iterate frame once, so dᵀx is a free side-aggregate
-    val srcs = g.edges.select(col("src").as("id")).distinct()
-      .withColumn("nd", lit(1))
-    val base = g.vertices.join(srcs, Seq("id"), "left")
-      .select(col("id"), when(col("nd").isNull, 1.0).otherwise(0.0).as("dang"))
 
     // personalization v (default uniform 1/n); carried as a column when given
     val vDf = personalization.map(_.select(col("id"), col("v").cast("double")))
@@ -163,7 +163,8 @@ object PageRank {
     // eᵀx = 1 simplex exactly (αPᵀx sums to α(eᵀx − dᵀx) and
     // ω = 1 − α(eᵀx − dᵀx) restores the total); the power method then
     // contracts from wherever the warm vector sits.
-    def initialFrame(): DataFrame = {
+    val initial: DataFrame = {
+      val base = dangling(g)
       val withV = vDf match {
         case Some(v) => base.join(v, Seq("id"), "left")
           .select(col("id"), col("dang"), coalesce(col("v"), lit(0.0)).as("v"))
@@ -186,38 +187,13 @@ object PageRank {
         when(col("dang") === 1.0, -col("rank")).otherwise(col("rank")).as("rank"))
       else x0
     }
-
-    var startIter = 0
-    val start: DataFrame = (cfg.checkpointDir, resume) match {
-      case (Some(dir), true) =>
-        // north rule: a snapshot is only trusted after its per-partition
-        // lineage digest validates; corrupted/partial snapshots fall back
-        TableIO.latestValidSnapshot(spark, s"$dir/$runId", "iter_") match {
-          case Some((k, snap)) =>
-            startIter = k
-            // migration: a pre-packing snapshot carries an explicit dang
-            // column — fold it into the sign on the way in. A rank of
-            // exactly 0.0 cannot carry the sign bit (-0.0 reads back as
-            // non-dangling): uniform-teleport iterates are strictly
-            // positive, so a zero rank means the snapshot came from a
-            // personalized/sparse-teleport run — refuse loudly rather than
-            // silently dropping dangling bits
-            if (packed && snap.columns.contains("dang")) {
-              val minRank = Option(
-                snap.agg(min(col("rank"))).head().get(0))
-                .map(_.asInstanceOf[Double]).getOrElse(0.0)
-              require(minRank > 0.0,
-                s"checkpoint under ${cfg.checkpointDir.get}/$runId carries " +
-                  s"non-positive ranks (min=$minRank): it was written by a " +
-                  "personalized or sparse-teleport run and cannot be folded " +
-                  "into the sign-packed uniform representation — resume it " +
-                  "with the same personalization, or restart")
-              snap.select(col("id"),
-                when(col("dang") === 1.0, -col("rank")).otherwise(col("rank")).as("rank"))
-            } else snap
-          case None => initialFrame()
-        }
-      case _ => initialFrame()
+    // a snapshot resumes only into the representation that wrote it
+    val start = resumed.fold(initial) { snap =>
+      require(snap.columns.toSeq == initial.columns.toSeq,
+        s"checkpoint $runId carries columns ${snap.columns.mkString(",")} but this " +
+          s"run iterates ${initial.columns.mkString(",")}: resume with the same " +
+          "personalization, or restart")
+      snap
     }
 
     // dangling indicator + magnitude of the CURRENT iterate row, under
@@ -264,46 +240,24 @@ object PageRank {
     var dtx = r0.getDouble(0)
     var sx = r0.getDouble(1)
 
-    val trace = scala.collection.mutable.ArrayBuffer[IterMetric]()
-    var flushedUpTo = 0
-    var iter = startIter
-    var delta = Double.MaxValue
-    var reason: ConvergedReason = ConvergedReason.MaxIterations
-
-    while (iter < cfg.maxIter && delta >= cfg.tol) {
-      val t0 = System.nanoTime()
-      omega.value = 1.0 - cfg.alpha * (sx - dtx)
-      // ONE job: the next iterate materialized and lineage-truncated, the
-      // previous iterate's blocks retired
-      val row = loop.step()("it")
-      delta = row.getDouble(0)
-      dtx = row.getDouble(1)
-      sx = row.getDouble(2)
-      val rankSum = sx
-      iter += 1
-      trace += IterMetric(runId, iter, delta, rankSum, (System.nanoTime() - t0) / 1000000L)
-
-      val converged = delta < cfg.tol
-      if (converged || (cfg.checkpointDir.isDefined && iter % cfg.checkpointEvery == 0)) {
-        cfg.checkpointDir.foreach { dir =>
-          // snapshot + per-partition lineage sidecar in one commit protocol;
-          // the snapshot is the resume source, the iterate stays cached
-          TableIO.commitSnapshotWithLineage(
-            loop.frame, s"$dir/$runId", runId, "iter_", iter)
-          // K1 convergence-trace sink: append only not-yet-flushed rows
-          val fresh = trace.toSeq.drop(flushedUpTo)
-          if (fresh.nonEmpty) TableIO.appendRows(fresh.toDF(), s"$dir/$runId/_metrics")
-          flushedUpTo = trace.size
-        }
+    new RankSolve.Iteration[Dataset[VertexRank]] {
+      def step(): (Double, Double) = {
+        omega.value = 1.0 - cfg.alpha * (sx - dtx)
+        // ONE job: the next iterate materialized and lineage-truncated, the
+        // previous iterate's blocks retired
+        val row = loop.step()("it")
+        dtx = row.getDouble(1)
+        sx = row.getDouble(2)
+        (row.getDouble(0), sx)
       }
-      if (converged) reason = ConvergedReason.ResidualBelowTol
+      def snapshot: DataFrame = loop.frame
+      def result(): Dataset[VertexRank] = {
+        loop.close()
+        prep.close() // the iterate is lineage-truncated — independent of prep's caches
+        loop.frame.select(col("id"), magOf(col("rank")).as("rank")).as[VertexRank]
+      }
     }
-    loop.close()
-    prep.close() // the iterate is lineage-truncated — independent of prep's caches
-
-    (loop.frame.select(col("id"), magOf(col("rank")).as("rank")).as[VertexRank],
-      PageRankStats(iter, delta, reason, trace.toSeq))
-    } // withWidth
+    } // RankSolve.run
   }
 
   /** Batched multi-seed personalized PageRank: k PPR vectors (teleport
@@ -323,18 +277,13 @@ object PageRank {
   def runMultiSeed(g: LinkGraph, seeds: Seq[Long],
       cfg: PageRankConfig = PageRankConfig(),
       runId: String = "ppr", resume: Boolean = false): (DataFrame, PageRankStats) = {
-    val spark = g.edges.sparkSession
-    import spark.implicits._
     val k = seeds.size
     require(k >= 1 && k <= 64, s"1..64 seeds supported, got $k")
     require(seeds.distinct.size == k, "duplicate seeds")
-    graft.util.ShuffleWidth.withWidth(spark, g.edges.rdd.getNumPartitions) {
+    RankSolve.run(g, runId, cfg.maxIter, cfg.tol, cfg.checkpointDir,
+        cfg.checkpointEvery, resume) { resumed =>
     val prep = prepare(g, cfg)
 
-    val srcs = g.edges.select(col("src").as("id")).distinct()
-      .withColumn("nd", lit(1))
-    val base = g.vertices.join(srcs, Seq("id"), "left")
-      .select(col("id"), when(col("nd").isNull, 1.0).otherwise(0.0).as("dang"))
     def vCol(j: Int): Column =
       when(col("id") === seeds(j), 1.0).otherwise(0.0)
     // rank columns are named BY SEED ID (r<seed>, not r<index>): the column
@@ -342,56 +291,25 @@ object PageRank {
     // seed set, not just its size — resuming k different seeds against k
     // old columns would silently start from an unrelated state
     def rc(j: Int): String = s"r${seeds(j)}"
+    val stateCols = "id" +: "dang" +: seeds.indices.map(rc)
 
     // Resume (north rule, at parity with the single-vector kernel): the k
     // rank columns are the whole state; per-seed scalars are re-measured.
-    var startIter = 0
-    val resumed: Option[DataFrame] = if (resume) {
-      cfg.checkpointDir.flatMap { dir =>
-        TableIO.latestValidSnapshot(spark, s"$dir/$runId", "iter_")
-          .map { case (kk, snap) =>
-            val want = seeds.indices.map(rc).toSet
-            val got = snap.columns.filter(c => c != "id" && c != "dang").toSet
-            // checkpoint format versioning: pre-marker snapshots may be
-            // INDEX-named (r0..r(k-1), column order = seed order) — for the
-            // one seed set where that is indistinguishable from seed-naming
-            // ({0..k-1}), binding by name could silently swap per-seed
-            // state, so refuse instead of guessing
-            val fmt = TableIO.readMarker(spark, s"$dir/$runId/_seedfmt")
-            val indexNamed = seeds.indices.map(j => s"r$j").toSet
-            if (fmt.isEmpty && got == indexNamed) {
-              if (want == indexNamed)
-                throw new IllegalArgumentException(
-                  s"checkpoint under $dir/$runId predates the _seedfmt marker " +
-                    "and its columns match BOTH the legacy index-named and the " +
-                    "seed-named layout (seed set = 0..k-1): the column-to-seed " +
-                    "binding cannot be validated — restart the solve, or write " +
-                    "a '_seedfmt: seed-named' marker after verifying the " +
-                    "binding by hand")
-              else
-                throw new IllegalArgumentException(
-                  s"checkpoint under $dir/$runId is a legacy INDEX-named " +
-                    s"multi-seed snapshot (columns r0..r${k - 1}): column " +
-                    "order, not seed identity, defined its binding — it " +
-                    "cannot be resumed under seed-named validation; restart " +
-                    "the solve")
-            }
-            require(got == want,
-              s"checkpoint under $dir/$runId carries seed columns " +
-                s"${got.toSeq.sorted.mkString(",")} but seeds " +
-                s"${seeds.mkString(",")} were requested — seed set must match")
-            startIter = kk
-            snap
-          }
-      }
-    } else None
+    // x₀_j = v_j on a cold start (the reference's personalized start,
+    // ppagerank.cc:291-295).
+    val start = resumed match {
+      case Some(snap) =>
+        require(snap.columns.toSet == stateCols.toSet,
+          s"checkpoint $runId carries columns ${snap.columns.sorted.mkString(",")} " +
+            s"but seeds ${seeds.mkString(",")} were requested — seed set must match")
+        snap.select(stateCols.map(col): _*)
+      case None =>
+        dangling(g).select(col("id") +: col("dang") +: Seq.tabulate(k)(j => vCol(j).as(rc(j))): _*)
+    }
 
     // ω_j per seed: driver-set slots read by a step planned once per solve
     val omega = Array.fill(k)(new ScalarSlot(0.0))
-    // x₀_j = v_j (the reference's personalized start, ppagerank.cc:291-295)
-    val loop = GraftSqlInternals.iterate(resumed.getOrElse(base.select(
-        col("id") +: col("dang") +: Seq.tabulate(k)(j => vCol(j).as(rc(j))): _*)),
-        keys = Seq("id")) { frame =>
+    val loop = GraftSqlInternals.iterate(start, keys = Seq("id")) { frame =>
       // one SpMV join for ALL seeds: k sums per dst in one hash aggregate
       val x = frame.select(col("id") +: Seq.tabulate(k)(j => col(rc(j))): _*)
         .hint("shuffle_hash")
@@ -433,45 +351,23 @@ object PageRank {
         s"seed(s) not in vertex domain: ${missing.mkString(", ")}")
     }
 
-    val trace = scala.collection.mutable.ArrayBuffer[IterMetric]()
-    var flushedUpTo = 0
-    var iter = startIter
-    var delta = Double.MaxValue
-    var reason: ConvergedReason = ConvergedReason.MaxIterations
-
-    while (iter < cfg.maxIter && delta >= cfg.tol) {
-      val t0 = System.nanoTime()
-      for (j <- 0 until k) omega(j).value = 1.0 - cfg.alpha * (sx(j) - dtx(j))
-      val row = loop.step()("it")
-      delta = (0 until k).map(j => row.getDouble(j)).max
-      for (j <- 0 until k) { dtx(j) = row.getDouble(k + j); sx(j) = row.getDouble(2 * k + j) }
-      iter += 1
-      trace += IterMetric(runId, iter, delta,
-        (0 until k).map(j => sx(j)).sum / k, (System.nanoTime() - t0) / 1000000L)
-      val converged = delta < cfg.tol
-      if (converged || (cfg.checkpointDir.isDefined && iter % cfg.checkpointEvery == 0)) {
-        cfg.checkpointDir.foreach { dir =>
-          TableIO.commitSnapshotWithLineage(
-            loop.frame, s"$dir/$runId", runId, "iter_", iter)
-          // format marker: columns are seed-named (resume validates against
-          // it; see the legacy-index-named refusal above)
-          TableIO.writeMarker(spark, s"$dir/$runId/_seedfmt", "seed-named")
-          val fresh = trace.toSeq.drop(flushedUpTo)
-          if (fresh.nonEmpty) TableIO.appendRows(fresh.toDF(), s"$dir/$runId/_metrics")
-          flushedUpTo = trace.size
-        }
+    new RankSolve.Iteration[DataFrame] {
+      def step(): (Double, Double) = {
+        for (j <- 0 until k) omega(j).value = 1.0 - cfg.alpha * (sx(j) - dtx(j))
+        val row = loop.step()("it")
+        for (j <- 0 until k) { dtx(j) = row.getDouble(k + j); sx(j) = row.getDouble(2 * k + j) }
+        ((0 until k).map(j => row.getDouble(j)).max, sx.sum / k)
       }
-      if (converged) reason = ConvergedReason.ResidualBelowTol
+      def snapshot: DataFrame = loop.frame
+      def result(): DataFrame = {
+        loop.close()
+        prep.close()
+        // long form (id, seed, rank)
+        val stackArgs = seeds.map(s => s"${s}L, `r$s`").mkString(", ")
+        loop.frame.select(col("id"),
+          expr(s"stack($k, $stackArgs)").as(Seq("seed", "rank")))
+      }
     }
-    loop.close()
-    prep.close()
-
-    // long form (id, seed, rank)
-    val stackArgs = seeds.zipWithIndex
-      .map { case (s, j) => s"${s}L, `r$s`" }.mkString(", ")
-    val long = loop.frame.select(col("id"),
-      expr(s"stack($k, $stackArgs)").as(Seq("seed", "rank")))
-    (long, PageRankStats(iter, delta, reason, trace.toSeq))
-    } // withWidth
+    } // RankSolve.run
   }
 }

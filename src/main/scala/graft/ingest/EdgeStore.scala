@@ -14,15 +14,16 @@ import graft.model.Edge
   * column sort (/root/reference/petsc_util.cc:714-722) and block row
   * partitioning (petsc_util.cc:331-344).
   *
-  * Layout v2 (current): ONE parquet tree `data/tbl={norm,raw}/bucket=N/`
-  * holding both the normalized and the raw (pre-normalization multiplicity)
-  * edges, discriminated by the `tbl` partition column. One tree means the
-  * initial write AND a mergeDelta rewrite are each a single job over the
-  * discriminated union instead of two per-table jobs — at the incremental-
-  * maintenance cadence the per-job fixed overhead (planning + stage
-  * barriers + commit protocol) was about half the merge cost. Layout v1
-  * (two trees `edges/` + `raw_edges/`) remains readable and mergeable; see
-  * `migrate` for the one-shot upgrade.
+  * Layout (the only one; `_meta.txt` says `layout=2`): ONE parquet tree
+  * `data/tbl={norm,raw}/bucket=N/` holding both the normalized and the raw
+  * (pre-normalization multiplicity) edges, discriminated by the `tbl`
+  * partition column, beside `vertices/`, `dict/` and the `_meta.txt`
+  * sidecar (`buckets=N`, `layout=2`). One tree means the initial write AND
+  * a mergeDelta rewrite are each a single job over the discriminated union
+  * instead of two per-table jobs — at the incremental-maintenance cadence
+  * the per-job fixed overhead (planning + stage barriers + commit protocol)
+  * was about half the merge cost. A store without `_meta.txt`, or with
+  * another layout, is refused.
   *
   * Plain parquet `partitionBy` directories carry NO bucketing metadata, so a
   * bare re-read would re-shuffle the edge side of every rank-vector join.
@@ -62,15 +63,10 @@ object EdgeStore {
       .parquet(s"$path/data")
   }
 
+  /** The `_meta.txt` sidecar every merge and read consults — a text file
+    * read driver-side, so no Spark job.
+    */
   private def writeMeta(spark: SparkSession, path: String, buckets: Int): Unit = {
-    import spark.implicits._
-    Seq((buckets, 2)).toDF("buckets", "layout").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/meta")
-    // fast-path sidecar: every merge (and every read) needs (buckets,
-    // layout), and scanning the 1-row meta parquet costs a Spark job each
-    // time; the text twin is read driver-side in microseconds. The parquet
-    // tree stays authoritative for stores written by older code (readMeta
-    // falls back when the sidecar is absent).
     val (fs, _) = hfs(spark, path)
     writeSmallFile(fs, s"$path/_meta.txt", s"buckets=$buckets\nlayout=2\n")
   }
@@ -80,122 +76,47 @@ object EdgeStore {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  /** Bucket count the store was written with. Defaults to 64 ONLY when the
-    * meta dir is genuinely absent (a pre-meta store); any other failure
-    * (corrupt meta, transient read error) propagates — merging with a
-    * guessed bucket count would prune with the wrong bucket mapping and
-    * silently drop touched sources' existing edges.
+  /** Bucket count the store was written with, from its `_meta.txt`
+    * sidecar. A store without the sidecar, or whose sidecar does not say
+    * `layout=2`, is refused: merging with a guessed bucket count would prune
+    * with the wrong bucket mapping and silently drop touched sources'
+    * existing edges, and any other layout has no `data/` tree to read.
     */
-  def readBuckets(spark: SparkSession, path: String): Int =
-    readMeta(spark, path)._1
-
-  /** Store layout version: 2 = combined `data/tbl=…/bucket=…` tree,
-    * 1 = legacy separate `edges/` + `raw_edges/` trees (pre-meta or
-    * pre-layout-column stores are v1 by construction).
-    */
-  def readLayout(spark: SparkSession, path: String): Int =
-    readMeta(spark, path)._2
-
-  /** (buckets, layout) in ONE meta read — readBuckets + readLayout back to
-    * back cost two separate scan jobs per merge for one 1-row file. Prefers
-    * the `_meta.txt` sidecar (driver-side read, no Spark job); falls back to
-    * the meta parquet for stores written before the sidecar existed.
-    */
-  private def readMeta(spark: SparkSession, path: String): (Int, Int) = {
-    val (fs, sp) = hfs(spark, s"$path/_meta.txt")
-    if (fs.exists(sp)) {
-      val in = fs.open(sp)
-      val body = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-      val kv = body.linesIterator.flatMap(_.split("=", 2) match {
-        case Array(k, v) => Some(k.trim -> v.trim)
-        case _ => None
-      }).toMap
-      (kv("buckets").toInt, kv("layout").toInt)
-    } else {
-      val (_, p) = hfs(spark, s"$path/meta")
-      if (!fs.exists(p)) (64, 1)
-      else {
-        val meta = spark.read.parquet(p.toString)
-        val hasLayout = meta.columns.contains("layout")
-        val row = meta.select(
-          col("buckets") +: (if (hasLayout) Seq(col("layout")) else Nil): _*).head()
-        (row.getInt(0), if (hasLayout) row.getInt(1) else 1)
-      }
-    }
+  def readBuckets(spark: SparkSession, path: String): Int = {
+    val (fs, p) = hfs(spark, s"$path/_meta.txt")
+    require(fs.exists(p), s"edge store $path has no _meta.txt")
+    val kv = readSmallFile(fs, p).linesIterator.flatMap(_.split("=", 2) match {
+      case Array(k, v) => Some(k.trim -> v.trim)
+      case _ => None
+    }).toMap
+    require(kv.get("layout").contains("2") && kv.contains("buckets"),
+      s"edge store $path: _meta.txt must give buckets and layout=2, got $kv")
+    kv("buckets").toInt
   }
 
-  /** Total bytes under the store's data tree(s) — driver-side FS metadata
+  /** Total bytes under the store's data tree — driver-side FS metadata
     * only, no Spark job. Sizes the merge's shuffle width (guide: make
     * partitioning scale-adaptive, not a constant tuned for the session).
     */
-  private def dataBytes(spark: SparkSession, path: String, layout: Int): Long = {
-    val subs = if (layout >= 2) Seq("data") else Seq("edges", "raw_edges")
-    subs.map { sub =>
-      val (fs, p) = hfs(spark, s"$path/$sub")
-      if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-    }.sum
+  private def dataBytes(spark: SparkSession, path: String): Long = {
+    val (fs, p) = hfs(spark, s"$path/data")
+    if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
   }
 
-  /** Scan one logical table ("norm" | "raw") under either layout, as
-    * (src, dst, weight, bucket) — bucket kept for partition pruning.
+  /** Scan one logical table ("norm" | "raw") as (src, dst, weight, bucket)
+    * — bucket kept for partition pruning.
     */
-  private def scanTbl(spark: SparkSession, path: String, tbl: String,
-      layout: Int): DataFrame =
-    if (layout >= 2)
-      spark.read.parquet(s"$path/data").where(col("tbl") === tbl)
-        .select(col("src"), col("dst"), col("weight"), col("bucket"))
-    else {
-      val sub = if (tbl == "norm") "edges" else "raw_edges"
-      spark.read.parquet(s"$path/$sub")
-        .select(col("src"), col("dst"), col("weight"), col("bucket"))
-    }
+  private def scanTbl(spark: SparkSession, path: String, tbl: String): DataFrame =
+    spark.read.parquet(s"$path/data").where(col("tbl") === tbl)
+      .select(col("src"), col("dst"), col("weight"), col("bucket"))
 
-  /** Layout-independent scans of the two logical tables (src, dst, weight) —
-    * callers must not hardcode the physical tree shape.
+  /** Scans of the two logical tables (src, dst, weight) — callers must not
+    * hardcode the physical tree shape.
     */
   def scanNorm(spark: SparkSession, path: String): DataFrame =
-    scanTbl(spark, path, "norm", readLayout(spark, path))
-      .select(col("src"), col("dst"), col("weight"))
+    scanTbl(spark, path, "norm").select(col("src"), col("dst"), col("weight"))
   def scanRaw(spark: SparkSession, path: String): DataFrame =
-    scanTbl(spark, path, "raw", readLayout(spark, path))
-      .select(col("src"), col("dst"), col("weight"))
-
-  /** One-shot upgrade of a legacy v1 store to the combined v2 tree (the
-    * incremental path keeps working on v1 without this; migrating buys the
-    * single-job merge rewrite). Not atomic against concurrent merges — the
-    * in-progress marker excludes them.
-    */
-  def migrate(spark: SparkSession, path: String): Unit = {
-    requireConsistent(spark, path)
-    // marker taken BEFORE the layout read, mirroring mergeDelta: the
-    // exclusive create is the actual mutual exclusion between a migrate and
-    // a concurrent merge — checking the layout first would leave a window
-    // where a merge starts against the tree this migrate is about to delete
-    val (mfs, mpath) = hfs(spark, markerPath(path))
-    createMarker(mfs, mpath)
-    var wrote = false
-    try {
-      if (readLayout(spark, path) >= 2) { mfs.delete(mpath, false); return }
-      val buckets = readBuckets(spark, path)
-      val unioned =
-        scanTbl(spark, path, "norm", 1).drop("bucket").withColumn("tbl", lit("norm"))
-          .unionByName(
-            scanTbl(spark, path, "raw", 1).drop("bucket").withColumn("tbl", lit("raw")))
-      wrote = true
-      markerWriting(mfs, mpath)
-      writeData(unioned, path, buckets)
-      writeMeta(spark, path, buckets)
-      for (sub <- Seq("edges", "raw_edges")) {
-        val (fs, p) = hfs(spark, s"$path/$sub")
-        if (fs.exists(p)) fs.delete(p, true)
-      }
-      mfs.delete(mpath, false)
-    } catch { case t: Throwable =>
-      if (!wrote) mfs.delete(mpath, false)
-      throw t
-    }
-  }
+    scanTbl(spark, path, "raw").select(col("src"), col("dst"), col("weight"))
 
   // ---- merge commit protocol ----
   // A merge rewrites raw_edges and edges in two separate commits; a crash
@@ -211,7 +132,7 @@ object EdgeStore {
 
   /** Marker body records the PHASE of the interrupted operation, so an
     * operator facing a stale marker knows whether the store content can be
-    * trusted: "locked" = the merge/migrate crashed (or was killed) before
+    * trusted: "locked" = the merge crashed (or was killed) before
     * its first write — the store is intact and deleting the marker file is
     * safe; "writing" = it crashed mid-rewrite — rebuild or restore. Markers
     * from pre-phase versions are empty → reported as unknown.
@@ -233,12 +154,7 @@ object EdgeStore {
   private def requireConsistent(spark: SparkSession, path: String): Unit = {
     val (fs, m) = hfs(spark, markerPath(path))
     if (fs.exists(m)) {
-      val phase = {
-        val in = fs.open(m)
-        try new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8).trim
-        finally in.close()
-      }
+      val phase = readSmallFile(fs, m)
       val advice = phase match {
         case "locked" =>
           "it died BEFORE its first write, so the store content is intact — " +
@@ -253,7 +169,7 @@ object EdgeStore {
       }
       throw new IllegalArgumentException(
         s"requirement failed: edge store $path has an unfinished " +
-          s"merge/migrate (${m.getName} present, phase=" +
+          s"merge (${m.getName} present, phase=" +
           s"${if (phase.isEmpty) "unknown" else phase}): $advice")
     }
   }
@@ -263,13 +179,7 @@ object EdgeStore {
     */
   def lastMergeTag(spark: SparkSession, path: String): Option[Long] = {
     val (fs, p) = hfs(spark, s"$path/_last_merge_tag")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong)
-      finally in.close()
-    }
+    if (fs.exists(p)) Some(readSmallFile(fs, p).toLong) else None
   }
 
   /** Run identity recorded alongside the last merge tag (None for stores
@@ -281,13 +191,7 @@ object EdgeStore {
     */
   def lastMergeRun(spark: SparkSession, path: String): Option[String] = {
     val (fs, p) = hfs(spark, s"$path/_last_merge_run")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim)
-      finally in.close()
-    }
+    if (fs.exists(p)) Some(readSmallFile(fs, p)) else None
   }
 
   private def writeSmallFile(fs: org.apache.hadoop.fs.FileSystem,
@@ -296,6 +200,14 @@ object EdgeStore {
     val out = fs.create(p, true)
     try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
+  }
+
+  /** Body of a small sidecar file, trimmed. */
+  private def readSmallFile(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): String = {
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8).trim
+    finally in.close()
   }
 
   final case class MergeStats(
@@ -328,21 +240,18 @@ object EdgeStore {
     import org.apache.spark.sql.{GraftSqlInternals => GI}
     import spark.implicits._
     requireConsistent(spark, path)
-    // in-progress marker, taken BEFORE the layout read and the store scans:
-    // exclusive create — a concurrent merge or migrate fails here instead of
-    // interleaving (a migrate completing between a layout read and the
-    // rewrite would make this merge recreate the deleted v1 trees and the
-    // delta would be invisible to every v2 reader). Failures before the
-    // first write release the marker (the store is untouched); from the
-    // first write on, a crash leaves it so read()/mergeDelta refuse the
-    // possibly-inconsistent store.
+    // in-progress marker, taken BEFORE the meta read and the store scans:
+    // exclusive create — a concurrent merge fails here instead of
+    // interleaving. Failures before the first write release the marker (the
+    // store is untouched); from the first write on, a crash leaves it so
+    // read()/mergeDelta refuse the possibly-inconsistent store.
     val (mfs, mpath) = hfs(spark, markerPath(path))
     createMarker(mfs, mpath)
     var wroteAnything = false
     def noteFirstWrite(): Unit =
       if (!wroteAnything) { wroteAnything = true; markerWriting(mfs, mpath) }
     try {
-    val (buckets, layout) = readMeta(spark, path)
+    val buckets = readBuckets(spark, path)
     // Shuffle width sized to the store's own bytes (~8 MB parquet per
     // partition), never above the session width: an incremental merge over a
     // small (or small-remaining-after-bucket-pruning) store otherwise pays a
@@ -351,7 +260,7 @@ object EdgeStore {
     // width (the cap only ever narrows).
     val mergeWidth = math.max(2L, math.min(
       spark.conf.get("spark.sql.shuffle.partitions", "200").toLong,
-      dataBytes(spark, path, layout) / (8L << 20) + 1)).toInt
+      dataBytes(spark, path) / (8L << 20) + 1)).toInt
     graft.util.ShuffleWidth.withWidth(spark, mergeWidth) {
     // bucket-membership bitmask: rides as a `bit_or` observe accumulator on
     // the jobs that materialize data anyway (no dedicated distinct+collect
@@ -419,7 +328,7 @@ object EdgeStore {
     // rows travel in one discriminated union so one job materializes both;
     // the written-raw bucket set (for emptied-bucket cleanup) rides as an
     // observe mask on the same tasks. ----
-    val rawAff = scanTbl(spark, path, "raw", layout)
+    val rawAff = scanTbl(spark, path, "raw")
       .where(col("bucket").isin(affBuckets: _*)) // partition pruning
       .select(col("src"), col("dst"), col("weight"))
     val keepRaw = rawAff.join(affSrcs, Seq("src"), "left_anti")
@@ -433,7 +342,7 @@ object EdgeStore {
     val touchedNorm = touchedRaw
       .withColumn("weight", col("weight") /
         sum(col("weight")).over(org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
-    val keepNorm = scanTbl(spark, path, "norm", layout)
+    val keepNorm = scanTbl(spark, path, "norm")
       .where(col("bucket").isin(affBuckets: _*))
       .select(col("src"), col("dst"), col("weight"))
       .join(affSrcs, Seq("src"), "left_anti")
@@ -454,22 +363,9 @@ object EdgeStore {
     // emptied-bucket cleanup, and the vertex append, and is removed only
     // once all are durable.
     noteFirstWrite()
-    if (layout >= 2) {
-      // combined tree: BOTH tables land in ONE rewrite job — the merged
-      // union already carries the tbl discriminator
-      writeData(merged, path, buckets, dynamic = true)
-    } else {
-      def rewrite(df: DataFrame, sub: String): Unit =
-        df.withColumn("bucket", bucketCol(buckets))
-          .repartition(col("bucket"))
-          .sortWithinPartitions(col("src"), col("dst"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("bucket")
-          .parquet(s"$path/$sub")
-      rewrite(merged.where(col("tbl") === "raw").drop("tbl"), "raw_edges")
-      rewrite(merged.where(col("tbl") === "norm").drop("tbl"), "edges")
-    }
+    // BOTH tables land in ONE rewrite job — the merged union already
+    // carries the tbl discriminator
+    writeData(merged, path, buckets, dynamic = true)
 
     // dynamic overwrite replaces only partitions PRESENT in the written
     // frame — an affected bucket whose rows were all deleted must be
@@ -481,20 +377,9 @@ object EdgeStore {
         .select(pmod(xxhash64(col("src")), lit(buckets)).cast("int").as("b"))
         .distinct().as[Int].collect().toSet
     val emptied = affBuckets.filterNot(presentBuckets)
-    if (emptied.nonEmpty) {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val dirs =
-        if (layout >= 2)
-          for (t <- Seq("raw", "norm"); b <- emptied)
-            yield s"$path/data/tbl=$t/bucket=$b"
-        else
-          for (sub <- Seq("raw_edges", "edges"); b <- emptied)
-            yield s"$path/$sub/bucket=$b"
-      for (d <- dirs) {
-        val p = new org.apache.hadoop.fs.Path(d)
-        val fs = p.getFileSystem(conf)
-        if (fs.exists(p)) fs.delete(p, true)
-      }
+    for (t <- Seq("raw", "norm"); b <- emptied) {
+      val (fs, p) = hfs(spark, s"$path/data/tbl=$t/bucket=$b")
+      if (fs.exists(p)) fs.delete(p, true)
     }
 
     // ---- vertex-domain growth: await the overlapped observe job ----
@@ -539,19 +424,17 @@ object EdgeStore {
   def read(spark: SparkSession, path: String): LinkGraph = {
     import spark.implicits._
     requireConsistent(spark, path)
-    val layout = readLayout(spark, path)
+    readBuckets(spark, path) // refuses a store without a layout-2 sidecar
     // edges and vertices are repartitioned at the SAME (session) width so the
     // solvers' iterate joins stay co-partitioned; the solvers then cap their
     // iteration width to edges.rdd.getNumPartitions — which equals this
     // width by construction. (Repartitioning by an explicit data-derived
     // count would also work, but both sides must agree or every iteration
     // re-exchanges one side.)
-    val edges = scanTbl(spark, path, "norm", layout)
-      .select(col("src"), col("dst"), col("weight")).as[Edge]
+    val edges = scanNorm(spark, path).as[Edge]
       .repartition(col("src")) // restore co-partitioning for rank joins
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val rawEdges = scanTbl(spark, path, "raw", layout)
-      .select(col("src"), col("dst"), col("weight")).as[Edge]
+    val rawEdges = scanRaw(spark, path).as[Edge]
     val vertices = spark.read.parquet(s"$path/vertices")
       .repartition(col("id")) // co-partition with the edge layout (see
       .persist()              // GraphOps.normalizeFrom)

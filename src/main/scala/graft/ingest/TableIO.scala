@@ -49,31 +49,13 @@ object TableIO {
       .sortBy(_._1)
   }
 
-  def latestSnapshot(spark: SparkSession, dir: String, prefix: String): Option[(Int, String)] =
-    snapshots(spark, dir, prefix).lastOption
-
   /** Append rows to a growing parquet table (metrics / lineage sidecars). */
   def appendRows(df: DataFrame, dir: String): Unit =
     df.write.mode("append").parquet(dir)
 
-  /** Small sidecar marker files (format/version notes next to snapshots). */
-  def writeMarker(spark: SparkSession, path: String, body: String): Unit = {
-    val out = fs(spark, path).create(new Path(path), true)
-    try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  def readMarker(spark: SparkSession, path: String): Option[String] = {
-    val f = fs(spark, path)
-    val p = new Path(path)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try Some(new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim)
-      finally in.close()
-    }
-  }
+  /** Recursively delete `dir` (no-op when absent). */
+  def delete(spark: SparkSession, dir: String): Unit =
+    fs(spark, dir).delete(new Path(dir), true)
 
   // ---- per-partition lineage (north rule: "every iteration checkpointed …
   // alongside per-partition lineage and residual metrics") ----
@@ -93,34 +75,29 @@ object TableIO {
       .select(lit(runId).as("run_id"), lit(iter).as("iter"),
         col("partition_id"), col("row_count"), col("digest"))
 
-  /** Commit `df` as snapshot `<dir>/<prefix><iter>` AND record its
+  /** Commit `df` as snapshot `<dir>/iter_<iter>` AND record its
     * per-partition lineage in the `_lineage` sidecar, computed from the
     * files actually committed (not the pre-write plan), so the digest
     * certifies the bytes a resume will read.
     */
   def commitSnapshotWithLineage(df: DataFrame, dir: String, runId: String,
-      prefix: String, iter: Int): DataFrame = {
-    val spark = df.sparkSession
-    val path = commitSnapshot(df, dir, s"$prefix$iter")
-    val committed = spark.read.parquet(path)
-    appendRows(partitionLineage(committed, runId, iter), s"$dir/_lineage")
-    committed
+      iter: Int): Unit = {
+    val path = commitSnapshot(df, dir, s"iter_$iter")
+    appendRows(partitionLineage(df.sparkSession.read.parquet(path), runId, iter),
+      s"$dir/_lineage")
   }
 
-  /** Latest snapshot whose content validates against its recorded lineage
-    * (total row count + xor-fold of digests). Snapshots that fail validation
-    * — or that have no lineage rows while a lineage table exists — are
-    * distrusted and skipped, falling back to the previous one. A missing
-    * `_lineage` table altogether (pre-lineage checkpoint dirs) falls back to
-    * unvalidated latest-snapshot semantics.
+  /** Latest `iter_<k>` snapshot under `dir` whose content validates against
+    * the lineage recorded for it (total row count + xor-fold of digests).
+    * Only validated snapshots are trusted: one that fails validation, is
+    * unreadable, or has no lineage rows is skipped in favour of the previous
+    * one, and a `dir` without a `_lineage` table has no valid snapshot.
+    * Lineage rows are summed per `iter`, so a run directory must hold one
+    * run's commits only (a fresh solve deletes it first, see RankSolve).
     */
-  def latestValidSnapshot(spark: SparkSession, dir: String,
-      prefix: String): Option[(Int, DataFrame)] = {
-    val all = snapshots(spark, dir, prefix).reverse
-    if (all.isEmpty) return None
-    val linPath = new Path(s"$dir/_lineage")
-    if (!fs(spark, dir).exists(linPath))
-      return all.headOption.map { case (k, p) => (k, spark.read.parquet(p)) }
+  def latestValidSnapshot(spark: SparkSession, dir: String): Option[(Int, DataFrame)] = {
+    val all = snapshots(spark, dir, "iter_").reverse
+    if (all.isEmpty || !fs(spark, dir).exists(new Path(s"$dir/_lineage"))) return None
     val lineage = spark.read.parquet(s"$dir/_lineage")
       .groupBy(col("iter"))
       .agg(sum(col("row_count")).as("rows"), bit_xor(col("digest")).as("digest"))

@@ -30,14 +30,10 @@ object InOutStepDump {
     val g = TestdataGraph.linkGraph(spark, sfDir)
     graft.util.ShuffleWidth.withWidth(spark, g.edges.rdd.getNumPartitions) {
       val prep = PageRank.prepare(g, PageRankConfig())
-      val srcs = g.edges.select(col("src").as("id")).distinct().withColumn("nd", lit(1))
-      val base = g.vertices.join(srcs, Seq("id"), "left")
-        .select(col("id"), when(col("nd").isNull, 1.0).otherwise(0.0).as("dang"))
-        .withColumn("x", lit(1.0 / g.numVertices))
-      val t0 = GraftSqlInternals.truncate(base)
+      val vCol = lit(1.0 / g.numVertices)
+      val t0 = GraftSqlInternals.truncate(PageRank.dangling(g).withColumn("x", vCol))
       t0.handle.count()
       val frame = t0.df
-      val vCol = lit(1.0 / g.numVertices)
       val next = InOutPageRank.powerStep(prep, frame, 0.85,
         GraftSqlInternals.stableLit(0.15), vCol)
       val plan = next.queryExecution.explainString(

@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.atomic.LongAdder
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 import graft.graph.{GraphOps, PageRank}
 import graft.ingest.TranscriptGen
@@ -13,7 +12,7 @@ import graft.model.PageRankConfig
   * (executor run vs CPU vs GC vs shuffle) so thread-scaling losses can be
   * located instead of guessed at.
   *
-  * sbt "runMain graft.tools.PerfProbe <nConv> <threads> <aqe> <broadcast> [explain]"
+  * sbt "runMain graft.tools.PerfProbe <nConv> <threads> <aqe> <broadcast>"
   * Env: GRAFT_SHUFFLE_PARTS, GRAFT_PROBE_ITERS, GRAFT_LOCAL_DIR,
   *      GRAFT_EXTRA_CONF="k=v;k=v" (extra spark confs for A/B experiments)
   */
@@ -23,7 +22,6 @@ object PerfProbe {
     val threads = args(1).toInt
     val aqe = args(2)
     val bcast = args(3) // "on" -> default 10MB, "off" -> -1
-    val doExplain = args.length > 4 && args(4) == "explain"
     val parts = sys.env.getOrElse("GRAFT_SHUFFLE_PARTS", threads.toString)
     val builder = SparkSession.builder()
       .master(s"local[$threads]")
@@ -44,22 +42,6 @@ object PerfProbe {
     val turns = TranscriptGen.generate(spark, nConv)
     val g = GraphOps.fromTranscripts(turns, denseIds = false)
     g.edges.count()
-
-    if (doExplain) {
-      import org.apache.spark.sql.GraftSqlInternals
-      val prep = PageRank.prepare(g, PageRankConfig())
-      val frame0 = GraftSqlInternals.truncate(
-        g.vertices.withColumn("dang", lit(0.0)).withColumn("rank", lit(1.0 / g.numVertices))).df
-      val contrib = PageRank.spmv(prep, frame0.select(col("id"), col("rank")))
-        .withColumnRenamed("y", "yraw")
-      val next = frame0.select(col("id"), col("dang"), col("rank").as("rank_prev"))
-        .join(contrib.hint("shuffle_hash"), Seq("id"), "left")
-        .withColumn("rank", lit(0.85) * coalesce(col("yraw"), lit(0.0)) + lit(0.1))
-        .select(col("id"), col("dang"), col("rank"),
-          abs(col("rank") - col("rank_prev")).as("diff"))
-      println("=== full iteration plan ===")
-      next.explain("formatted")
-    }
 
     val stageAgg = new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
     val runMs = new LongAdder; val cpuMs = new LongAdder; val gcMs = new LongAdder

@@ -5,12 +5,13 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkEntry
 import graft.TestdataGraph
-import graft.graph.PageRank
+import graft.graph.{ArnoldiPageRank, PageRank}
 import graft.model.PageRankConfig
 
-/** Dumps the physical plan of one Arnoldi-style step job (SpMV + join-back +
-  * observe) against the memoized bench graph, to audit exchange/stage counts
-  * without reverse-engineering them from listener output.
+/** Dumps the physical plan of one Arnoldi step job (`ArnoldiPageRank.mMult`
+  * plus the dot-product observe, with a representative teleport) against the
+  * memoized bench graph, to audit exchange/stage counts without
+  * reverse-engineering them from listener output.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -28,21 +29,13 @@ object PlanDump {
     println(s"edges partitions = ${g.edges.rdd.getNumPartitions}")
     graft.util.ShuffleWidth.withWidth(spark, g.edges.rdd.getNumPartitions) {
       val prep = PageRank.prepare(g, PageRankConfig())
-      val base = g.vertices
-        .join(g.edges.select(col("src").as("id")).distinct()
-          .withColumn("nd", lit(1)), Seq("id"), "left")
-        .select(col("id"), when(col("nd").isNull, 1.0).otherwise(0.0).as("dang"))
-        .withColumn("v0", lit(1.0))
-      val tr0 = GraftSqlInternals.truncate(base)
+      val tr0 = GraftSqlInternals.truncate(PageRank.dangling(g).withColumn("v0", lit(1.0)))
       tr0.handle.count()
       val frame = tr0.df
       println("=== frame (truncated) partitioning ===")
       println(frame.queryExecution.executedPlan.outputPartitioning)
-      val yraw = PageRank.spmv(prep,
-        frame.select(col("id"), col("v0").as("rank"))).withColumnRenamed("y", "yraw")
-      val step = frame.join(yraw.hint("shuffle_hash"), Seq("id"), "left")
-        .withColumn("w", lit(0.85) * coalesce(col("yraw"), lit(0.0)) + lit(0.1))
-        .drop("yraw")
+      val step = ArnoldiPageRank.mMult(prep, frame, "v0", 0.85,
+          GraftSqlInternals.stableLit(0.15), lit(1.0 / g.numVertices))
         .observe("dots", sum(col("v0") * col("w")), sum(col("w") * col("w")))
       println("=== one Arnoldi step plan ===")
       step.explain("formatted")

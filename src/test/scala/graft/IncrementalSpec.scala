@@ -409,51 +409,6 @@ class IncrementalSpec extends AnyFunSuite with SparkTestBase {
     g.edges.unpersist(); g.vertices.unpersist()
   }
 
-  /** Write a legacy layout-v1 store (separate edges/ + raw_edges/ trees,
-    * meta without a layout column) — the shape every pre-v2 store on disk
-    * has.
-    */
-  private def writeLegacyStore(g: graft.graph.LinkGraph, path: String,
-      buckets: Int): Unit = {
-    def writeTree(df: DataFrame, sub: String): Unit =
-      df.withColumn("bucket", EdgeStore.bucketCol(buckets))
-        .repartition(col("bucket"))
-        .sortWithinPartitions(col("src"), col("dst"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/$sub")
-    writeTree(g.edges.toDF(), "edges")
-    writeTree(g.rawEdges.toDF(), "raw_edges")
-    g.vertices.write.mode("overwrite").parquet(s"$path/vertices")
-    g.dict.write.mode("overwrite").parquet(s"$path/dict")
-    Seq(buckets).toDF("buckets").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/meta")
-  }
-
-  test("legacy v1 store: read + mergeDelta keep working; migrate upgrades to v2") {
-    val all = rawEdges(150).persist()
-    val late = pmod(col("src") + col("dst"), lit(5)) === 0
-    val base = all.where(!late)
-    val delta = all.where(late)
-    val store = tmp("inc_legacy")
-    writeLegacyStore(buildGraph(base), store, buckets = 8)
-    assert(EdgeStore.readLayout(spark, store) == 1)
-    // the v1 merge path (two-tree rewrite) is still value-exact
-    EdgeStore.mergeDelta(spark, store, delta)
-    val full = buildGraph(all)
-    assert(edgeMap(EdgeStore.scanNorm(spark, store)) == edgeMap(full.edges.toDF()))
-    assert(edgeMap(EdgeStore.scanRaw(spark, store)) == edgeMap(full.rawEdges.toDF()))
-    // migrate → combined tree, same content, old trees gone
-    EdgeStore.migrate(spark, store)
-    assert(EdgeStore.readLayout(spark, store) == 2)
-    assert(!Files.exists(Paths.get(store, "edges")))
-    assert(!Files.exists(Paths.get(store, "raw_edges")))
-    assert(edgeMap(EdgeStore.scanNorm(spark, store)) == edgeMap(full.edges.toDF()))
-    assert(edgeMap(EdgeStore.scanRaw(spark, store)) == edgeMap(full.rawEdges.toDF()))
-    // a merge AFTER migration takes the single-job combined-tree path
-    EdgeStore.mergeDelta(spark, store, Seq((0L, 1L, 1.0)).toDF("src", "dst", "weight"))
-    assert(EdgeStore.read(spark, store).numEdges > 0)
-    all.unpersist()
-  }
-
   test("an unfinished merge marker makes read() and mergeDelta refuse the store") {
     val all = rawEdges(60).persist()
     val store = tmp("inc_marker")
@@ -472,25 +427,27 @@ class IncrementalSpec extends AnyFunSuite with SparkTestBase {
   test("readBuckets propagates corrupt-meta failures instead of guessing 64") {
     val store = tmp("inc_meta")
     EdgeStore.write(buildGraph(rawEdges(60)), store, buckets = 4)
+    val meta = Paths.get(store, "_meta.txt")
+    assert(Files.readString(meta) == "buckets=4\nlayout=2\n")
     assert(EdgeStore.readBuckets(spark, store) == 4)
-    // corrupt the meta dir: files exist but are not readable parquet.
-    // While the _meta.txt sidecar (the job-free fast path) is intact it
-    // legitimately serves the value — no guessing involved
-    val metaDir = new java.io.File(store, "meta")
-    metaDir.listFiles().foreach(_.delete())
-    Files.writeString(Paths.get(store, "meta", "part-corrupt.parquet"), "junk")
-    assert(EdgeStore.readBuckets(spark, store) == 4)
-    // with the sidecar gone, the corrupt parquet fallback must propagate,
-    // not guess 64
-    Files.delete(Paths.get(store, "_meta.txt"))
-    intercept[Exception] { EdgeStore.readBuckets(spark, store) }
-    // a corrupt sidecar propagates too
-    Files.writeString(Paths.get(store, "_meta.txt"), "junk")
-    intercept[Exception] { EdgeStore.readBuckets(spark, store) }
-    Files.delete(Paths.get(store, "_meta.txt"))
-    // genuinely absent meta (pre-meta store) still defaults
-    metaDir.listFiles().foreach(_.delete()); metaDir.delete()
-    assert(EdgeStore.readBuckets(spark, store) == 64)
+    // rewritten through Hadoop's FS so its checksum file stays consistent
+    def writeMeta(body: String): Unit = {
+      val p = new org.apache.hadoop.fs.Path(meta.toString)
+      val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
+      try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8)) finally out.close()
+    }
+    // a corrupt sidecar, a layout-1 store and a store without a sidecar are
+    // all refused; none is read with a guessed bucket count
+    writeMeta("junk")
+    intercept[IllegalArgumentException] { EdgeStore.readBuckets(spark, store) }
+    writeMeta("buckets=4\nlayout=1\n")
+    intercept[IllegalArgumentException] { EdgeStore.readBuckets(spark, store) }
+    intercept[IllegalArgumentException] { EdgeStore.read(spark, store) }
+    Files.delete(meta)
+    intercept[IllegalArgumentException] { EdgeStore.readBuckets(spark, store) }
+    intercept[IllegalArgumentException] {
+      EdgeStore.mergeDelta(spark, store, Seq((0L, 1L, 1.0)).toDF("src", "dst", "weight"))
+    }
   }
 
   test("updateAndRank end-to-end equals full recompute") {

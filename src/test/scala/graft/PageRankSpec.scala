@@ -53,92 +53,34 @@ class PageRankSpec extends AnyFunSuite with SparkTestBase {
     a.foreach { case (id, r) => assert(math.abs(b(id) - r) < 1e-12) }
   }
 
-  test("resume migrates a legacy checkpoint that carries an explicit dang column") {
-    // pre-sign-packing snapshots stored (id, dang, rank); resume must fold
-    // the dang bit into the sign and still reach the exact fixed point
-    val (n, edges) = GraphFixtures.g1 // vertex 5 is dangling
-    val g = GraphFixtures.linkGraph(spark, n, edges)
-    val dir = java.nio.file.Files.createTempDirectory("pr_legacy").toString
-    val cfg = PageRankConfig(alpha = 0.85, tol = 1e-10, maxIter = 300,
-      checkpointDir = Some(dir))
-    val srcs = g.edges.select(org.apache.spark.sql.functions.col("src").as("id"))
-      .distinct().withColumn("nd", org.apache.spark.sql.functions.lit(1))
-    import org.apache.spark.sql.functions._
-    val legacy = g.vertices.join(srcs, Seq("id"), "left")
-      .select(col("id"), when(col("nd").isNull, 1.0).otherwise(0.0).as("dang"))
-      .withColumn("rank", lit(1.0 / n))
-    graft.ingest.TableIO.commitSnapshotWithLineage(legacy, s"$dir/prl", "prl", "iter_", 2)
-    val (ranks, stats) = PageRank.run(g, cfg, runId = "prl", resume = true)
-    assert(stats.iterations > 2, "did not resume from the legacy snapshot")
-    val got = ranks.collect().map(r => r.id -> r.rank).toMap
-    val (expected, _) = DenseOracle.pagerank(n, edges, 0.85, tol = 1e-12)
-    (0 until n).foreach(i => assert(math.abs(got(i.toLong) - expected(i)) < 1e-6))
-  }
-
-  test("packed migration refuses a legacy snapshot with non-positive ranks") {
-    // a personalized run can leave rank 0.0 rows; folding them into the
-    // sign-packed representation would store -0.0 and silently drop the
-    // dangling bit on read — the migration must fail loudly instead
-    val (n, edges) = GraphFixtures.g1 // vertex 5 is dangling
-    val g = GraphFixtures.linkGraph(spark, n, edges)
-    val dir = java.nio.file.Files.createTempDirectory("pr_legacy_zero").toString
-    val cfg = PageRankConfig(alpha = 0.85, tol = 1e-10, maxIter = 300,
-      checkpointDir = Some(dir))
-    import org.apache.spark.sql.functions._
-    val srcs = g.edges.select(col("src").as("id"))
-      .distinct().withColumn("nd", lit(1))
-    val legacy = g.vertices.join(srcs, Seq("id"), "left")
-      .select(col("id"), when(col("nd").isNull, 1.0).otherwise(0.0).as("dang"))
-      .withColumn("rank", when(col("id") === 0L, 0.0).otherwise(lit(1.0 / n)))
-    graft.ingest.TableIO.commitSnapshotWithLineage(legacy, s"$dir/prz", "prz", "iter_", 2)
-    val e = intercept[IllegalArgumentException] {
-      PageRank.run(g, cfg, runId = "prz", resume = true)
-    }
-    assert(e.getMessage.contains("non-positive ranks"))
-  }
-
-  test("multi-seed resume refuses a pre-marker checkpoint with index-named columns") {
-    import org.apache.spark.sql.functions._
+  test("resuming a personalized run's snapshot without personalization is refused") {
+    import spark.implicits._
     val (n, edges) = GraphFixtures.g1
     val g = GraphFixtures.linkGraph(spark, n, edges)
-    val cfg0 = PageRankConfig(alpha = 0.85, tol = 1e-10, maxIter = 300)
-
-    // legacy snapshot shape: columns r0..r(k-1) named by seed INDEX, no
-    // _seedfmt marker
-    def legacySnap(dir: String, runId: String): Unit = {
-      val snap = g.vertices.select(col("id"), lit(0.0).as("dang"),
-        when(col("id") === 3L, 1.0).otherwise(0.0).as("r0"),
-        when(col("id") === 1L, 1.0).otherwise(0.0).as("r1"))
-      graft.ingest.TableIO.commitSnapshotWithLineage(snap, s"$dir/$runId", runId, "iter_", 2)
+    val dir = java.nio.file.Files.createTempDirectory("pr_personalized").toString
+    val cfg = PageRankConfig(alpha = 0.85, tol = 0.0, maxIter = 2,
+      checkpointDir = Some(dir), checkpointEvery = 2)
+    PageRank.run(g, cfg, runId = "pv",
+      personalization = Some(Seq((0L, 1.0)).toDF("id", "v")))
+    // the snapshot carries (id, dang, v, rank); the uniform run iterates
+    // the sign-packed (id, rank)
+    val e = intercept[IllegalArgumentException] {
+      PageRank.run(g, cfg.copy(maxIter = 4), runId = "pv", resume = true)
     }
+    assert(e.getMessage.contains("personalization"))
+  }
 
-    // seeds {0,1}: names collide with seed-naming — ambiguous, must refuse
-    val d1 = java.nio.file.Files.createTempDirectory("ppr_legacy_ambig").toString
-    legacySnap(d1, "pprA")
-    val e1 = intercept[IllegalArgumentException] {
-      PageRank.runMultiSeed(g, Seq(0L, 1L),
-        cfg0.copy(checkpointDir = Some(d1)), runId = "pprA", resume = true)
-    }
-    assert(e1.getMessage.contains("_seedfmt"))
-
-    // seeds {3,1}: columns are recognizably index-named — distinct refusal
-    val d2 = java.nio.file.Files.createTempDirectory("ppr_legacy_idx").toString
-    legacySnap(d2, "pprB")
-    val e2 = intercept[IllegalArgumentException] {
-      PageRank.runMultiSeed(g, Seq(3L, 1L),
-        cfg0.copy(checkpointDir = Some(d2)), runId = "pprB", resume = true)
-    }
-    assert(e2.getMessage.contains("INDEX-named"))
-
-    // and a checkpoint the CURRENT code writes carries the marker and
-    // resumes cleanly for the same seed set
-    val d3 = java.nio.file.Files.createTempDirectory("ppr_marker").toString
-    val cfg3 = cfg0.copy(tol = 0.0, maxIter = 4,
-      checkpointDir = Some(d3), checkpointEvery = 2)
-    PageRank.runMultiSeed(g, Seq(3L, 1L), cfg3, runId = "pprC")
-    val (long, stats) = PageRank.runMultiSeed(g, Seq(3L, 1L),
-      cfg3.copy(maxIter = 6), runId = "pprC", resume = true)
-    assert(stats.iterations == 6 && long.count() == 2L * n)
+  test("a fresh solve under a reused runId leaves no stale snapshot to resume") {
+    val (n, edges) = GraphFixtures.g1
+    val g = GraphFixtures.linkGraph(spark, n, edges)
+    val dir = java.nio.file.Files.createTempDirectory("pr_reused").toString
+    val cfg = PageRankConfig(alpha = 0.85, tol = 0.0, maxIter = 8,
+      checkpointDir = Some(dir), checkpointEvery = 2)
+    PageRank.run(g, cfg, runId = "r") // snapshots at 2, 4, 6, 8
+    PageRank.run(g, cfg.copy(maxIter = 3), runId = "r") // fresh: snapshot at 2
+    val valid = graft.ingest.TableIO.latestValidSnapshot(spark, s"$dir/r")
+    assert(valid.map(_._1) == Some(2),
+      s"expected the second run's iteration 2, got ${valid.map(_._1)}")
   }
 
   test("salted prepare releases its cached frames when the run ends") {
@@ -225,7 +167,7 @@ class PageRankSpec extends AnyFunSuite with SparkTestBase {
     // corrupt the latest snapshot: delete its data files but keep the dir
     val latestPath = new java.io.File(new java.net.URI(snaps.last._2).getPath)
     latestPath.listFiles().filter(_.getName.endsWith(".parquet")).foreach(_.delete())
-    val valid = graft.ingest.TableIO.latestValidSnapshot(spark, s"$dir/c", "iter_")
+    val valid = graft.ingest.TableIO.latestValidSnapshot(spark, s"$dir/c")
     assert(valid.isDefined && valid.get._1 == 2,
       s"expected fallback to iter 2, got ${valid.map(_._1)}")
     // and the resumed run still converges to the uninterrupted result

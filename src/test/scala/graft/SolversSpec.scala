@@ -1,9 +1,10 @@
 package graft
 
+import org.apache.spark.sql.Dataset
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.graph.{ArnoldiPageRank, InOutPageRank, PageRank}
-import graft.model.PageRankConfig
+import graft.graph.{ArnoldiPageRank, InOutPageRank, LinkGraph, PageRank}
+import graft.model.{PageRankConfig, PageRankStats, VertexRank}
 
 /** The reference exposes three algorithms (-alg power|inout|arnoldi,
   * /root/reference/ppagerank.cc:130-142); all must converge to the same
@@ -107,10 +108,29 @@ class SolversSpec extends AnyFunSuite with SparkTestBase {
       s"personalized vertex $i: got ${gp(i.toLong)}, expected ${expP(i)}"))
   }
 
-  test("inout on an empty vertex domain is a require error, not an NPE") {
-    val g = GraphFixtures.linkGraph(spark, 0, Nil)
-    val e = intercept[IllegalArgumentException](InOutPageRank.run(g))
-    assert(e.getMessage.contains("empty vertex domain"))
+  for ((name, solve) <- Seq[(String, LinkGraph => Any)](
+      "power" -> (g => PageRank.run(g)),
+      "multi-seed PPR" -> (g => PageRank.runMultiSeed(g, Seq(0L))),
+      "inout" -> (g => InOutPageRank.run(g)),
+      "arnoldi" -> (g => ArnoldiPageRank.run(g)))) {
+    test(s"$name on an empty vertex domain is a require error, not an NPE") {
+      val g = GraphFixtures.linkGraph(spark, 0, Nil)
+      val e = intercept[IllegalArgumentException](solve(g))
+      assert(e.getMessage.contains("empty vertex domain"))
+    }
+  }
+
+  /** Checkpointing keeps the in-memory iterate: a checkpointed solve stops
+    * at the same iteration as a plain one, with the same ranks.
+    */
+  private type Solve = (Dataset[VertexRank], PageRankStats)
+  private def assertSameSolve(plain: Solve, ckpt: Solve): Unit = {
+    assert(ckpt._2.iterations == plain._2.iterations)
+    val a = plain._1.collect().map(r => r.id -> r.rank).toMap
+    val b = ckpt._1.collect().map(r => r.id -> r.rank).toMap
+    assert(a.keySet == b.keySet)
+    a.foreach { case (id, r) => assert(math.abs(b(id) - r) < 1e-12,
+      s"vertex $id: checkpointed ${b(id)} vs plain $r") }
   }
 
   test("solvers do not leak cached blocks across iterations/restarts") {
@@ -134,7 +154,9 @@ class SolversSpec extends AnyFunSuite with SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("graft-io-ckpt").toString
     val cfg = InOutPageRank.InOutConfig(alpha = 0.85, tol = 1e-10, maxIter = 300,
       checkpointDir = Some(dir), checkpointEvery = 2)
-    val (full, _) = InOutPageRank.run(g, cfg, runId = "full")
+    val plain = InOutPageRank.run(g, cfg.copy(checkpointDir = None))
+    val (full, fullSt) = InOutPageRank.run(g, cfg, runId = "full")
+    assertSameSolve(plain, (full, fullSt))
     // kill after 3 outer iterations (snapshot committed at iter 2)
     InOutPageRank.run(g, cfg.copy(maxIter = 3), runId = "res")
     assert(graft.ingest.TableIO.snapshots(spark, s"$dir/res", "iter_").nonEmpty)
@@ -153,10 +175,12 @@ class SolversSpec extends AnyFunSuite with SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("graft-ar-ckpt").toString
     val cfg = ArnoldiPageRank.ArnoldiConfig(alpha = 0.85, tol = 1e-10, k = 4,
       maxRestarts = 60, checkpointDir = Some(dir), checkpointEvery = 2)
-    val (full, _) = ArnoldiPageRank.run(g, cfg, runId = "full")
+    val plain = ArnoldiPageRank.run(g, cfg.copy(checkpointDir = None))
+    val (full, fullSt) = ArnoldiPageRank.run(g, cfg, runId = "full")
+    assertSameSolve(plain, (full, fullSt))
     // kill after 3 restarts (snapshot committed at restart 2)
     ArnoldiPageRank.run(g, cfg.copy(maxRestarts = 3), runId = "res")
-    assert(graft.ingest.TableIO.snapshots(spark, s"$dir/res", "restart_").nonEmpty)
+    assert(graft.ingest.TableIO.snapshots(spark, s"$dir/res", "iter_").nonEmpty)
     val (resumed, st) = ArnoldiPageRank.run(g, cfg, runId = "res", resume = true)
     assert(st.reason.converged)
     val a = full.collect().map(r => r.id -> r.rank).toMap
