@@ -42,21 +42,6 @@ object ArnoldiPageRank {
       maxRestarts: Int = 1250,
       saltThreshold: Int = 0,
       saltBuckets: Int = 8,
-      /** Re-orthogonalization (CGS2). None = auto: start with
-        * single-reduction classical Gram-Schmidt for tol ≥ 1e-9 (one
-        * observe job per Arnoldi step — β, eᵀ, dᵀ of the new basis vector
-        * derived analytically via ‖g‖² = ‖w‖² − Σh²), ESCALATING to
-        * measured CGS2 (two jobs per step, residual floor ~1e-13) if the
-        * restart residual stagnates: the analytic β cancels catastrophically
-        * once β/‖w‖ nears √ε, and where that floor lands depends on α and
-        * the spectrum (measured: fine at α=0.85/tol 1e-7, stalls at 1.8e-7
-        * for α=0.95), so it cannot be predicted from tol alone.
-        * Some(true/false) pins the mode and disables the auto-escalation.
-        * The reference is single-pass CGS + a norm reduction
-        * (ppagerank.cc:573-587) — the fast path here is one reduction
-        * CHEAPER than that, the deep path one more accurate.
-        */
-      reorthog: Option[Boolean] = None,
       /** North-rule resumability: the restart vector x IS the whole solver
         * state (the V basis is rebuilt from it each restart), so a snapshot
         * per `checkpointEvery` restarts — with per-partition lineage — lets
@@ -69,7 +54,7 @@ object ArnoldiPageRank {
   /** w = M x for column `xc` of `frame` (PageRankMult,
     * ppagerank.cc:692-718): w = αPᵀx + teleport·v, with the scalar
     * teleport = α·dᵀx + (1−α)·eᵀx. Pure plan transformation (no action):
-    * adds column `w`. Shared with tools.PlanDump.
+    * adds column `w`. Shared with tools.Probe (plan).
     */
   def mMult(prep: PageRank.Prepared, frame: DataFrame, xc: String, alpha: Double,
       teleport: Column, vCol: Column): DataFrame = {
@@ -117,10 +102,18 @@ object ArnoldiPageRank {
       (r.getDouble(0), r.getDouble(1), math.sqrt(r.getDouble(2)), r.getDouble(3))
     }
 
-    // fast single-reduction CGS for relaxed tolerances; escalated to CGS2
-    // when the restart residual stagnates at the fast path's cancellation
-    // floor (see ArnoldiConfig.reorthog)
-    var cgs2 = cfg.reorthog.getOrElse(cfg.tol < 1e-9)
+    // Gram-Schmidt: single-reduction classical GS for tol ≥ 1e-9 (one
+    // observe job per Arnoldi step — β, eᵀ, dᵀ of the new basis vector
+    // derived analytically via ‖g‖² = ‖w‖² − Σh²), ESCALATING to measured
+    // CGS2 (two jobs per step, residual floor ~1e-13) if the restart
+    // residual stagnates: the analytic β cancels catastrophically once
+    // β/‖w‖ nears √ε, and where that floor lands depends on α and the
+    // spectrum (measured: fine at α=0.85/tol 1e-7, stalls at 1.8e-7 for
+    // α=0.95), so it cannot be predicted from tol alone. CGS2 from the
+    // start for tol < 1e-9. The reference is single-pass CGS + a norm
+    // reduction (ppagerank.cc:573-587) — the fast path here is one
+    // reduction CHEAPER than that, the deep path one more accurate.
+    var cgs2 = cfg.tol < 1e-9
     var stagnant = 0
     var prevDelta = Double.MaxValue
 
@@ -159,54 +152,34 @@ object ArnoldiPageRank {
         // environment-sensitive cost of this solver before the fix)
         frame = mMult(prep, frame, s"v$j", alpha,
           GraftSqlInternals.stableLit(alpha * dvs(j) + (1 - alpha) * evs(j)), vCol)
-        if (!cgs2) {
-          // ONE observe job per step: dots, ‖w‖², eᵀw, dᵀw all ride the
-          // tasks that materialize w; β and the eᵀ/dᵀ sums of the new basis
-          // vector follow analytically (β² = ‖w‖² − Σh² by orthogonality)
-          val dotCols = (0 to j).map(i => sum(col(s"v$i") * col("w"))) ++
-            Seq(sum(col("w") * col("w")), sum(col("w")), sum(col("dang") * col("w")))
-          val (t1, obs1) = GraftSqlInternals.truncateObserved(
-            frame.observe("dots", dotCols.head, dotCols.tail: _*))
-          frame = t1.df
-          val row = obs1("dots")
-          retire(t1)
-          for (i <- 0 to j) h(i)(j) = row.getDouble(i)
-          val ww = row.getDouble(j + 1)
-          val ew = row.getDouble(j + 2)
-          val dw = row.getDouble(j + 3)
-          val beta2 = ww - (0 to j).map(i => h(i)(j) * h(i)(j)).sum
-          val beta = math.sqrt(math.max(beta2, 0.0))
-          h(j + 1)(j) = beta
-          effK = j + 1
-          if (beta < 1e-12 * math.sqrt(ww)) {
-            breakdown = true // happy breakdown: Krylov space exhausted
-          } else {
-            val gCol = (0 to j).foldLeft(col("w")) { (acc, i) =>
-              acc - GraftSqlInternals.stableLit(h(i)(j)) * col(s"v$i")
-            }
-            frame = frame.withColumn(s"v${j + 1}",
-              gCol / GraftSqlInternals.stableLit(beta)).drop("w")
-            evs(j + 1) = (ew - (0 to j).map(i => h(i)(j) * evs(i)).sum) / beta
-            dvs(j + 1) = (dw - (0 to j).map(i => h(i)(j) * dvs(i)).sum) / beta
-          }
+        // ONE observe job per step: the dots H(i,j) = vᵢᵀw, ‖w‖², eᵀw and
+        // dᵀw ride the tasks that materialize w (batched VecMTDot as
+        // CollectMetrics accumulators, as in PageRank.run)
+        val dotCols = (0 to j).map(i => sum(col(s"v$i") * col("w"))) ++
+          Seq(sum(col("w") * col("w")), sum(col("w")), sum(col("dang") * col("w")))
+        val (t1, obs1) = GraftSqlInternals.truncateObserved(
+          frame.observe("dots", dotCols.head, dotCols.tail: _*))
+        frame = t1.df
+        val row = obs1("dots")
+        retire(t1)
+        for (i <- 0 to j) h(i)(j) = row.getDouble(i)
+        val ww = row.getDouble(j + 1)
+        // g = w − Σ h(i,j)·vᵢ
+        val gCol = (0 to j).foldLeft(col("w")) { (acc, i) =>
+          acc - GraftSqlInternals.stableLit(h(i)(j)) * col(s"v$i")
+        }
+        // CGS: β and the eᵀ/dᵀ sums of g follow analytically (β² = ‖w‖² −
+        // Σh² by orthogonality). CGS2: a second job measures the residual
+        // projections c_i = vᵢᵀg (≈0 in exact arithmetic), folds them back
+        // into H, and measures ‖g‖², eᵀg, dᵀg directly in the same aggregate
+        // (the eᵀ/dᵀ sums of the new basis vector subtract the h
+        // projections from w's sums under CGS, the c projections from g's
+        // measured sums under CGS2)
+        val (next, proj, beta2, eg, dg) = if (!cgs2) {
+          (gCol, Array.tabulate(j + 1)(i => h(i)(j)),
+            ww - (0 to j).map(i => h(i)(j) * h(i)(j)).sum,
+            row.getDouble(j + 2), row.getDouble(j + 3))
         } else {
-          val dotCols = (0 to j).map(i => sum(col(s"v$i") * col("w"))) ++
-            Seq(sum(col("w") * col("w")))
-          // batched VecMTDot rides as CollectMetrics accumulators on the
-          // materializing tasks (single-action kernel, as in PageRank.run)
-          val (t1, obs1) = GraftSqlInternals.truncateObserved(
-            frame.observe("dots", dotCols.head, dotCols.tail: _*))
-          frame = t1.df
-          val row = obs1("dots")
-          retire(t1)
-          for (i <- 0 to j) h(i)(j) = row.getDouble(i)
-          val ww = row.getDouble(j + 1)
-          // g = w − Σ h(i,j)·vᵢ, then CGS2: measure the residual projections
-          // c_i = vᵢᵀg (≈0 in exact arithmetic), fold them back into H, and
-          // measure ‖g‖², eᵀg, dᵀg directly in the same aggregate
-          val gCol = (0 to j).foldLeft(col("w")) { (acc, i) =>
-            acc - GraftSqlInternals.stableLit(h(i)(j)) * col(s"v$i")
-          }
           frame = frame.withColumn("g", gCol).drop("w")
           val dotCols2 = (0 to j).map(i => sum(col(s"v$i") * col("g"))) ++
             Seq(sum(col("g") * col("g")), sum(col("g")), sum(col("dang") * col("g")))
@@ -216,27 +189,26 @@ object ArnoldiPageRank {
           val row2 = obs2("dots2")
           retire(t2)
           val c = Array.tabulate(j + 1)(i => row2.getDouble(i))
-          val gg = row2.getDouble(j + 1)
-          val eg = row2.getDouble(j + 2)
-          val dg = row2.getDouble(j + 3)
           for (i <- 0 to j) h(i)(j) += c(i)
-          // β = ‖g − Σ cᵢvᵢ‖₂ via the identity on the measured gᵀg — safe here
-          // because the c correction is O(ε)·‖g‖, so no catastrophic cancellation
-          val beta2 = gg - c.map(x => x * x).sum
-          val beta = math.sqrt(math.max(beta2, 0.0))
-          h(j + 1)(j) = beta
-          effK = j + 1
-          if (beta < 1e-12 * math.sqrt(ww)) {
-            breakdown = true // happy breakdown: Krylov space exhausted
-          } else {
-            val g2Col = (0 to j).foldLeft(col("g")) { (acc, i) =>
-              acc - GraftSqlInternals.stableLit(c(i)) * col(s"v$i")
-            }
-            frame = frame.withColumn(s"v${j + 1}",
-              g2Col / GraftSqlInternals.stableLit(beta)).drop("g")
-            evs(j + 1) = (eg - (0 to j).map(i => c(i) * evs(i)).sum) / beta
-            dvs(j + 1) = (dg - (0 to j).map(i => c(i) * dvs(i)).sum) / beta
+          val g2Col = (0 to j).foldLeft(col("g")) { (acc, i) =>
+            acc - GraftSqlInternals.stableLit(c(i)) * col(s"v$i")
           }
+          // β = ‖g − Σ cᵢvᵢ‖₂ via the identity on the measured gᵀg — safe
+          // here because the c correction is O(ε)·‖g‖, so no catastrophic
+          // cancellation
+          (g2Col, c, row2.getDouble(j + 1) - c.map(x => x * x).sum,
+            row2.getDouble(j + 2), row2.getDouble(j + 3))
+        }
+        val beta = math.sqrt(math.max(beta2, 0.0))
+        h(j + 1)(j) = beta
+        effK = j + 1
+        if (beta < 1e-12 * math.sqrt(ww)) {
+          breakdown = true // happy breakdown: Krylov space exhausted
+        } else {
+          frame = frame.withColumn(s"v${j + 1}", next / GraftSqlInternals.stableLit(beta))
+            .drop("w", "g")
+          evs(j + 1) = (eg - (0 to j).map(i => proj(i) * evs(i)).sum) / beta
+          dvs(j + 1) = (dg - (0 to j).map(i => proj(i) * dvs(i)).sum) / beta
         }
         j += 1
       }
@@ -287,11 +259,11 @@ object ArnoldiPageRank {
       xHandle.handle.unpersist(false)
       xHandle = tr2
 
-      // stagnation → escalate to CGS2 (auto mode only): two consecutive
+      // stagnation → escalate to CGS2: two consecutive
       // restarts without ≥10% residual improvement means the fast path has
       // hit its analytic-β cancellation floor above tol — without this the
       // solver would spin to maxRestarts at a flat residual
-      if (!cgs2 && cfg.reorthog.isEmpty && delta >= cfg.tol) {
+      if (!cgs2 && delta >= cfg.tol) {
         if (delta > 0.9 * prevDelta) stagnant += 1 else stagnant = 0
         if (stagnant >= 2) cgs2 = true
       }

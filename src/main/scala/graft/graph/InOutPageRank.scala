@@ -55,7 +55,7 @@ object InOutPageRank {
 
   /** One power step (ppagerank.cc:385-409) as one frame over the iterate
     * (id, dang, [v,] x): x ← αPᵀx + ωv, with the residual ‖x − x_prev‖₁ and
-    * the new dᵀx and eᵀx observed as "pw". Shared with tools.InOutStepDump.
+    * the new dᵀx and eᵀx observed as "pw". Shared with tools.Probe (plan).
     */
   def powerStep(prep: PageRank.Prepared, frame: DataFrame, alpha: Double,
       omega: Column, vCol: Column): DataFrame = {
@@ -77,7 +77,7 @@ object InOutPageRank {
     * observe "in" carries dᵀ(Pᵀx) for the next step's dᵀx, the inner
     * residual ‖f + βy_new − x‖₁ and the outer residual
     * ‖x − αy_new − (1−α)v‖₁ (ppagerank.cc:456-465). Shared with
-    * tools.InOutStepDump.
+    * tools.Probe (plan).
     */
   def innerStep(prep: PageRank.Prepared, st: DataFrame, alpha: Double,
       beta: Double, dtx: Column, vCol: Column): DataFrame = {

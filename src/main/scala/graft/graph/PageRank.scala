@@ -282,8 +282,6 @@ object PageRank {
     require(seeds.distinct.size == k, "duplicate seeds")
     RankSolve.run(g, runId, cfg.maxIter, cfg.tol, cfg.checkpointDir,
         cfg.checkpointEvery, resume) { resumed =>
-    val prep = prepare(g, cfg)
-
     def vCol(j: Int): Column =
       when(col("id") === seeds(j), 1.0).otherwise(0.0)
     // rank columns are named BY SEED ID (r<seed>, not r<index>): the column
@@ -307,6 +305,25 @@ object PageRank {
         dangling(g).select(col("id") +: col("dang") +: Seq.tabulate(k)(j => vCol(j).as(rc(j))): _*)
     }
 
+    // per-seed scalars, measured on the start frame before anything is
+    // prepared or cached: x₀_j sums to 1 iff the seed is in the vertex domain
+    val aggCols0 = Seq.tabulate(k)(j => sum(col("dang") * col(rc(j)))) ++
+      Seq.tabulate(k)(j => sum(col(rc(j))))
+    val r0 = start.agg(aggCols0.head, aggCols0.tail: _*).head()
+    val dtx = Array.tabulate(k)(j => r0.getDouble(j))
+    val sx = Array.tabulate(k)(j => r0.getDouble(k + j))
+    // a seed outside the vertex domain would make x₀ ≡ 0 for that column:
+    // the first residual is 0 and the solver would "converge" to a silent
+    // all-zero PPR vector — fail loudly instead. (On resume the columns are
+    // converged iterates, not indicators, so the x₀-sum check only applies
+    // to a cold start.)
+    if (resumed.isEmpty) {
+      val missing = seeds.indices.filter(j => sx(j) != 1.0).map(seeds)
+      require(missing.isEmpty,
+        s"seed(s) not in vertex domain: ${missing.mkString(", ")}")
+    }
+
+    val prep = prepare(g, cfg)
     // ω_j per seed: driver-set slots read by a step planned once per solve
     val omega = Array.fill(k)(new ScalarSlot(0.0))
     val loop = GraftSqlInternals.iterate(start, keys = Seq("id")) { frame =>
@@ -334,23 +351,6 @@ object PageRank {
         .observe("it", metricCols.head, metricCols.tail: _*)
         .select(col("id") +: col("dang") +: Seq.tabulate(k)(j => col(rc(j))): _*)
     }
-    // per-seed scalars: x₀_j sums to 1 iff the seed is in the vertex domain
-    val aggCols0 = Seq.tabulate(k)(j => sum(col("dang") * col(rc(j)))) ++
-      Seq.tabulate(k)(j => sum(col(rc(j))))
-    val r0 = loop.frame.agg(aggCols0.head, aggCols0.tail: _*).head()
-    val dtx = Array.tabulate(k)(j => r0.getDouble(j))
-    val sx = Array.tabulate(k)(j => r0.getDouble(k + j))
-    // a seed outside the vertex domain would make x₀ ≡ 0 for that column:
-    // the first residual is 0 and the solver would "converge" to a silent
-    // all-zero PPR vector — fail loudly instead. (On resume the columns are
-    // converged iterates, not indicators, so the x₀-sum check only applies
-    // to a cold start.)
-    if (resumed.isEmpty) {
-      val missing = seeds.indices.filter(j => sx(j) != 1.0).map(seeds)
-      require(missing.isEmpty,
-        s"seed(s) not in vertex domain: ${missing.mkString(", ")}")
-    }
-
     new RankSolve.Iteration[DataFrame] {
       def step(): (Double, Double) = {
         for (j <- 0 until k) omega(j).value = 1.0 - cfg.alpha * (sx(j) - dtx(j))

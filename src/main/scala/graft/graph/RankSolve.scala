@@ -43,7 +43,9 @@ object RankSolve {
     * first deletes `<dir>/<runId>`: the lineage sidecar is append-only, so
     * an earlier run's snapshots would otherwise outlive (and out-number)
     * the new run's, and its lineage rows would invalidate the new run's
-    * re-commits of the same iterations.
+    * re-commits of the same iterations. A resumed solve drops the
+    * snapshots and sidecar rows past the iteration it resumed from, for the
+    * same reason.
     */
   def run[R](g: LinkGraph, runId: String, maxIter: Int, tol: Double,
       checkpointDir: Option[String], checkpointEvery: Int, resume: Boolean)(
@@ -57,7 +59,9 @@ object RankSolve {
     }
     ShuffleWidth.withWidth(spark, g.edges.rdd.getNumPartitions) {
       val resumed = if (resume) runDir.flatMap(TableIO.latestValidSnapshot(spark, _)) else None
-      if (resumed.isEmpty) runDir.foreach(TableIO.delete(spark, _))
+      runDir.foreach { dir =>
+        resumed.fold(TableIO.delete(spark, dir))(r => TableIO.dropAfter(spark, dir, r._1))
+      }
       val it = start(resumed.map(_._2))
 
       val trace = scala.collection.mutable.ArrayBuffer[IterMetric]()

@@ -60,6 +60,24 @@ object TableIO {
   // ---- per-partition lineage (north rule: "every iteration checkpointed …
   // alongside per-partition lineage and residual metrics") ----
 
+  /** Drop what a run directory holds past iteration `iter`: the `iter_<k>`
+    * snapshots with k > iter, and the rows of the `_lineage` and `_metrics`
+    * sidecars with a larger `iter`. A sidecar with such rows is rewritten
+    * through `.tmp_<name>` and a rename, like `commitSnapshot`. A solve that
+    * resumes from `iter` calls this first: it re-commits the iterations
+    * after it, and lineage rows left by an earlier commit of the same
+    * iteration would be summed with the new ones.
+    */
+  def dropAfter(spark: SparkSession, dir: String, iter: Int): Unit = {
+    val f = fs(spark, dir)
+    snapshots(spark, dir, "iter_").filter(_._1 > iter).foreach(s => f.delete(new Path(s._2), true))
+    for (name <- Seq("_lineage", "_metrics") if f.exists(new Path(s"$dir/$name"))) {
+      val rows = spark.read.parquet(s"$dir/$name")
+      if (!rows.where(col("iter") > iter).isEmpty)
+        commitSnapshot(rows.where(col("iter") <= iter), dir, name)
+    }
+  }
+
   /** Per-partition lineage of a committed snapshot: one row per non-empty
     * partition with its row count and an order-independent content digest
     * (bit_xor fold of xxhash64 over all columns). Because xor is associative
@@ -93,7 +111,8 @@ object TableIO {
     * unreadable, or has no lineage rows is skipped in favour of the previous
     * one, and a `dir` without a `_lineage` table has no valid snapshot.
     * Lineage rows are summed per `iter`, so a run directory must hold one
-    * run's commits only (a fresh solve deletes it first, see RankSolve).
+    * commit per iteration (a fresh solve deletes it first, and a resumed one
+    * drops what is past its resume point, see RankSolve).
     */
   def latestValidSnapshot(spark: SparkSession, dir: String): Option[(Int, DataFrame)] = {
     val all = snapshots(spark, dir, "iter_").reverse

@@ -110,6 +110,12 @@ object GraftSqlInternals {
   def expressionOf(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 
+  /** Blocks until every listener has seen every event posted so far
+    * (listener events arrive asynchronously; the bus is private[spark]).
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   final case class Truncated(df: DataFrame, handle: RDD[_])
 
   private val ByteArrayOffset =

@@ -83,6 +83,21 @@ class PageRankSpec extends AnyFunSuite with SparkTestBase {
       s"expected the second run's iteration 2, got ${valid.map(_._1)}")
   }
 
+  test("a resumed solve that re-commits an invalid snapshot's iteration validates it") {
+    val (n, edges) = GraphFixtures.g1
+    val g = GraphFixtures.linkGraph(spark, n, edges)
+    val dir = java.nio.file.Files.createTempDirectory("pr_recommit").toString
+    val cfg = PageRankConfig(alpha = 0.85, tol = 0.0, maxIter = 4,
+      checkpointDir = Some(dir), checkpointEvery = 2)
+    PageRank.run(g, cfg, runId = "r") // snapshots at 2 and 4
+    val iter4 = new java.io.File(s"$dir/r/iter_4")
+    iter4.listFiles().filter(_.getName.endsWith(".parquet")).foreach(_.delete())
+    PageRank.run(g, cfg, runId = "r", resume = true) // from 2; re-commits 4
+    val valid = graft.ingest.TableIO.latestValidSnapshot(spark, s"$dir/r")
+    assert(valid.map(_._1) == Some(4),
+      s"expected the re-committed iteration 4, got ${valid.map(_._1)}")
+  }
+
   test("salted prepare releases its cached frames when the run ends") {
     val (n, edges) = GraphFixtures.g2
     val g = GraphFixtures.linkGraph(spark, n, edges)

@@ -220,10 +220,16 @@ class SolversSpec extends AnyFunSuite with SparkTestBase {
   test("multi-seed PPR rejects a seed outside the vertex domain") {
     val (n, edges) = GraphFixtures.g1
     val g = GraphFixtures.linkGraph(spark, n, edges)
-    intercept[IllegalArgumentException] {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    for (_ <- 1 to 3) intercept[IllegalArgumentException] {
       PageRank.runMultiSeed(g, Seq(0L, 999L),
         PageRankConfig(alpha = 0.85, tol = 0.0, maxIter = 2))
     }
+    // a rejected call leaves nothing cached (compared by RDD id: the
+    // registry holds RDDs weakly, so a collection can only shrink it)
+    val after = spark.sparkContext.getPersistentRDDs.keySet
+    assert(after.subsetOf(before),
+      s"cached RDDs ${before.toSeq.sorted} -> ${after.toSeq.sorted}")
   }
 
   test("arnoldi at alpha=0.95 tol=1e-7 converges (test_script config; " +
