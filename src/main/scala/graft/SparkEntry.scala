@@ -68,38 +68,10 @@ object SparkEntry {
       store
     })
 
-  private def i1CopyStore(s: SparkSession, src: String): String = {
-    // The base store is a local temp dir by construction; a parallel NIO
-    // tree copy replaces the sequential per-file Hadoop FileUtil walk
-    // (~200 small files incl. .crc sidecars at ~3 ms each ≈ 0.6 s of the
-    // timed query — pure copy mechanics, identical bytes).
+  private def i1CopyStore(src: String): String = {
     val dst = java.nio.file.Files
       .createTempDirectory(i1TmpBase(), "graft_i1work").toString
-    val srcPath = java.nio.file.Paths.get(src)
-    val dstPath = java.nio.file.Paths.get(dst)
-    val files = new java.util.ArrayList[java.nio.file.Path]()
-    for (sub <- Seq("data", "vertices", "dict", "meta")) {
-      val sp = srcPath.resolve(sub)
-      if (java.nio.file.Files.exists(sp)) {
-        val st = java.nio.file.Files.walk(sp)
-        try st.forEach(p => files.add(p): Unit) finally st.close()
-      }
-    }
-    import scala.jdk.CollectionConverters._
-    val (dirs, regs) = files.asScala.partition(java.nio.file.Files.isDirectory(_))
-    dirs.foreach(d => java.nio.file.Files.createDirectories(dstPath.resolve(srcPath.relativize(d))))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    try {
-      val futs = regs.map { f =>
-        pool.submit(new Runnable {
-          def run(): Unit = {
-            java.nio.file.Files.copy(f, dstPath.resolve(srcPath.relativize(f)),
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-          }
-        })
-      }
-      futs.foreach(_.get())
-    } finally pool.shutdown()
+    ingest.EdgeStore.copy(src, dst)
     dst
   }
 
@@ -414,7 +386,7 @@ object SparkEntry {
     // build VALUE-EXACTLY — the oracle is the full-graph normalization SQL.
     "i1_incremental_merge" -> ((s, dir) => {
       val store = i1BaseStore(s, dir)
-      val work = i1CopyStore(s, store)
+      val work = i1CopyStore(store)
       ingest.EdgeStore.mergeDelta(s, work,
         s.read.parquet(s"$store/_i1_delta"))
       ingest.EdgeStore.scanNorm(s, work)

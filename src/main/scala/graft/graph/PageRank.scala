@@ -134,8 +134,6 @@ object PageRank {
       runId: String = "pr", resume: Boolean = false,
       personalization: Option[DataFrame] = None,
       warmStart: Option[DataFrame] = None): (Dataset[VertexRank], PageRankStats) = {
-    val spark = g.edges.sparkSession
-    import spark.implicits._
     val n = g.numVertices
     RankSolve.run(g, runId, cfg.maxIter, cfg.tol, cfg.checkpointDir,
         cfg.checkpointEvery, resume) { resumed =>
@@ -195,6 +193,21 @@ object PageRank {
           "personalization, or restart")
       snap
     }
+    power(prep, start, cfg.alpha, n)
+    } // RankSolve.run
+  }
+
+  /** The power kernel over a prepared start frame, in either iterate
+    * layout: packed `(id, ±rank)` (uniform teleport 1/n, the dangling bit in
+    * the sign) or personalized `(id, dang, v, rank)`. Shared by `run` and
+    * InOutPageRank's power phase; one job measures the start's dᵀx and eᵀx,
+    * then every `step` is one job. `result` closes the loop and `prep`.
+    */
+  private[graph] def power(prep: Prepared, start: DataFrame, alpha: Double,
+      n: Long): RankSolve.Iteration[Dataset[VertexRank]] = {
+    val spark = start.sparkSession
+    import spark.implicits._
+    val packed = !start.columns.contains("v")
 
     // dangling indicator + magnitude of the CURRENT iterate row, under
     // either representation
@@ -207,16 +220,15 @@ object PageRank {
     // the reference (ppagerank.cc:307-315). The driver sets the slot before
     // each step; the step itself is planned once, below.
     val omega = new ScalarSlot(0.0)
-    val vCol = if (hasV) col("v") else lit(1.0 / n)
-    val carry = if (packed) Seq(col("id"))
-      else Seq(col("id"), col("dang")) ++ (if (hasV) Seq(col("v")) else Nil)
+    val vCol = if (packed) lit(1.0 / n) else col("v")
+    val carry = if (packed) Seq(col("id")) else Seq(col("id"), col("dang"), col("v"))
     val loop = GraftSqlInternals.iterate(start, keys = Seq("id")) { frame =>
       val contrib = spmv(prep,
           frame.select(col("id"), magOf(col("rank")).as("rank")))
         .withColumnRenamed("y", "yraw")
       // the new magnitude is always positive; packed mode re-applies the
       // (static) dangling sign carried by the previous rank value
-      val rankPos = lit(cfg.alpha) * coalesce(col("yraw"), lit(0.0)) +
+      val rankPos = lit(alpha) * coalesce(col("yraw"), lit(0.0)) +
         GraftSqlInternals.slotLit(omega) * vCol
       val rankStored = if (packed)
         when(col("rank_prev") < 0, -col("rank_pos")).otherwise(col("rank_pos"))
@@ -242,7 +254,7 @@ object PageRank {
 
     new RankSolve.Iteration[Dataset[VertexRank]] {
       def step(): (Double, Double) = {
-        omega.value = 1.0 - cfg.alpha * (sx - dtx)
+        omega.value = 1.0 - alpha * (sx - dtx)
         // ONE job: the next iterate materialized and lineage-truncated, the
         // previous iterate's blocks retired
         val row = loop.step()("it")
@@ -257,7 +269,6 @@ object PageRank {
         loop.frame.select(col("id"), magOf(col("rank")).as("rank")).as[VertexRank]
       }
     }
-    } // RankSolve.run
   }
 
   /** Batched multi-seed personalized PageRank: k PPR vectors (teleport

@@ -58,20 +58,23 @@ object Triangles {
       .select(col("a"), col("b"), col("c"))
   }
 
-  /** Total triangle count. */
-  def count(edges: Dataset[Edge]): Long = {
+  /** Runs `f` over the degree-oriented edge set, cached and materialized
+    * (one job for the undirected set, one for the orientation), at the edge
+    * set's shuffle width; the orientation is released when `f` returns.
+    */
+  private def withOriented[T](edges: Dataset[Edge])(f: DataFrame => T): T =
     graft.util.ShuffleWidth.withWidth(edges.sparkSession,
       edges.rdd.getNumPartitions) {
-    val und = undirected(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    und.count()
-    val oriented = orient(und).persist(StorageLevel.MEMORY_AND_DISK)
-    oriented.count()
-    und.unpersist(false)
-    val n = enumerate(oriented).count()
-    oriented.unpersist(false)
-    n
-    } // withWidth
-  }
+      val und = undirected(edges).persist(StorageLevel.MEMORY_AND_DISK)
+      und.count()
+      val oriented = orient(und).persist(StorageLevel.MEMORY_AND_DISK)
+      oriented.count()
+      und.unpersist(false)
+      try f(oriented) finally oriented.unpersist(false)
+    }
+
+  /** Total triangle count. */
+  def count(edges: Dataset[Edge]): Long = withOriented(edges)(enumerate(_).count())
 
   /** Per-vertex triangle participation counts (id, triangles) — same
     * degree-oriented wedge join as `count` (the unoriented form is O(d²) on
@@ -89,27 +92,19 @@ object Triangles {
     * ContextCleaner to collect the checkpoint blocks.
     */
   def perVertexTruncated(edges: Dataset[Edge],
-      vertices: DataFrame): org.apache.spark.sql.GraftSqlInternals.Truncated = {
-    graft.util.ShuffleWidth.withWidth(edges.sparkSession,
-      edges.rdd.getNumPartitions) {
-    val und = undirected(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    und.count()
-    val oriented = orient(und).persist(StorageLevel.MEMORY_AND_DISK)
-    oriented.count()
-    und.unpersist(false)
-    val counts = org.apache.spark.sql.GraftSqlInternals.truncate(
-      enumerate(oriented)
-        .select(explode(array(col("a"), col("b"), col("c"))).as("id"))
-        .groupBy(col("id")).agg(expr("count(1)").as("triangles")))
-    // eager: the per-corner counts must materialize BEFORE `oriented` is
-    // unpersisted, or the caller's later action re-derives the whole wedge
-    // join from scratch (truncate alone is lazy — localCheckpoint marks,
-    // the first action materializes)
-    counts.handle.count()
-    oriented.unpersist(false)
-    val result = vertices.join(counts.df, Seq("id"), "left")
-      .select(col("id"), coalesce(col("triangles"), lit(0L)).as("triangles"))
-    org.apache.spark.sql.GraftSqlInternals.Truncated(result, counts.handle)
-    } // withWidth
-  }
+      vertices: DataFrame): org.apache.spark.sql.GraftSqlInternals.Truncated =
+    withOriented(edges) { oriented =>
+      val counts = org.apache.spark.sql.GraftSqlInternals.truncate(
+        enumerate(oriented)
+          .select(explode(array(col("a"), col("b"), col("c"))).as("id"))
+          .groupBy(col("id")).agg(expr("count(1)").as("triangles")))
+      // eager: the per-corner counts must materialize BEFORE `oriented` is
+      // unpersisted, or the caller's later action re-derives the whole wedge
+      // join from scratch (truncate alone is lazy — localCheckpoint marks,
+      // the first action materializes)
+      counts.handle.count()
+      val result = vertices.join(counts.df, Seq("id"), "left")
+        .select(col("id"), coalesce(col("triangles"), lit(0L)).as("triangles"))
+      org.apache.spark.sql.GraftSqlInternals.Truncated(result, counts.handle)
+    }
 }

@@ -32,8 +32,8 @@ import graft.util.ShuffleWidth
   *  - `scale <store> <threads> [reps] [iters] [nConv]`: Bench's fixed-work
   *    scaling sample on a durable EdgeStore (built first if absent);
   *  - `plan <outDir> <suffix> <name,…>`: the formatted physical plan of each
-  *    named bench query or solver step shape (`a3_power_step`,
-  *    `a3_inner_step`, `a4_step`) to `<outDir>/<name>_<suffix>.txt`.
+  *    named bench query or solver step shape (`a3_inner_step`, `a4_step`)
+  *    to `<outDir>/<name>_<suffix>.txt`.
   *
   * Every session comes from one factory with Bench's conf, and every
   * measured query or solve runs under one listener [[Tally]]. Settings:
@@ -50,7 +50,7 @@ object Probe {
     "solve a3|a4|power [reps] [iters] [sample] [synth:<n>] | " +
     "scale <store> <threads> [reps] [iters] [nConv] | plan <outDir> <suffix> <name,...>"
 
-  private val stepShapes = Set("a3_power_step", "a3_inner_step", "a4_step")
+  private val stepShapes = Set("a3_inner_step", "a4_step")
 
   private def sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
     throw new IllegalArgumentException("SPARK_GRAFT_SF_DIR (the testdata dir) is not set"))
@@ -323,8 +323,8 @@ object Probe {
 
   /** The plan of one solver step job, built by the solver's own step
     * builder over the sf graph's cold iterate, with representative scalars:
-    * InOut's power step (SpMV join, iterate join, observe) and inner-sweep
-    * step, and Arnoldi's w = M·v₀ with the dot-product observe.
+    * InOut's inner-sweep step (its power phase is PageRank.run's kernel) and
+    * Arnoldi's w = M·v₀ with the dot-product observe.
     */
   private def stepPlan(spark: SparkSession, name: String): String = {
     val g = TestdataGraph.linkGraph(spark, sfDir)
@@ -336,12 +336,11 @@ object Probe {
         .withColumn(if (name == "a4_step") "v0" else "x", if (name == "a4_step") lit(1.0) else vCol))
       t0.handle.count()
       val step = name match {
-        case "a3_power_step" => InOutPageRank.powerStep(prep, t0.df, alpha, teleport, vCol)
         case "a3_inner_step" =>
-          val beta = alpha / 2
-          val st = t0.df.withColumn("y", col("x")) // stand-in y of the sweep frame
-            .withColumn("f", lit(alpha - beta) * col("x") + lit(1 - alpha) * vCol)
-          InOutPageRank.innerStep(prep, st, alpha, beta, GraftSqlInternals.stableLit(0.01), vCol)
+          // stand-in f and y of the sweep iterate, at a sweep's first step
+          val st = t0.df.withColumn("f", lit(0.0)).withColumn("y", col("x"))
+          InOutPageRank.innerStep(prep, st, alpha, alpha / 2,
+            GraftSqlInternals.stableLit(0.01), GraftSqlInternals.stableLit(1.0), vCol)
         case "a4_step" => ArnoldiPageRank.mMult(prep, t0.df, "v0", alpha, teleport, vCol)
           .observe("dots", sum(col("v0") * col("w")), sum(col("w") * col("w")))
       }

@@ -428,7 +428,7 @@ object GraftSqlInternals {
   * the next iterate materialized as cached chunks, with the step's observed
   * metrics — and retires the previous iterate's blocks. `close()` drops the
   * kept plan and the placeholder; the current iterate stays cached, since
-  * `frame` is what the solve returns.
+  * `frame` is what the solve returns. `discard()` drops its blocks as well.
   */
 final class PlannedIteration private[sql] (
     session: CSparkSession,
@@ -464,5 +464,13 @@ final class PlannedIteration private[sql] (
   def close(): Unit = {
     plan = null
     placeholder = null
+  }
+
+  /** `close()`, and drop the current iterate's blocks too: for a solve that
+    * hands its iterate on to another loop, once that loop has cached it.
+    */
+  def discard(): Unit = {
+    close()
+    chunks.unpersist(false)
   }
 }

@@ -60,4 +60,42 @@ class EdgeStoreSpec extends AnyFunSuite with SparkTestBase {
     assert(edgeReshuffle.findFirstIn(p).isEmpty,
       s"edge side re-shuffled despite durable store:\n$p")
   }
+
+  private def edgeSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
+  test("a copied store reads back equal; merging into the copy leaves the source untouched") {
+    import spark.implicits._
+    val g = GraphOps.fromTranscripts(TranscriptGen.generate(spark, 300))
+    val src = java.nio.file.Files.createTempDirectory("graft-copy-src").toString
+    EdgeStore.write(g, src, buckets = 8)
+    val dst = java.nio.file.Files.createTempDirectory("graft-copy-dst").toString
+    EdgeStore.copy(src, dst)
+    assert(EdgeStore.readBuckets(spark, dst) == 8)
+    val (norm, raw) = (edgeSet(EdgeStore.scanNorm(spark, src)), edgeSet(EdgeStore.scanRaw(spark, src)))
+    assert(edgeSet(EdgeStore.scanNorm(spark, dst)) == norm)
+    assert(edgeSet(EdgeStore.scanRaw(spark, dst)) == raw)
+    val g2 = EdgeStore.read(spark, dst)
+    assert(g2.numVertices == g.numVertices && g2.numEdges == g.numEdges)
+    assert(g2.dict.collect().toSet == g.dict.collect().toSet)
+    // one more link out of each of three existing vertices
+    val ids = g.vertices.select("id").as[Long].collect().sorted
+    val delta = Seq((ids(0), ids(1), 1.0), (ids(2), ids(3), 1.0), (ids(4), ids(5), 1.0))
+      .toDF("src", "dst", "weight")
+    EdgeStore.mergeDelta(spark, dst, delta)
+    assert(edgeSet(EdgeStore.scanRaw(spark, dst)) != raw, "the merge changed nothing")
+    assert(edgeSet(EdgeStore.scanNorm(spark, src)) == norm)
+    assert(edgeSet(EdgeStore.scanRaw(spark, src)) == raw)
+    assert(EdgeStore.read(spark, src).numEdges == g.numEdges)
+  }
+
+  test("i1_incremental_merge equals the full testdata graph's normalized edges") {
+    val dir = "/root/testdata/sf0.001"
+    val got = SparkEntry.queries("i1_incremental_merge")(spark, dir)
+    val expected = TestdataGraph.linkGraph(spark, dir).edges.toDF()
+      .select(col("src"), col("dst"), round(col("weight"), 8).as("weight"))
+    val a = edgeSet(got)
+    assert(a.nonEmpty && got.count() == a.size)
+    assert(a == edgeSet(expected))
+  }
 }

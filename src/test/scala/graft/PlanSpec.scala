@@ -147,6 +147,22 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     assert(plans == 1, s"step planned $plans times")
   }
 
+  test("InOut plans its inner sweep once, and PageRank's kernel once when it turns to power") {
+    import graft.graph.InOutPageRank
+    val (n, edges) = GraphFixtures.g1 // three inner sweeps, then power iterations
+    val g = GraphFixtures.linkGraph(spark, n, edges)
+    val cfg = InOutPageRank.InOutConfig(alpha = 0.85, tol = 1e-8, maxIter = 300)
+    val ((_, st), powerJobs, plans) = jobsAndPlans("PageRank.scala")(InOutPageRank.run(g, cfg))
+    assert(st.reason.converged, s"degenerate solve: $st")
+    assert(powerJobs > 1, s"$powerJobs kernel jobs: the solve never reached power mode")
+    assert(plans == 2, s"a solve that reached power mode planned $plans steps")
+    val ((_, innerSt), innerPowerJobs, innerPlans) =
+      jobsAndPlans("PageRank.scala")(InOutPageRank.run(g, cfg.copy(maxIter = 3)))
+    assert(innerSt.iterations == 3 && innerPowerJobs == 0,
+      s"$innerPowerJobs kernel jobs in ${innerSt.iterations} inner iterations")
+    assert(innerPlans == 1, s"a solve in inner mode planned $innerPlans steps")
+  }
+
   test("CC and LP plan their round once and submit one job per round") {
     val g = generated
     // CC reports no round count: a cap below its fixpoint fixes the rounds

@@ -169,6 +169,33 @@ class SolversSpec extends AnyFunSuite with SparkTestBase {
     assert(spark.read.parquet(s"$dir/res/_metrics").count() > 0)
   }
 
+  test("inout resumes across the switch to power iterations") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val (n, edges) = GraphFixtures.g1 // inner sweeps, then power from iteration 4
+    val g = GraphFixtures.linkGraph(spark, n, edges)
+    val dir = java.nio.file.Files.createTempDirectory("graft-io-switch").toString
+    val cfg = InOutPageRank.InOutConfig(alpha = 0.85, tol = 1e-8, maxIter = 300,
+      checkpointDir = Some(dir), checkpointEvery = 1)
+    val plain = InOutPageRank.run(g, cfg.copy(checkpointDir = None))
+    // kill the solve at its first power-mode snapshot, then resume it
+    InOutPageRank.run(g, cfg.copy(maxIter = 4), runId = "res")
+    val modes = graft.ingest.TableIO.snapshots(spark, s"$dir/res", "iter_").sortBy(_._1)
+      .map { case (k, path) => k -> spark.read.parquet(path).select("im").head().getBoolean(0) }
+    assert(modes == Seq(1 -> true, 2 -> true, 3 -> true, 4 -> false), modes)
+    // (the cadence does not change the iterates; 100 keeps the run short)
+    val resumed = InOutPageRank.run(g, cfg.copy(checkpointEvery = 100), runId = "res",
+      resume = true)
+    assert(resumed._2.reason == plain._2.reason)
+    assertSameSolve(plain, resumed)
+    // a power-mode snapshot in another layout is refused by name
+    val foreign = PageRank.dangling(g).withColumn("x", lit(1.0 / n))
+      .withColumn("im", lit(false))
+    graft.ingest.TableIO.commitSnapshotWithLineage(foreign, s"$dir/old", "old", 5)
+    val e = intercept[IllegalArgumentException](
+      InOutPageRank.run(g, cfg, runId = "old", resume = true))
+    assert(e.getMessage.contains("carries columns id,dang,x,im"), e.getMessage)
+  }
+
   test("arnoldi checkpoint + resume reproduces the uninterrupted result (kill-and-resume)") {
     val (n, edges) = GraphFixtures.g2
     val g = GraphFixtures.linkGraph(spark, n, edges)

@@ -2,7 +2,8 @@
 """Replicates the driver's DuckDB correctness gate against a Verify dump.
 
 Usage: python3 tools/oracle_check.py [sf_dir] [verify_out]
-Compares rows/schema/value-hash per query; prints one line per query.
+Compares rows/schema/value-hash for every query in oracle_sql.json; a query
+with no output directory counts as FAIL. Prints one line per query.
 """
 import sys, json, glob
 import duckdb
@@ -17,13 +18,17 @@ for t in ['region','nation','customer','supplier','part','orders','lineitem',
     con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
 
 sqls = json.load(open(f'{out}/oracle_sql.json'))
+dirs = {d.rstrip('/').split('/')[-1]: d for d in glob.glob(f'{out}/*/')}
 fails = 0
-for name in sorted(glob.glob(f'{out}/*/')):
-    qname = name.rstrip('/').split('/')[-1]
-    got = duckdb.sql(f"SELECT * FROM read_parquet('{name}*.parquet')").df()
-    if qname not in sqls:
-        print(f"{qname:24s} rows={len(got):6d}  no_oracle")
+for qname in sorted(set(dirs) - set(sqls)):
+    print(f"{qname:24s} no_oracle")
+for qname in sorted(sqls):
+    if qname not in dirs:
+        fails += 1
+        print(f"{qname:24s} no output  FAIL")
         continue
+    name = dirs[qname]
+    got = duckdb.sql(f"SELECT * FROM read_parquet('{name}*.parquet')").df()
     try:
         exp = con.sql(sqls[qname]).df()
     except Exception as e:
