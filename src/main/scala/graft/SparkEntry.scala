@@ -36,6 +36,17 @@ object SparkEntry {
   // (mergeDelta mutates the store).
   private val i1Stores = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
+  // Every store i1 creates lives until the JVM exits, when one hook deletes
+  // them all: the frame an i1 run returns scans its work copy lazily, so no
+  // earlier point is safe.
+  private val i1Made = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+  sys.addShutdownHook(i1Made.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d)))
+  private def i1TempStore(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(i1TmpBase(), prefix).toFile
+    i1Made.add(dir)
+    dir.toString
+  }
+
   /** Temp-store base dir: tmpfs when available (GRAFT_LOCAL_DIR, else
     * /dev/shm). The i1 query's timed body includes a filesystem copy of the
     * base store; on a disk-backed java.io.tmpdir that copy alone cost ~0.7 s
@@ -60,8 +71,7 @@ object SparkEntry {
       val dict = verts.select(
         concat(lit("u"), col("id").cast("string")).as("conv_id"), col("id"))
       val gBase = GraphOps.normalizeFrom(base, verts, dict)
-      val store = java.nio.file.Files
-        .createTempDirectory(i1TmpBase(), "graft_i1base").toString
+      val store = i1TempStore("graft_i1base")
       ingest.EdgeStore.write(gBase, store, buckets = 16)
       raw.where(late).write.mode("overwrite").parquet(s"$store/_i1_delta")
       raw.unpersist()
@@ -69,8 +79,7 @@ object SparkEntry {
     })
 
   private def i1CopyStore(src: String): String = {
-    val dst = java.nio.file.Files
-      .createTempDirectory(i1TmpBase(), "graft_i1work").toString
+    val dst = i1TempStore("graft_i1work")
     ingest.EdgeStore.copy(src, dst)
     dst
   }

@@ -98,7 +98,11 @@ object ArnoldiPageRank {
     var xHandle = tr0
     var (ex, dx, xNorm2, xNorm1) = {
       val r = x.agg(sum(col("x")), sum(col("dang") * col("x")),
-        sum(col("x") * col("x")), sum(abs(col("x")))).head()
+        sum(col("x") * col("x")), sum(abs(col("x"))), sum(vCol)).head()
+      // a v with no mass would make x₀ ≡ 0 and every basis vector NaN
+      val massed = r.getDouble(4) > 0
+      if (!massed) { xHandle.handle.unpersist(false); prep.close() }
+      require(massed, "the personalization puts no positive weight on the graph's vertices")
       (r.getDouble(0), r.getDouble(1), math.sqrt(r.getDouble(2)), r.getDouble(3))
     }
 

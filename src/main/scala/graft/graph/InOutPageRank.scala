@@ -87,12 +87,11 @@ object InOutPageRank {
     import spark.implicits._
     val alpha = cfg.alpha
     val beta = cfg.beta.getOrElse(alpha / 2)
-    val n = g.numVertices
     // personalization v (ppagerank.cc:91-104): carried as a column; the
     // analytic eᵀ bookkeeping generalizes with sv = eᵀv (1 for uniform)
     val hasV = personalization.isDefined
-    val vCol = if (hasV) col("v") else lit(1.0 / n)
-    RankSolve.run(g, runId, cfg.maxIter, cfg.tol, cfg.checkpointDir,
+    val vCol = if (hasV) col("v") else lit(1.0 / g.numVertices)
+    val (ranks, stats) = RankSolve.run(g, runId, cfg.maxIter, cfg.tol, cfg.checkpointDir,
         cfg.checkpointEvery, resume) { resumed =>
     val prep = PageRank.prepare(g,
       PageRankConfig(saltThreshold = cfg.saltThreshold, saltBuckets = cfg.saltBuckets))
@@ -109,14 +108,16 @@ object InOutPageRank {
           s"run iterates ${sweepCols.mkString(",")},im or ${powerCols.mkString(",")},im: " +
           "resume with the same personalization, or restart")
     }
-    def powerMode(k: RankSolve.Iteration[Dataset[VertexRank]]) =
-      new RankSolve.Iteration[Dataset[VertexRank]] {
+    def powerMode(start: DataFrame) = {
+      val k = PageRank.power(prep, start, alpha, Seq("rank" -> vCol))
+      new RankSolve.Iteration[DataFrame] {
         def step(): (Double, Double) = k.step()
         def snapshot: DataFrame = k.snapshot.withColumn("im", lit(false))
-        def result(): Dataset[VertexRank] = k.result()
+        def result(): DataFrame = k.result()
       }
+    }
     resumed.filter(_.columns.contains("rank")) match {
-      case Some(snap) => powerMode(PageRank.power(prep, snap.drop("im"), alpha, n))
+      case Some(snap) => powerMode(snap.drop("im"))
       case None =>
 
     // Inner-mode scalars: eᵀv, eᵀx, and dᵀv and dᵀy — the seeds of the
@@ -144,6 +145,8 @@ object InOutPageRank {
           case None => PageRank.dangling(g).withColumn("x", vCol)
         }
         if (hasV) sv = frame.agg(sum(col("v"))).head().getDouble(0)
+        if (!(sv > 0)) prep.close()
+        require(sv > 0, "the personalization puts no positive weight on the graph's vertices")
         sx = sv
         // init y₀ = Bx₀ = Pᵀx₀ + (dᵀx₀)v with dᵀx₀ = sx − eᵀPᵀx₀
         // (ppagerank.cc:366-377, implicit form 754-767) — ONE job whose
@@ -168,8 +171,8 @@ object InOutPageRank {
     val sweep = GraftSqlInternals.iterate(start, keys = Seq("id"))(innerStep(prep, _,
       alpha, beta, GraftSqlInternals.slotLit(dtx), GraftSqlInternals.slotLit(first), vCol))
 
-    new RankSolve.Iteration[Dataset[VertexRank]] {
-      private var power: Option[RankSolve.Iteration[Dataset[VertexRank]]] = None
+    new RankSolve.Iteration[DataFrame] {
+      private var power: Option[RankSolve.Iteration[DataFrame]] = None
 
       /** One outer inner-outer iteration: an inner Richardson sweep to η
         * (ppagerank.cc:412-465), one job per step; a sweep that converges
@@ -208,8 +211,7 @@ object InOutPageRank {
           val x = lit(alpha) * col("y") + lit(1 - alpha) * vCol
           val layout = if (hasV) carry.map(col) :+ x.as("rank")
             else Seq(col("id"), when(col("dang") === 1.0, -x).otherwise(x).as("rank"))
-          power = Some(powerMode(PageRank.power(prep, sweep.frame.select(layout: _*),
-            alpha, n)))
+          power = Some(powerMode(sweep.frame.select(layout: _*)))
           sweep.discard()
           sx = alpha * sx + (1 - alpha) * sv
         }
@@ -221,13 +223,14 @@ object InOutPageRank {
         power.fold(sweep.frame.withColumn("im", lit(true)))(_.snapshot)
       // in inner mode the rank vector is x (with y = Bx), as the reference
       // leaves the iterate in p
-      def result(): Dataset[VertexRank] = power.fold {
+      def result(): DataFrame = power.fold {
         sweep.close()
         prep.close()
-        sweep.frame.select(col("id"), col("x").as("rank")).as[VertexRank]
+        sweep.frame.select(col("id"), col("x").as("rank"))
       }(_.result())
     }
     } // power-mode snapshot, or inner mode
     } // RankSolve.run
+    (ranks.as[VertexRank], stats)
   }
 }

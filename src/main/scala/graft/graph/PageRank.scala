@@ -90,7 +90,14 @@ object PageRank {
     * (map-side partial agg absorbs hub in-degree skew).
     * ≙ MatMultTranspose at /root/reference/ppagerank.cc:301-305.
     */
-  def spmv(prep: Prepared, x: DataFrame): DataFrame = {
+  def spmv(prep: Prepared, x: DataFrame): DataFrame = spmv(prep, x, Seq("rank" -> "y"))
+
+  /** Pᵀ applied to k rank columns of x at once: `cols` maps each input
+    * column of x to its output column, (id, in₁…in_k) → (id, out₁…out_k),
+    * in one join and one hash aggregate of k sums.
+    */
+  private[graph] def spmv(prep: Prepared, x: DataFrame,
+      cols: Seq[(String, String)]): DataFrame = {
     // SHUFFLE_HASH on the rank-vector side: broadcasting x would serialize
     // O(V) bytes through the driver every iteration (kills scaling), and
     // sort-merge would re-sort the edge partitions every iteration; a
@@ -108,13 +115,13 @@ object PageRank {
             when(col("is_hub").isNotNull,
               sequence(lit(0), lit(prep.saltBuckets - 1)))
             .otherwise(array(lit(0))))
-          .select(col("id"), explode(col("salts")).as("salt"), col("rank"))
+          .select(col("id") +: explode(col("salts")).as("salt") +: cols.map(c => col(c._1)): _*)
           .hint("shuffle_hash")
         prep.joinEdges.join(xs, prep.joinEdges("src") === xs("id") &&
           prep.joinEdges("salt") === xs("salt"))
       }
-    joined.groupBy(col("dst").as("id"))
-      .agg(sum(col("weight") * col("rank")).as("y"))
+    val sums = cols.map { case (in, out) => sum(col("weight") * col(in)).as(out) }
+    joined.groupBy(col("dst").as("id")).agg(sums.head, sums.tail: _*)
   }
 
   /** Static dangling indicator (id, dang): dang = 1 iff the vertex has no
@@ -134,8 +141,10 @@ object PageRank {
       runId: String = "pr", resume: Boolean = false,
       personalization: Option[DataFrame] = None,
       warmStart: Option[DataFrame] = None): (Dataset[VertexRank], PageRankStats) = {
+    val spark = g.edges.sparkSession
+    import spark.implicits._
     val n = g.numVertices
-    RankSolve.run(g, runId, cfg.maxIter, cfg.tol, cfg.checkpointDir,
+    val (ranks, stats) = RankSolve.run(g, runId, cfg.maxIter, cfg.tol, cfg.checkpointDir,
         cfg.checkpointEvery, resume) { resumed =>
     val prep = prepare(g, cfg)
 
@@ -152,7 +161,6 @@ object PageRank {
     // never ambiguous. The personalized path keeps the explicit (dang, v)
     // columns: with a sparse v a rank can be exactly 0.0, which cannot carry
     // a sign, so packing would silently mislabel a dangling vertex.
-    val packed = !hasV
 
     // Warm start (incremental re-rank after a graph delta): x₀ = previous
     // ranks where known, teleport vector elsewhere. No explicit
@@ -161,6 +169,7 @@ object PageRank {
     // eᵀx = 1 simplex exactly (αPᵀx sums to α(eᵀx − dᵀx) and
     // ω = 1 − α(eᵀx − dᵀx) restores the total); the power method then
     // contracts from wherever the warm vector sits.
+    val fallback = if (hasV) col("v") else lit(1.0 / n)
     val initial: DataFrame = {
       val base = dangling(g)
       val withV = vDf match {
@@ -168,7 +177,6 @@ object PageRank {
           .select(col("id"), col("dang"), coalesce(col("v"), lit(0.0)).as("v"))
         case None => base
       }
-      val fallback = if (hasV) col("v") else lit(1.0 / n)
       val x0 = warmStart match {
         case Some(w0) =>
           // non-positive warm ranks are treated as missing: a sane previous
@@ -181,9 +189,9 @@ object PageRank {
         case None =>
           withV.select(withV.columns.map(col).toSeq :+ fallback.as("rank"): _*)
       }
-      if (packed) x0.select(col("id"),
+      if (hasV) x0
+      else x0.select(col("id"),
         when(col("dang") === 1.0, -col("rank")).otherwise(col("rank")).as("rank"))
-      else x0
     }
     // a snapshot resumes only into the representation that wrote it
     val start = resumed.fold(initial) { snap =>
@@ -193,94 +201,105 @@ object PageRank {
           "personalization, or restart")
       snap
     }
-    power(prep, start, cfg.alpha, n)
+    power(prep, start, cfg.alpha, Seq("rank" -> fallback))
     } // RankSolve.run
+    (ranks.as[VertexRank], stats)
   }
 
-  /** The power kernel over a prepared start frame, in either iterate
-    * layout: packed `(id, ±rank)` (uniform teleport 1/n, the dangling bit in
-    * the sign) or personalized `(id, dang, v, rank)`. Shared by `run` and
-    * InOutPageRank's power phase; one job measures the start's dᵀx and eᵀx,
-    * then every `step` is one job. `result` closes the loop and `prep`.
+  /** The power kernel over a prepared start frame, for k rank columns at
+    * once. `teleport` names each rank column of `start` with its teleport
+    * vector vⱼ, a column over the frame. Two iterate layouts:
+    *  - packed `(id, ±rank)`, one column with uniform teleport 1/n and the
+    *    dangling bit in the sign (a frame without `dang`);
+    *  - `(id, dang, [v,] r₁…r_k)`: personalized `run` is k = 1 with
+    *    v = `col("v")`, multi-seed PPR one indicator column per seed.
+    * Shared by `run`, `runMultiSeed` and InOutPageRank's power phase. One
+    * job measures the start's dᵀxⱼ and eᵀxⱼ and each vⱼ's mass (a vⱼ with
+    * none fails the solve, after releasing the loop and `prep`); then every
+    * `step` is ONE job — one SpMV join and one aggregate for all k columns —
+    * and returns (max residual, mean eᵀx) over the columns. `result` is
+    * `(id, r₁…r_k)` with the rank magnitudes, and closes the loop and `prep`.
     */
   private[graph] def power(prep: Prepared, start: DataFrame, alpha: Double,
-      n: Long): RankSolve.Iteration[Dataset[VertexRank]] = {
-    val spark = start.sparkSession
-    import spark.implicits._
-    val packed = !start.columns.contains("v")
+      teleport: Seq[(String, Column)]): RankSolve.Iteration[DataFrame] = {
+    val packed = !start.columns.contains("dang")
+    val ranks = teleport.map(_._1)
+    val k = ranks.size
 
     // dangling indicator + magnitude of the CURRENT iterate row, under
     // either representation
     def dangOf(rank: Column): Column =
       if (packed) when(rank < 0, 1.0).otherwise(0.0) else col("dang")
     def magOf(rank: Column): Column = if (packed) abs(rank) else rank
+    def p(j: Int) = col(s"p$j") // column j of the previous iterate
+    def nx(j: Int) = col(s"n$j") // column j of the next iterate, magnitude
 
-    // ω = 1 − ‖αPᵀx‖₁ = 1 − α·(eᵀx − dᵀx), with eᵀx and dᵀx measured as side
-    // scalars of the previous iteration's job — same self-correcting fold as
-    // the reference (ppagerank.cc:307-315). The driver sets the slot before
-    // each step; the step itself is planned once, below.
-    val omega = new ScalarSlot(0.0)
-    val vCol = if (packed) lit(1.0 / n) else col("v")
-    val carry = if (packed) Seq(col("id")) else Seq(col("id"), col("dang"), col("v"))
+    // ωⱼ = 1 − ‖αPᵀxⱼ‖₁ = 1 − α·(eᵀxⱼ − dᵀxⱼ), with eᵀxⱼ and dᵀxⱼ measured
+    // as side scalars of the previous iteration's job — same self-correcting
+    // fold as the reference (ppagerank.cc:307-315). The driver sets the
+    // slots before each step; the step itself is planned once, below.
+    val omega = Seq.fill(k)(new ScalarSlot(0.0))
+    val carry = start.columns.toSeq.filterNot(ranks.contains).map(col)
     val loop = GraftSqlInternals.iterate(start, keys = Seq("id")) { frame =>
-      val contrib = spmv(prep,
-          frame.select(col("id"), magOf(col("rank")).as("rank")))
-        .withColumnRenamed("y", "yraw")
+      val contrib = spmv(prep, frame.select(col("id") +: ranks.map(r => magOf(col(r)).as(r)): _*),
+        ranks.indices.map(j => ranks(j) -> s"y$j"))
       // the new magnitude is always positive; packed mode re-applies the
       // (static) dangling sign carried by the previous rank value
-      val rankPos = lit(alpha) * coalesce(col("yraw"), lit(0.0)) +
-        GraftSqlInternals.slotLit(omega) * vCol
-      val rankStored = if (packed)
-        when(col("rank_prev") < 0, -col("rank_pos")).otherwise(col("rank_pos"))
-      else col("rank_pos")
-      frame.select(carry :+ col("rank").as("rank_prev"): _*)
+      val next = teleport.indices.map(j => (lit(alpha) * coalesce(col(s"y$j"), lit(0.0)) +
+        GraftSqlInternals.slotLit(omega(j)) * teleport(j)._2).as(s"n$j"))
+      def stored(j: Int) = if (packed) when(p(j) < 0, -nx(j)).otherwise(nx(j)) else nx(j)
+      val metrics = ranks.indices.flatMap(j =>
+        Seq(sum(abs(nx(j) - magOf(p(j)))), sum(dangOf(p(j)) * nx(j)), sum(nx(j))))
+      frame.select(carry ++ ranks.indices.map(j => col(ranks(j)).as(s"p$j")): _*)
         .join(contrib.hint("shuffle_hash"), Seq("id"), "left")
-        .withColumn("rank_pos", rankPos)
-        // residual ‖xₖ₊₁−xₖ‖₁, next dᵀx and eᵀx are observed as accumulator
-        // side-effects of the SAME tasks that materialize the iterate (no
-        // dedicated aggregation stage, no read-back of the fresh cache)
-        .observe("it",
-          sum(abs(col("rank_pos") - magOf(col("rank_prev")))).as("delta"),
-          sum(dangOf(col("rank_prev")) * col("rank_pos")).as("dtx"),
-          sum(col("rank_pos")).as("sx"))
-        .select(carry :+ rankStored.as("rank"): _*)
+        .select(carry ++ ranks.indices.map(p) ++ next: _*)
+        // per column: residual ‖xₖ₊₁−xₖ‖₁, next dᵀx and eᵀx, observed as
+        // accumulator side-effects of the SAME tasks that materialize the
+        // iterate (no dedicated aggregation stage, no read-back of the
+        // fresh cache)
+        .observe("it", metrics.head, metrics.tail: _*)
+        .select(frame.columns.toSeq.map { c =>
+          val j = ranks.indexOf(c)
+          if (j < 0) col(c) else stored(j).as(c)
+        }: _*)
     }
 
-    // scalars for iteration 0 / resume: dᵀx and eᵀx (one extra job, once)
-    val r0 = loop.frame.agg(sum(dangOf(col("rank")) * magOf(col("rank"))),
-      sum(magOf(col("rank")))).head()
-    var dtx = r0.getDouble(0)
-    var sx = r0.getDouble(1)
+    // scalars for iteration 0 / resume: dᵀxⱼ, eᵀxⱼ and eᵀvⱼ (one job, once)
+    val m0 = teleport.flatMap { case (r, v) =>
+      Seq(sum(dangOf(col(r)) * magOf(col(r))), sum(magOf(col(r))), sum(v)) }
+    val r0 = loop.frame.agg(m0.head, m0.tail: _*).head()
+    val dtx = Array.tabulate(k)(j => r0.getDouble(3 * j))
+    val sx = Array.tabulate(k)(j => r0.getDouble(3 * j + 1))
+    val massless = ranks.indices.filterNot(j => r0.getDouble(3 * j + 2) > 0).map(ranks)
+    if (massless.nonEmpty) { loop.discard(); prep.close() }
+    require(massless.isEmpty, s"no teleport mass for ${massless.mkString(", ")}: the " +
+      "personalization puts no positive weight on the graph's vertices, or a seed is not one")
 
-    new RankSolve.Iteration[Dataset[VertexRank]] {
+    new RankSolve.Iteration[DataFrame] {
       def step(): (Double, Double) = {
-        omega.value = 1.0 - alpha * (sx - dtx)
+        for (j <- 0 until k) omega(j).value = 1.0 - alpha * (sx(j) - dtx(j))
         // ONE job: the next iterate materialized and lineage-truncated, the
         // previous iterate's blocks retired
         val row = loop.step()("it")
-        dtx = row.getDouble(1)
-        sx = row.getDouble(2)
-        (row.getDouble(0), sx)
+        for (j <- 0 until k) { dtx(j) = row.getDouble(3 * j + 1); sx(j) = row.getDouble(3 * j + 2) }
+        ((0 until k).map(j => row.getDouble(3 * j)).max, sx.sum / k)
       }
       def snapshot: DataFrame = loop.frame
-      def result(): Dataset[VertexRank] = {
+      def result(): DataFrame = {
         loop.close()
         prep.close() // the iterate is lineage-truncated — independent of prep's caches
-        loop.frame.select(col("id"), magOf(col("rank")).as("rank")).as[VertexRank]
+        loop.frame.select(col("id") +: ranks.map(r => magOf(col(r)).as(r)): _*)
       }
     }
   }
 
   /** Batched multi-seed personalized PageRank: k PPR vectors (teleport
     * vector = indicator of one seed vertex each) solved SIMULTANEOUSLY as k
-    * rank columns of one frame — one edge join and one materializing job
-    * per iteration TOTAL, not per seed. The reference threads a single
-    * `-pvec` through one solve (ppagerank.cc:91-104); at web scale the SpMV
-    * join dominates the iteration, so batching k seeds cuts per-seed cost
-    * ~k-fold (the join output carries k fused multiply-adds instead of 1 —
-    * all inside one whole-stage-codegen span). Per-seed scalars (residual,
-    * dangling mass, sum) ride as 3k CollectMetrics accumulators on the
-    * materializing tasks, exactly like the single-vector kernel.
+    * rank columns of the power kernel's frame — one edge join and one
+    * materializing job per iteration TOTAL, not per seed. The reference
+    * threads a single `-pvec` through one solve (ppagerank.cc:91-104); at
+    * web scale the SpMV join dominates the iteration, so batching k seeds
+    * cuts per-seed cost ~k-fold.
     *
     * Stops when EVERY seed's L1 residual is below tol. Returns the long
     * form (id, seed, rank).
@@ -291,94 +310,29 @@ object PageRank {
     val k = seeds.size
     require(k >= 1 && k <= 64, s"1..64 seeds supported, got $k")
     require(seeds.distinct.size == k, "duplicate seeds")
-    RankSolve.run(g, runId, cfg.maxIter, cfg.tol, cfg.checkpointDir,
-        cfg.checkpointEvery, resume) { resumed =>
-    def vCol(j: Int): Column =
-      when(col("id") === seeds(j), 1.0).otherwise(0.0)
     // rank columns are named BY SEED ID (r<seed>, not r<index>): the column
     // names travel into every checkpoint, so a resume validates the exact
     // seed set, not just its size — resuming k different seeds against k
     // old columns would silently start from an unrelated state
-    def rc(j: Int): String = s"r${seeds(j)}"
-    val stateCols = "id" +: "dang" +: seeds.indices.map(rc)
-
-    // Resume (north rule, at parity with the single-vector kernel): the k
-    // rank columns are the whole state; per-seed scalars are re-measured.
-    // x₀_j = v_j on a cold start (the reference's personalized start,
-    // ppagerank.cc:291-295).
-    val start = resumed match {
-      case Some(snap) =>
-        require(snap.columns.toSet == stateCols.toSet,
-          s"checkpoint $runId carries columns ${snap.columns.sorted.mkString(",")} " +
-            s"but seeds ${seeds.mkString(",")} were requested — seed set must match")
-        snap.select(stateCols.map(col): _*)
-      case None =>
-        dangling(g).select(col("id") +: col("dang") +: Seq.tabulate(k)(j => vCol(j).as(rc(j))): _*)
-    }
-
-    // per-seed scalars, measured on the start frame before anything is
-    // prepared or cached: x₀_j sums to 1 iff the seed is in the vertex domain
-    val aggCols0 = Seq.tabulate(k)(j => sum(col("dang") * col(rc(j)))) ++
-      Seq.tabulate(k)(j => sum(col(rc(j))))
-    val r0 = start.agg(aggCols0.head, aggCols0.tail: _*).head()
-    val dtx = Array.tabulate(k)(j => r0.getDouble(j))
-    val sx = Array.tabulate(k)(j => r0.getDouble(k + j))
-    // a seed outside the vertex domain would make x₀ ≡ 0 for that column:
-    // the first residual is 0 and the solver would "converge" to a silent
-    // all-zero PPR vector — fail loudly instead. (On resume the columns are
-    // converged iterates, not indicators, so the x₀-sum check only applies
-    // to a cold start.)
-    if (resumed.isEmpty) {
-      val missing = seeds.indices.filter(j => sx(j) != 1.0).map(seeds)
-      require(missing.isEmpty,
-        s"seed(s) not in vertex domain: ${missing.mkString(", ")}")
-    }
-
-    val prep = prepare(g, cfg)
-    // ω_j per seed: driver-set slots read by a step planned once per solve
-    val omega = Array.fill(k)(new ScalarSlot(0.0))
-    val loop = GraftSqlInternals.iterate(start, keys = Seq("id")) { frame =>
-      // one SpMV join for ALL seeds: k sums per dst in one hash aggregate
-      val x = frame.select(col("id") +: Seq.tabulate(k)(j => col(rc(j))): _*)
-        .hint("shuffle_hash")
-      val contrib = prep.joinEdges.join(x, prep.joinEdges("src") === x("id"))
-        .groupBy(col("dst").as("cid"))
-        .agg(sum(col("weight") * col(rc(0))).as("y0"),
-          Seq.tabulate(k - 1)(j =>
-            sum(col("weight") * col(rc(j + 1))).as(s"y${j + 1}")): _*)
-      val joined = frame.select(
-        col("id") +: col("dang") +: Seq.tabulate(k)(j => col(rc(j)).as(s"p$j")): _*)
-        .join(contrib.hint("shuffle_hash"), col("id") === col("cid"), "left")
-      val rankCols = Seq.tabulate(k) { j =>
-        (lit(cfg.alpha) * coalesce(col(s"y$j"), lit(0.0)) +
-          GraftSqlInternals.slotLit(omega(j)) * vCol(j)).as(rc(j))
+    val teleport = seeds.map(s => s"r$s" -> when(col("id") === s, 1.0).otherwise(0.0))
+    val (ranks, stats) = RankSolve.run(g, runId, cfg.maxIter, cfg.tol, cfg.checkpointDir,
+        cfg.checkpointEvery, resume) { resumed =>
+      // the k rank columns are the whole state; x₀_j = v_j on a cold start
+      // (the reference's personalized start, ppagerank.cc:291-295)
+      val stateCols = "id" +: "dang" +: teleport.map(_._1)
+      val start = resumed match {
+        case Some(snap) =>
+          require(snap.columns.toSet == stateCols.toSet,
+            s"checkpoint $runId carries columns ${snap.columns.sorted.mkString(",")} " +
+              s"but seeds ${seeds.mkString(",")} were requested — seed set must match")
+          snap.select(stateCols.map(col): _*)
+        case None =>
+          dangling(g).select(col("id") +: col("dang") +: teleport.map { case (r, v) => v.as(r) }: _*)
       }
-      val metricCols =
-        Seq.tabulate(k)(j => sum(abs(col(rc(j)) - col(s"p$j"))).as(s"d$j")) ++
-        Seq.tabulate(k)(j => sum(col("dang") * col(rc(j))).as(s"m$j")) ++
-        Seq.tabulate(k)(j => sum(col(rc(j))).as(s"s$j"))
-      joined.select(col("id") +: col("dang") +:
-          (rankCols ++ Seq.tabulate(k)(j => col(s"p$j"))): _*)
-        .observe("it", metricCols.head, metricCols.tail: _*)
-        .select(col("id") +: col("dang") +: Seq.tabulate(k)(j => col(rc(j))): _*)
+      power(prepare(g, cfg), start, cfg.alpha, teleport)
     }
-    new RankSolve.Iteration[DataFrame] {
-      def step(): (Double, Double) = {
-        for (j <- 0 until k) omega(j).value = 1.0 - cfg.alpha * (sx(j) - dtx(j))
-        val row = loop.step()("it")
-        for (j <- 0 until k) { dtx(j) = row.getDouble(k + j); sx(j) = row.getDouble(2 * k + j) }
-        ((0 until k).map(j => row.getDouble(j)).max, sx.sum / k)
-      }
-      def snapshot: DataFrame = loop.frame
-      def result(): DataFrame = {
-        loop.close()
-        prep.close()
-        // long form (id, seed, rank)
-        val stackArgs = seeds.map(s => s"${s}L, `r$s`").mkString(", ")
-        loop.frame.select(col("id"),
-          expr(s"stack($k, $stackArgs)").as(Seq("seed", "rank")))
-      }
-    }
-    } // RankSolve.run
+    // long form (id, seed, rank)
+    val stackArgs = seeds.map(s => s"${s}L, `r$s`").mkString(", ")
+    (ranks.select(col("id"), expr(s"stack($k, $stackArgs)").as(Seq("seed", "rank"))), stats)
   }
 }

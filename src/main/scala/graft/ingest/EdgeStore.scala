@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -290,14 +290,19 @@ object EdgeStore {
       spark.conf.get("spark.sql.shuffle.partitions", "200").toLong,
       dataBytes(spark, path) / (8L << 20) + 1)).toInt
     graft.util.ShuffleWidth.withWidth(spark, mergeWidth) {
-    // bucket-membership bitmask: rides as a `bit_or` observe accumulator on
-    // the jobs that materialize data anyway (no dedicated distinct+collect
-    // job); stores with > 64 buckets fall back to an explicit collect
-    val maskable = buckets <= 64
-    def bucketMask(b: org.apache.spark.sql.Column) =
-      bit_or(call_function("shiftleft", lit(1L), b))
-    def maskToBuckets(m: Long): Seq[Int] =
-      (0 until buckets).filter(b => ((m >>> b) & 1L) == 1L)
+    // bucket-membership bitmask: ⌈buckets/64⌉ `bit_or` words, word w
+    // holding buckets 64w…64w+63, ride as observe accumulators on the jobs
+    // that materialize data anyway (no dedicated distinct+collect job). A
+    // word no row reached is null.
+    val words = (buckets + 63) / 64
+    def bucketMask(b: Column): Seq[Column] =
+      Seq.tabulate(words)(w => bit_or(when(b.between(64 * w, 64 * w + 63),
+        call_function("shiftleft", lit(1L), b - 64 * w))).as(s"mask$w"))
+    def maskToBuckets(r: Row, at: Int): Seq[Int] =
+      (0 until buckets).filter { b =>
+        val w = at + b / 64
+        !r.isNullAt(w) && ((r.getLong(w) >>> (b % 64)) & 1L) == 1L
+      }
     val delta = deltaRaw
       .select(col("src").cast("long"), col("dst").cast("long"),
         col("weight").cast("double"))
@@ -307,19 +312,11 @@ object EdgeStore {
     // ---- job 1: touched srcs (cached for the joins) + their count and
     // bucket set as observe side-metrics of the same materialization ----
     val affSrcsPre = delta.select(col("src")).distinct()
-    val (affT, affObs) = GI.truncateObserved(
-      if (maskable)
-        affSrcsPre.observe("aff", count(lit(1)).as("n"),
-          bucketMask(pmod(xxhash64(col("src")), lit(buckets)).cast("int")).as("mask"))
-      else affSrcsPre.observe("aff", count(lit(1)).as("n")))
+    val (affT, affObs) = GI.truncateObserved(affSrcsPre.observe("aff",
+      count(lit(1)).as("n"),
+      bucketMask(pmod(xxhash64(col("src")), lit(buckets)).cast("int")): _*))
     val nTouched = affObs("aff").getLong(0)
-    val affBuckets: Seq[Int] =
-      if (maskable) {
-        if (nTouched == 0) Seq.empty
-        else maskToBuckets(affObs("aff").getLong(1))
-      } else affT.df
-        .select(pmod(xxhash64(col("src")), lit(buckets)).cast("int").as("bucket"))
-        .distinct().as[Int].collect().toSeq
+    val affBuckets = maskToBuckets(affObs("aff"), 1)
     // broadcast the touched-src set only while it is actually small; a bulk
     // delta (e.g. a backfill touching 10^8 sources) must shuffle-join or the
     // broadcast would OOM the driver
@@ -377,12 +374,10 @@ object EdgeStore {
     val unioned0 = keepRaw.unionByName(touchedRaw).withColumn("tbl", lit("raw"))
       .unionByName(
         keepNorm.unionByName(touchedNorm).withColumn("tbl", lit("norm")))
+    val presentMask = bucketMask(when(col("tbl") === "raw",
+      pmod(xxhash64(col("src")), lit(buckets)).cast("int")))
     val (mergedT, mergedObs) = GI.truncateObserved(
-      if (maskable)
-        unioned0.observe("present",
-          bucketMask(when(col("tbl") === "raw",
-            pmod(xxhash64(col("src")), lit(buckets)).cast("int"))).as("mask"))
-      else unioned0.observe("present", count(lit(1)).as("n")))
+      unioned0.observe("present", presentMask.head, presentMask.tail: _*))
     val merged = mergedT.df
 
     // Rewrite only the affected bucket dirs (dynamic partition overwrite);
@@ -398,12 +393,7 @@ object EdgeStore {
     // dynamic overwrite replaces only partitions PRESENT in the written
     // frame — an affected bucket whose rows were all deleted must be
     // cleared explicitly or its stale files would survive
-    val presentBuckets: Set[Int] =
-      if (maskable) Option(mergedObs("present").get(0))
-        .map(m => maskToBuckets(m.asInstanceOf[Long]).toSet).getOrElse(Set.empty)
-      else merged.where(col("tbl") === "raw")
-        .select(pmod(xxhash64(col("src")), lit(buckets)).cast("int").as("b"))
-        .distinct().as[Int].collect().toSet
+    val presentBuckets = maskToBuckets(mergedObs("present"), 0).toSet
     val emptied = affBuckets.filterNot(presentBuckets)
     for (t <- Seq("raw", "norm"); b <- emptied) {
       val (fs, p) = hfs(spark, s"$path/data/tbl=$t/bucket=$b")

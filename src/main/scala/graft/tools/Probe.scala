@@ -25,10 +25,11 @@ import graft.util.ShuffleWidth
   *
   *  - `block [passes] [q,…]`: the bench query block (or the named queries),
   *    timed per pass, with each query's tally;
-  *  - `solve a3|a4|power [reps] [iters] [sample] [synth:<n>]`: one solver on
-  *    the sf graph (or a `TranscriptGen` graph of n conversations), to tol
-  *    1e-7 or for exactly `iters` outer iterations; `sample` profiles the
-  *    driver thread of the last rep by stack sampling;
+  *  - `solve a3|a4|power|ppr [reps] [iters] [sample] [synth:<n>]`: one
+  *    solver on the sf graph (or a `TranscriptGen` graph of n
+  *    conversations), to tol 1e-7 or for exactly `iters` outer iterations
+  *    (`ppr` is a5's multi-seed solve, seeds 1 and 5); `sample` profiles
+  *    the driver thread of the last rep by stack sampling;
   *  - `scale <store> <threads> [reps] [iters] [nConv]`: Bench's fixed-work
   *    scaling sample on a durable EdgeStore (built first if absent);
   *  - `plan <outDir> <suffix> <name,…>`: the formatted physical plan of each
@@ -47,7 +48,7 @@ import graft.util.ShuffleWidth
 object Probe {
 
   val usage: String = "usage: Probe block [passes] [q,...] | " +
-    "solve a3|a4|power [reps] [iters] [sample] [synth:<n>] | " +
+    "solve a3|a4|power|ppr [reps] [iters] [sample] [synth:<n>] | " +
     "scale <store> <threads> [reps] [iters] [nConv] | plan <outDir> <suffix> <name,...>"
 
   private val stepShapes = Set("a3_inner_step", "a4_step")
@@ -75,7 +76,7 @@ object Probe {
       val only = rest.lift(1).fold(Set.empty[String])(_.split(',').toSet)
       require(only.forall(SparkEntry.queries.contains))
       () => block(passes, only)
-    case "solve" :: which :: rest if Set("a3", "a4", "power")(which) =>
+    case "solve" :: which :: rest if Set("a3", "a4", "power", "ppr")(which) =>
       val (flags, nums) = rest.partition(a => a == "sample" || a.startsWith("synth:"))
       require(nums.size <= 2)
       val synth = flags.collectFirst { case s if s.startsWith("synth:") => s.drop(6).toLong }
@@ -233,6 +234,9 @@ object Probe {
       case "power" =>
         val c = PageRankConfig(tol = tol)
         PageRank.run(g, iters.fold(c)(n => c.copy(maxIter = n)))._2
+      case "ppr" =>
+        val c = PageRankConfig(tol = tol)
+        PageRank.runMultiSeed(g, Seq(1L, 5L), iters.fold(c)(n => c.copy(maxIter = n)))._2
     }
     for (r <- 1 to reps) {
       val (st, t) = tally(spark.sparkContext)(if (sample && r == reps) sampled(once()) else once())

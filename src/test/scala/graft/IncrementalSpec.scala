@@ -227,15 +227,14 @@ class IncrementalSpec extends AnyFunSuite with SparkTestBase {
     all.unpersist()
   }
 
-  test("mergeDelta with >64 buckets (non-bitmask path) equals full rebuild") {
+  test("mergeDelta with >64 buckets (two-word bucket mask) equals full rebuild") {
     val all = rawEdges(300).persist()
     val late = pmod(col("src") + col("dst"), lit(5)) === 0
     val base = all.where(!late)
     val delta = all.where(late)
     assert(!delta.isEmpty)
     val store = tmp("inc_bigbuckets")
-    // 128 buckets exceeds the Long bitmask the observe fast path rides on —
-    // exercises the explicit distinct+collect fallback
+    // 128 buckets need two Long words of the observed bucket mask
     EdgeStore.write(buildGraph(base), store, buckets = 128)
     val stats = EdgeStore.mergeDelta(spark, store, delta)
     assert(stats.totalBuckets == 128)

@@ -51,6 +51,13 @@ class PageRankSpec extends AnyFunSuite with SparkTestBase {
     val a = plain.collect().map(r => r.id -> r.rank).toMap
     val b = salted.collect().map(r => r.id -> r.rank).toMap
     a.foreach { case (id, r) => assert(math.abs(b(id) - r) < 1e-12) }
+    // multi-seed PPR runs on the same kernel, so it salts too
+    def multiSeed(salt: Int) = PageRank.runMultiSeed(g, Seq(0L, 3L), PageRankConfig(
+        alpha = 0.85, tol = 0.0, maxIter = 15, saltThreshold = salt, saltBuckets = 4))._1
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val (mp, ms) = (multiSeed(0), multiSeed(1))
+    assert(mp.keySet == ms.keySet)
+    mp.foreach { case (k, r) => assert(math.abs(ms(k) - r) < 1e-12, s"$k: salted ${ms(k)} vs $r") }
   }
 
   test("resuming a personalized run's snapshot without personalization is refused") {

@@ -147,6 +147,14 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     assert(plans == 1, s"step planned $plans times")
   }
 
+  test("multi-seed PPR runs on PageRank's kernel: one plan, one job per iteration plus one") {
+    val ((_, st), jobs, plans) = jobsAndPlans("PageRank.scala")(
+      PageRank.runMultiSeed(generated, Seq(1L, 5L), PageRankConfig(tol = 1e-6)))
+    assert(st.reason.converged && st.iterations > 5, s"degenerate solve: $st")
+    assert(jobs == st.iterations + 1, s"$jobs jobs for ${st.iterations} iterations")
+    assert(plans == 1, s"step planned $plans times")
+  }
+
   test("InOut plans its inner sweep once, and PageRank's kernel once when it turns to power") {
     import graft.graph.InOutPageRank
     val (n, edges) = GraphFixtures.g1 // three inner sweeps, then power iterations

@@ -259,6 +259,38 @@ class SolversSpec extends AnyFunSuite with SparkTestBase {
       s"cached RDDs ${before.toSeq.sorted} -> ${after.toSeq.sorted}")
   }
 
+  test("a personalization with no mass, or an unknown seed, is a require error " +
+      "that leaves nothing cached") {
+    import spark.implicits._
+    val (n, edges) = GraphFixtures.g2
+    val g = GraphFixtures.linkGraph(spark, n, edges)
+    val zero = (0 until n).map(i => (i.toLong, 0.0)).toDF("id", "v")
+    val unknown = Seq((999L, 1.0)).toDF("id", "v") // not a vertex of g
+    for (salt <- Seq(0, 1); (vName, v) <- Seq("zero" -> zero, "unknown seed" -> unknown)) {
+      val pr = PageRankConfig(alpha = 0.85, tol = 1e-8, maxIter = 5,
+        saltThreshold = salt, saltBuckets = 4)
+      val solves = Seq[(String, () => Any)](
+        "power" -> (() => PageRank.run(g, pr, personalization = Some(v))),
+        "inout" -> (() => InOutPageRank.run(g, InOutPageRank.InOutConfig(maxIter = 5,
+          saltThreshold = salt, saltBuckets = 4), personalization = Some(v))),
+        "arnoldi" -> (() => ArnoldiPageRank.run(g, ArnoldiPageRank.ArnoldiConfig(
+          maxRestarts = 5, k = 4, saltThreshold = salt, saltBuckets = 4),
+          personalization = Some(v))),
+        "multi-seed" -> (() => PageRank.runMultiSeed(g, Seq(0L, 999L), pr)))
+      for ((name, solve) <- solves if vName == "unknown seed" || name != "multi-seed") {
+        val before = spark.sparkContext.getPersistentRDDs.keySet
+        val e = intercept[IllegalArgumentException](solve())
+        assert(e.getMessage.contains("no positive weight on the graph's vertices"),
+          s"$name, $vName, salt $salt: ${e.getMessage}")
+        // compared by RDD id: the registry holds RDDs weakly, so a
+        // collection can only shrink it
+        val after = spark.sparkContext.getPersistentRDDs.keySet
+        assert(after.subsetOf(before), s"$name, $vName, salt $salt: cached RDDs " +
+          s"${before.toSeq.sorted} -> ${after.toSeq.sorted}")
+      }
+    }
+  }
+
   test("arnoldi at alpha=0.95 tol=1e-7 converges (test_script config; " +
       "fast-GS must escalate to CGS2 on stagnation, not spin)") {
     // regression: the analytic-β fast path stagnated at 1.8e-7 on a
