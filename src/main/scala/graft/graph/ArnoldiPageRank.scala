@@ -1,6 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSqlInternals}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSqlInternals, ScalarSlot}
+import org.apache.spark.sql.catalyst.expressions.KnownNotNull
 import org.apache.spark.sql.functions._
 
 import graft.model._
@@ -17,10 +18,17 @@ import graft.util.SmallSvd
   * SmallSvd), and restart from x = V·v_min (645-647). Convergence:
   * ‖Mx − x‖₁ / ‖x‖₁ < tol (649-657).
   *
-  * Spark shape: the k basis vectors live as k columns of ONE id-aligned
-  * frame (never k separate shuffles); each Arnoldi step is one SpMV job plus
-  * two batched-dot-products jobs (VecMTDot ≙ a single multi-sum aggregate).
-  * The second dot pass is CGS2 re-orthogonalization ("twice is enough") —
+  * Spark shape: ONE fixed-shape iterate (id, dang, [v,] b0…bk, w) — the
+  * basis vectors as columns of one id-aligned frame (never k separate
+  * shuffles) beside a work column w — and three step kinds, each planned
+  * once per solve (`GraftSqlInternals.iterate`) and run as ONE job:
+  * `extend` (finalize b_n, then w = M·b_n with every dot in one observe:
+  * VecMTDot ≙ a multi-sum aggregate), `correct` and `combine` (the
+  * restart). Per-step scalars are [[Slots]]; a column at or past the step
+  * index n is skipped with `when`, never weighted by 0: an unbuilt column
+  * is null, and 0·null is null. Between restarts w holds x; a snapshot is
+  * (id, dang, [v,] x).
+  * The correct step is CGS2 re-orthogonalization ("twice is enough") —
   * the reference's single-pass classical Gram-Schmidt (VecMTDot + VecMAXPY,
   * ppagerank.cc:573-587) loses orthogonality near convergence and floors
   * the residual around 1e-10; the repeat pass pushes the attainable floor
@@ -51,18 +59,88 @@ object ArnoldiPageRank {
       checkpointDir: Option[String] = None,
       checkpointEvery: Int = 5)
 
-  /** w = M x for column `xc` of `frame` (PageRankMult,
-    * ppagerank.cc:692-718): w = αPᵀx + teleport·v, with the scalar
-    * teleport = α·dᵀx + (1−α)·eᵀx. Pure plan transformation (no action):
-    * adds column `w`. Shared with tools.Probe (plan).
+  /** The kept steps' scalars, set before each job: the pending column n
+    * (= the projections taken out of w), projection coefficients p, divisor
+    * div (β, or ‖x‖₂ for b0), M·b_n's teleport α·dᵀb_n + (1−α)·eᵀb_n, and
+    * the restart's coefficients of x (xs) and of its residual (rs).
     */
-  def mMult(prep: PageRank.Prepared, frame: DataFrame, xc: String, alpha: Double,
-      teleport: Column, vCol: Column): DataFrame = {
-    val yraw = PageRank.spmv(prep,
-      frame.select(col("id"), col(xc).as("rank"))).withColumnRenamed("y", "yraw")
-    frame.join(yraw.hint("shuffle_hash"), Seq("id"), "left")
-      .withColumn("w", lit(alpha) * coalesce(col("yraw"), lit(0.0)) + teleport * vCol)
-      .drop("yraw")
+  private[graft] final class Slots(val k: Int) {
+    val n, div, teleport = new ScalarSlot(0.0)
+    val p, xs = Seq.fill(k)(new ScalarSlot(0.0))
+    val rs = Seq.fill(k + 1)(new ScalarSlot(0.0))
+  }
+
+  private val (extendKind, correctKind, restartKind) = (0, 1, 2)
+
+  private def b(i: Int): Column = col(s"b$i")
+  private def slot(s: ScalarSlot): Column = GraftSqlInternals.slotLit(s)
+  private def carried(frame: DataFrame): Seq[Column] =
+    frame.columns.toSeq.takeWhile(_ != "b0").map(col)
+
+  /** `c`, typed non-null: a sum that reads only built basis columns. */
+  private def notNull(c: Column): Column =
+    GraftSqlInternals.columnOf(KnownNotNull(GraftSqlInternals.expressionOf(c)))
+
+  /** w − Σ_{l<n} p_l·b_l, subtracted in column order; a column at or past n
+    * subtracts 0.0.
+    */
+  private def projected(s: Slots): Column = notNull((0 until s.k).foldLeft(col("w")) {
+    (acc, l) => acc - when(slot(s.n) > l, slot(s.p(l)) * b(l)).otherwise(0.0)
+  })
+
+  private def pending(s: Slots): Column = projected(s) / slot(s.div)
+
+  /** Observes "dots" of column c: bᵢᵀc for every basis column (the driver
+    * reads i ≤ n), ‖c‖², eᵀc and dᵀc.
+    */
+  private def dots(frame: DataFrame, c: Column, k: Int): DataFrame = {
+    val sums = (0 to k).map(i => sum(b(i) * c)) ++
+      Seq(sum(c * c), sum(c), sum(col("dang") * c))
+    frame.observe("dots", sums.head, sums.tail: _*)
+  }
+
+  /** The iterate of a restart vector (id, dang, [v,] x): x in w, and
+    * unbuilt (null) basis columns, nullable as extend's divisions are.
+    * Shared with tools.Probe (plan).
+    */
+  private[graft] def iterateOf(x: DataFrame, k: Int): DataFrame =
+    x.select(x.columns.toSeq.filter(_ != "x").map(col) ++
+      (0 to k).map(i => lit(null).cast("double").as(s"b$i")) :+ col("x").as("w"): _*)
+
+  /** The extend step: b_n = (w − Σ_{l<n} p_l·b_l)/div, then w = M·b_n =
+    * αPᵀb_n + teleport·v (PageRankMult, ppagerank.cc:692-718). Shared with
+    * tools.Probe (plan).
+    */
+  private[graft] def extend(prep: PageRank.Prepared, frame: DataFrame, alpha: Double,
+      s: Slots, vCol: Column): DataFrame = {
+    val carry = carried(frame)
+    val cur = pending(s)
+    val y = PageRank.spmv(prep, frame.select(col("id"), cur.as("rank")))
+    val w = lit(alpha) * coalesce(col("y"), lit(0.0)) + slot(s.teleport) * vCol
+    dots(frame.select(carry ++ (0 to s.k).map(i =>
+        when(slot(s.n) === i, cur).otherwise(b(i)).as(s"b$i")): _*)
+      .join(y.hint("shuffle_hash"), Seq("id"), "left")
+      .select(carry ++ (0 to s.k).map(b) :+ w.as("w"): _*), col("w"), s.k)
+  }
+
+  /** The CGS2 correct step: w ← w − Σ_{l<n} p_l·b_l. */
+  private def correct(frame: DataFrame, s: Slots): DataFrame =
+    dots(frame.withColumn("w", projected(s)), col("w"), s.k)
+
+  /** The restart step: x = Σ_{i<n} sᵢ·bᵢ into w, observing ‖Σ_{i≤n} rᵢ·bᵢ‖₁
+    * (b_n the pending column), ‖x‖₁, dᵀx, ‖x‖₂² and eᵀx.
+    */
+  private def combine(frame: DataFrame, s: Slots): DataFrame = {
+    val basis = carried(frame) ++ (0 to s.k).map(b)
+    val n = slot(s.n)
+    val x = notNull(s.xs.indices.map(i => when(n > i, slot(s.xs(i)) * b(i)).otherwise(0.0))
+      .reduce(_ + _))
+    val r = s.rs.indices.map(i => when(n > i, slot(s.rs(i)) * b(i))
+      .when(n === i, slot(s.rs(i)) * pending(s)).otherwise(0.0)).reduce(_ + _)
+    frame.select(basis :+ x.as("x") :+ r.as("r"): _*)
+      .observe("restart", sum(abs(col("r"))), sum(abs(col("x"))),
+        sum(col("dang") * col("x")), sum(col("x") * col("x")), sum(col("x")))
+      .select(basis :+ col("x").as("w"): _*)
   }
 
   def run(g: LinkGraph, cfg: ArnoldiConfig = ArnoldiConfig(),
@@ -71,8 +149,8 @@ object ArnoldiPageRank {
       resume: Boolean = false): (Dataset[VertexRank], PageRankStats) = {
     val spark = g.edges.sparkSession
     import spark.implicits._
-    val alpha = cfg.alpha
-    val k = cfg.k
+    val (alpha, k) = (cfg.alpha, cfg.k)
+    require(k >= 1, s"Arnoldi needs a Krylov dimension k >= 1, got $k")
     // personalization v (ppagerank.cc:91-104) rides as a column; the full
     // operator becomes M x = αPᵀx + (α·dᵀx + (1−α)·eᵀx)·v
     val hasV = personalization.isDefined
@@ -88,20 +166,20 @@ object ArnoldiPageRank {
         .select(col("id"), col("dang"), coalesce(col("v"), lit(0.0)).as("v"))
       case None => PageRank.dangling(g)
     }
-    val carry = Seq(col("id"), col("dang")) ++ (if (hasV) Seq(col("v")) else Nil)
 
     // Resume (north rule): x is the whole inter-restart state; scalars are
     // re-measured below, identically for a cold and a resumed start.
     // x₀ = v (ppagerank.cc:544-550)
-    val tr0 = GraftSqlInternals.truncate(resumed.getOrElse(base.withColumn("x", vCol)))
-    var x = tr0.df
-    var xHandle = tr0
+    val s = new Slots(k)
+    val loop = GraftSqlInternals.iterate(
+        iterateOf(resumed.getOrElse(base.withColumn("x", vCol)), k), keys = Seq("id"))(
+      extend(prep, _, alpha, s, vCol), correct(_, s), combine(_, s))
     var (ex, dx, xNorm2, xNorm1) = {
-      val r = x.agg(sum(col("x")), sum(col("dang") * col("x")),
-        sum(col("x") * col("x")), sum(abs(col("x"))), sum(vCol)).head()
+      val r = loop.frame.agg(sum(col("w")), sum(col("dang") * col("w")),
+        sum(col("w") * col("w")), sum(abs(col("w"))), sum(vCol)).head()
       // a v with no mass would make x₀ ≡ 0 and every basis vector NaN
       val massed = r.getDouble(4) > 0
-      if (!massed) { xHandle.handle.unpersist(false); prep.close() }
+      if (!massed) { loop.discard(); prep.close() }
       require(massed, "the personalization puts no positive weight on the graph's vertices")
       (r.getDouble(0), r.getDouble(1), math.sqrt(r.getDouble(2)), r.getDouble(3))
     }
@@ -126,147 +204,87 @@ object ArnoldiPageRank {
       */
     def restart(): Double = {
       val h = Array.ofDim[Double](k + 1, k) // (k+1)×k, ppagerank.cc:527
-      // v0 = x/‖x‖₂ (ppagerank.cc:556-559)
-      var frame = x.withColumn("v0",
-        col("x") / GraftSqlInternals.stableLit(xNorm2)).drop("x")
-      var ev = ex / xNorm2 // eᵀv_j
-      var dv = dx / xNorm2 // dᵀv_j
-      val evs = Array.fill(k + 1)(0.0); evs(0) = ev
-      val dvs = Array.fill(k + 1)(0.0); dvs(0) = dv
-      var effK = 0 // columns of H actually built
+      // b0 = x/‖x‖₂ (ppagerank.cc:556-559): w holds x, nothing to project
+      s.div.value = xNorm2
+      val evs = Array.fill(k + 1)(0.0); evs(0) = ex / xNorm2 // eᵀb_j
+      val dvs = Array.fill(k + 1)(0.0); dvs(0) = dx / xNorm2 // dᵀb_j
+      var m = 0 // columns of H built
       var breakdown = false
-
-      var j = 0
-      var prevHandle: Option[org.apache.spark.sql.GraftSqlInternals.Truncated] = None
-      // release the previous truncated frame only AFTER an action has
-      // materialized its successor — localCheckpoint truncates lineage, so
-      // unpersisting earlier would lose the only copy of the data
-      def retire(t: org.apache.spark.sql.GraftSqlInternals.Truncated): Unit = {
-        prevHandle.foreach(_.handle.unpersist(false))
-        prevHandle = Some(t)
-      }
-      while (j < k && !breakdown) {
-        // w = M v_j; H(i,j) = vᵢᵀw for i ≤ j (VecMTDot, ppagerank.cc:573).
-        // The teleport (and every other measured scalar below) travels
-        // through the codegen REFERENCES array (stableLit), never an inline
-        // literal: parallel-sum reduction order perturbs these doubles in the
-        // last ulp between runs, so a `lit` would change the generated source
-        // every run and force a full Janino recompile of every Arnoldi-step
-        // stage (~95 classes per solve — measured as the dominant,
-        // environment-sensitive cost of this solver before the fix)
-        frame = mMult(prep, frame, s"v$j", alpha,
-          GraftSqlInternals.stableLit(alpha * dvs(j) + (1 - alpha) * evs(j)), vCol)
-        // ONE observe job per step: the dots H(i,j) = vᵢᵀw, ‖w‖², eᵀw and
-        // dᵀw ride the tasks that materialize w (batched VecMTDot as
-        // CollectMetrics accumulators, as in PageRank.run)
-        val dotCols = (0 to j).map(i => sum(col(s"v$i") * col("w"))) ++
-          Seq(sum(col("w") * col("w")), sum(col("w")), sum(col("dang") * col("w")))
-        val (t1, obs1) = GraftSqlInternals.truncateObserved(
-          frame.observe("dots", dotCols.head, dotCols.tail: _*))
-        frame = t1.df
-        val row = obs1("dots")
-        retire(t1)
+      while (m < k && !breakdown) {
+        val j = m
+        // w = M b_j; H(i,j) = bᵢᵀw for i ≤ j (VecMTDot, ppagerank.cc:573),
+        // with ‖w‖², eᵀw and dᵀw, observed by the job that materializes w
+        s.n.value = j
+        s.teleport.value = alpha * dvs(j) + (1 - alpha) * evs(j)
+        val row = loop.step(extendKind)("dots")
         for (i <- 0 to j) h(i)(j) = row.getDouble(i)
-        val ww = row.getDouble(j + 1)
-        // g = w − Σ h(i,j)·vᵢ
-        val gCol = (0 to j).foldLeft(col("w")) { (acc, i) =>
-          acc - GraftSqlInternals.stableLit(h(i)(j)) * col(s"v$i")
-        }
-        // CGS: β and the eᵀ/dᵀ sums of g follow analytically (β² = ‖w‖² −
-        // Σh² by orthogonality). CGS2: a second job measures the residual
-        // projections c_i = vᵢᵀg (≈0 in exact arithmetic), folds them back
-        // into H, and measures ‖g‖², eᵀg, dᵀg directly in the same aggregate
-        // (the eᵀ/dᵀ sums of the new basis vector subtract the h
-        // projections from w's sums under CGS, the c projections from g's
-        // measured sums under CGS2)
-        val (next, proj, beta2, eg, dg) = if (!cgs2) {
-          (gCol, Array.tabulate(j + 1)(i => h(i)(j)),
+        val ww = row.getDouble(k + 1)
+        // g = w − Σ h(i,j)·bᵢ. CGS: β and the eᵀ/dᵀ sums of g follow
+        // analytically (β² = ‖w‖² − Σh² by orthogonality); the next step
+        // finalizes b_{j+1} = g/β. CGS2: a correct job stores g in w and
+        // measures cᵢ = bᵢᵀg (≈0 in exact arithmetic, folded into H), ‖g‖²,
+        // eᵀg and dᵀg; the next step finalizes b_{j+1} = (g − Σ cᵢbᵢ)/β
+        for (i <- 0 to j) s.p(i).value = h(i)(j)
+        val (proj, beta2, eg, dg) = if (!cgs2) {
+          (Array.tabulate(j + 1)(i => h(i)(j)),
             ww - (0 to j).map(i => h(i)(j) * h(i)(j)).sum,
-            row.getDouble(j + 2), row.getDouble(j + 3))
+            row.getDouble(k + 2), row.getDouble(k + 3))
         } else {
-          frame = frame.withColumn("g", gCol).drop("w")
-          val dotCols2 = (0 to j).map(i => sum(col(s"v$i") * col("g"))) ++
-            Seq(sum(col("g") * col("g")), sum(col("g")), sum(col("dang") * col("g")))
-          val (t2, obs2) = GraftSqlInternals.truncateObserved(
-            frame.observe("dots2", dotCols2.head, dotCols2.tail: _*))
-          frame = t2.df
-          val row2 = obs2("dots2")
-          retire(t2)
+          s.n.value = j + 1
+          val row2 = loop.step(correctKind)("dots")
           val c = Array.tabulate(j + 1)(i => row2.getDouble(i))
-          for (i <- 0 to j) h(i)(j) += c(i)
-          val g2Col = (0 to j).foldLeft(col("g")) { (acc, i) =>
-            acc - GraftSqlInternals.stableLit(c(i)) * col(s"v$i")
-          }
-          // β = ‖g − Σ cᵢvᵢ‖₂ via the identity on the measured gᵀg — safe
+          for (i <- 0 to j) { h(i)(j) += c(i); s.p(i).value = c(i) }
+          // β = ‖g − Σ cᵢbᵢ‖₂ via the identity on the measured gᵀg — safe
           // here because the c correction is O(ε)·‖g‖, so no catastrophic
           // cancellation
-          (g2Col, c, row2.getDouble(j + 1) - c.map(x => x * x).sum,
-            row2.getDouble(j + 2), row2.getDouble(j + 3))
+          (c, row2.getDouble(k + 1) - c.map(x => x * x).sum,
+            row2.getDouble(k + 2), row2.getDouble(k + 3))
         }
         val beta = math.sqrt(math.max(beta2, 0.0))
         h(j + 1)(j) = beta
-        effK = j + 1
+        m = j + 1
         if (beta < 1e-12 * math.sqrt(ww)) {
           breakdown = true // happy breakdown: Krylov space exhausted
         } else {
-          frame = frame.withColumn(s"v${j + 1}", next / GraftSqlInternals.stableLit(beta))
-            .drop("w", "g")
+          s.div.value = beta
           evs(j + 1) = (eg - (0 to j).map(i => proj(i) * evs(i)).sum) / beta
           dvs(j + 1) = (dg - (0 to j).map(i => proj(i) * dvs(i)).sum) / beta
         }
-        j += 1
       }
 
-      // H ← H − [I; 0] (ppagerank.cc:591-594), on the effK-sized block
-      val m = effK
+      // H ← H − [I; 0] (ppagerank.cc:591-594), on the m-column block
       val hBlock = Array.tabulate(m + 1, m) { (i, jj) =>
         h(i)(jj) - (if (i == jj) 1.0 else 0.0)
       }
       val (_, vMat) = SmallSvd.svd(hBlock)
       val vmin = Array.tabulate(m)(i => vMat(i)(m - 1)) // smallest σ's right vector
 
-      // x ← Σ vmin_i · v_i (VecMAXPY, ppagerank.cc:645-647)
-      val xCol = (0 until m).map(i =>
-          GraftSqlInternals.stableLit(vmin(i)) * col(s"v$i"))
-        .reduce((a, b) => a + b)
+      // x ← Σ vmin_i · b_i (VecMAXPY, ppagerank.cc:645-647)
       // convergence: δ = ‖Mx − x‖₁/‖x‖₁ (ppagerank.cc:649-657). The
       // reference applies the operator once more (PageRankMult at 651); here
       // Mx − x follows from the Arnoldi relation M·Vₘ = Vₘ₊₁·H — exact to
-      // rounding REGARDLESS of basis quality, because each v_{j+1} is
-      // constructed as (w − Σ hᵢⱼ vᵢ)/β — so
-      // Mx − x = Vₘ₊₁·(H − [I;0])·vmin, a column combination of basis
-      // vectors already in the frame. The restart therefore pays NO extra
-      // SpMV: residual, ‖x‖₁, dᵀx, ‖x‖₂ and eᵀx all ride one shuffle-free
-      // observe job on the frame. On happy breakdown v_m was never built;
-      // its coefficient is β·vmin_{m−1} with β < 1e-12·‖w‖ — dropped.
+      // rounding REGARDLESS of basis quality, because each b_{j+1} is
+      // constructed as (w − Σ hᵢⱼ bᵢ)/β — so Mx − x = Vₘ₊₁·(H − [I;0])·vmin,
+      // a combination of b₀…b_{m−1} and the pending b_m: NO extra SpMV. On
+      // happy breakdown b_m was never built; its coefficient is β·vmin_{m−1}
+      // with β < 1e-12·‖w‖ — dropped (0).
       val rCoef = Array.tabulate(m + 1)(i =>
         (0 until m).map(jj => hBlock(i)(jj) * vmin(jj)).sum)
-      val residCol = (0 to (if (breakdown) m - 1 else m)).map(i =>
-          GraftSqlInternals.stableLit(rCoef(i)) * col(s"v$i"))
-        .reduce((a, b) => a + b)
-      val (tr2, obsR) = GraftSqlInternals.truncateObserved(
-        frame.withColumn("x", xCol)
-          .observe("restart", sum(abs(residCol)), sum(abs(col("x"))),
-            sum(col("dang") * col("x")), sum(col("x") * col("x")),
-            sum(col("x")))
-          .select(carry :+ col("x"): _*))
-      val row = obsR("restart")
+      s.n.value = m
+      for (i <- 0 until m) s.xs(i).value = vmin(i)
+      for (i <- 0 to m) s.rs(i).value = if (i < m || !breakdown) rCoef(i) else 0.0
+      val row = loop.step(restartKind)("restart")
       val num = row.getDouble(0)
       xNorm1 = row.getDouble(1)
       dx = row.getDouble(2)
       xNorm2 = math.sqrt(row.getDouble(3))
       ex = row.getDouble(4) // measured eᵀx (an analytic recursion drifts)
       val delta = num / xNorm1
-      x = tr2.df
-      // the basis-vector frame and the previous restart's x are dead now
-      prevHandle.foreach(_.handle.unpersist(false))
-      xHandle.handle.unpersist(false)
-      xHandle = tr2
 
-      // stagnation → escalate to CGS2: two consecutive
-      // restarts without ≥10% residual improvement means the fast path has
-      // hit its analytic-β cancellation floor above tol — without this the
-      // solver would spin to maxRestarts at a flat residual
+      // stagnation → escalate to CGS2: two consecutive restarts without
+      // ≥10% residual improvement means the fast path has hit its analytic-β
+      // cancellation floor above tol — without this the solver would spin
+      // to maxRestarts at a flat residual
       if (!cgs2 && delta >= cfg.tol) {
         if (delta > 0.9 * prevDelta) stagnant += 1 else stagnant = 0
         if (stagnant >= 2) cgs2 = true
@@ -277,8 +295,9 @@ object ArnoldiPageRank {
 
     new RankSolve.Iteration[Dataset[VertexRank]] {
       def step(): (Double, Double) = (restart(), xNorm1)
-      def snapshot: DataFrame = x
+      def snapshot: DataFrame = loop.frame.select(carried(loop.frame) :+ col("w").as("x"): _*)
       def result(): Dataset[VertexRank] = {
+        loop.close()
         prep.close()
         // sign-fix + L1-normalize (deviation from reference; see scaladoc).
         // eᵀx of the final iterate is `ex` — measured by the observe of the
@@ -286,9 +305,8 @@ object ArnoldiPageRank {
         // aggregate (no restarts ran); a dedicated agg job here re-measured
         // the same sum.
         val sign = if (ex < 0) -1.0 else 1.0
-        x.select(col("id"),
-          (col("x") * lit(sign) /
-            GraftSqlInternals.stableLit(math.abs(ex))).as("rank")).as[VertexRank]
+        loop.frame.select(col("id"), (col("w") * lit(sign) /
+          slot(new ScalarSlot(math.abs(ex)))).as("rank")).as[VertexRank]
       }
     }
     } // RankSolve.run

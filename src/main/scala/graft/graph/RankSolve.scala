@@ -55,6 +55,7 @@ object RankSolve {
     require(g.numVertices > 0, "empty vertex domain")
     val runDir = checkpointDir.map { d =>
       require(runId.nonEmpty, "checkpointing needs a non-empty runId")
+      require(checkpointEvery >= 1, s"checkpointEvery must be at least 1, got $checkpointEvery")
       s"$d/$runId"
     }
     ShuffleWidth.withWidth(spark, g.edges.rdd.getNumPartitions) {

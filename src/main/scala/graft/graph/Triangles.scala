@@ -94,15 +94,13 @@ object Triangles {
   def perVertexTruncated(edges: Dataset[Edge],
       vertices: DataFrame): org.apache.spark.sql.GraftSqlInternals.Truncated =
     withOriented(edges) { oriented =>
-      val counts = org.apache.spark.sql.GraftSqlInternals.truncate(
+      // eager: the per-corner counts must materialize BEFORE `oriented` is
+      // unpersisted, or the caller's later action re-derives the whole wedge
+      // join from scratch
+      val (counts, _) = org.apache.spark.sql.GraftSqlInternals.truncateObserved(
         enumerate(oriented)
           .select(explode(array(col("a"), col("b"), col("c"))).as("id"))
           .groupBy(col("id")).agg(expr("count(1)").as("triangles")))
-      // eager: the per-corner counts must materialize BEFORE `oriented` is
-      // unpersisted, or the caller's later action re-derives the whole wedge
-      // join from scratch (truncate alone is lazy — localCheckpoint marks,
-      // the first action materializes)
-      counts.handle.count()
       val result = vertices.join(counts.df, Seq("id"), "left")
         .select(col("id"), coalesce(col("triangles"), lit(0L)).as("triangles"))
       org.apache.spark.sql.GraftSqlInternals.Truncated(result, counts.handle)

@@ -11,7 +11,7 @@ import scala.util.Try
 import org.apache.spark.SparkContext
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, GraftSqlInternals, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlInternals, ScalarSlot, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 
@@ -116,14 +116,15 @@ object Probe {
     try f(spark) finally spark.stop()
   }
 
-  /** What Spark ran for one query or solve: jobs, stages, tasks and Janino
-    * compiles; summed executor run time, task CPU, GC and shuffle bytes;
-    * and job count and stage wall time by call site ("PageRank.scala:146",
-    * from the stage name Spark takes from the first frame outside its own
-    * packages; a job's site is its result stage's).
+  /** What Spark ran for one query or solve: jobs, stages, tasks, Janino
+    * compiles and solver step plans (`GraftSqlInternals.stepPlanCount`);
+    * summed executor run time, task CPU, GC and shuffle bytes; and job
+    * count and stage wall time by call site ("PageRank.scala:146", from the
+    * stage name Spark takes from the first frame outside its own packages;
+    * a job's site is its result stage's).
     */
   final case class Tally(wallS: Double, jobs: Long, stages: Long, tasks: Long,
-      compiles: Long, runMs: Long, cpuMs: Long, gcMs: Long,
+      compiles: Long, plans: Long, runMs: Long, cpuMs: Long, gcMs: Long,
       shuffleReadBytes: Long, shuffleWriteBytes: Long,
       jobsBySite: Map[String, Long], stageMsBySite: Map[String, (Long, Long)]) {
 
@@ -132,7 +133,7 @@ object Probe {
       jobsBySite.collect { case (s, n) if s.startsWith(file + ":") => n }.sum
 
     def summary: String = f"$wallS%7.3f s jobs=$jobs stages=$stages tasks=$tasks " +
-      f"compiles=$compiles run=${runMs}ms cpu=${cpuMs}ms gc=${gcMs}ms " +
+      f"compiles=$compiles plans=$plans run=${runMs}ms cpu=${cpuMs}ms gc=${gcMs}ms " +
       f"shuffleRead=${shuffleReadBytes / 1048576.0}%.1fMiB " +
       f"shuffleWrite=${shuffleWriteBytes / 1048576.0}%.1fMiB"
 
@@ -179,12 +180,14 @@ object Probe {
     sc.addSparkListener(listener)
     try {
       val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val plans0 = GraftSqlInternals.stepPlanCount
       val t0 = System.nanoTime()
       val r = body
       val wallS = (System.nanoTime() - t0) / 1e9
       GraftSqlInternals.drainListenerBus(sc)
       (r, Tally(wallS, jobs.sum, stages.sum, tasks.sum,
         CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0,
+        GraftSqlInternals.stepPlanCount - plans0,
         execRun.sum, cpu.sum, gc.sum, read.sum, write.sum,
         jobSites.asScala.toMap, stageSites.asScala.toMap))
     } finally sc.removeSparkListener(listener)
@@ -328,25 +331,25 @@ object Probe {
   /** The plan of one solver step job, built by the solver's own step
     * builder over the sf graph's cold iterate, with representative scalars:
     * InOut's inner-sweep step (its power phase is PageRank.run's kernel) and
-    * Arnoldi's w = M·v₀ with the dot-product observe.
+    * Arnoldi's extend step (w = M·b₀ with its full dot observe, at the
+    * default k).
     */
   private def stepPlan(spark: SparkSession, name: String): String = {
     val g = TestdataGraph.linkGraph(spark, sfDir)
     ShuffleWidth.withWidth(spark, g.edges.rdd.getNumPartitions) {
       val prep = PageRank.prepare(g, PageRankConfig())
-      val vCol = lit(1.0 / g.numVertices)
-      val (alpha, teleport) = (0.85, GraftSqlInternals.stableLit(0.15))
-      val t0 = GraftSqlInternals.truncate(PageRank.dangling(g)
-        .withColumn(if (name == "a4_step") "v0" else "x", if (name == "a4_step") lit(1.0) else vCol))
-      t0.handle.count()
+      val (vCol, alpha, k) = (lit(1.0 / g.numVertices), 0.85, ArnoldiPageRank.ArnoldiConfig().k)
+      val cold = PageRank.dangling(g).withColumn("x", vCol)
+      val (t0, _) = GraftSqlInternals.truncateObserved(
+        if (name == "a4_step") ArnoldiPageRank.iterateOf(cold, k) else cold)
+      def slot(v: Double) = GraftSqlInternals.slotLit(new ScalarSlot(v))
       val step = name match {
         case "a3_inner_step" =>
           // stand-in f and y of the sweep iterate, at a sweep's first step
           val st = t0.df.withColumn("f", lit(0.0)).withColumn("y", col("x"))
-          InOutPageRank.innerStep(prep, st, alpha, alpha / 2,
-            GraftSqlInternals.stableLit(0.01), GraftSqlInternals.stableLit(1.0), vCol)
-        case "a4_step" => ArnoldiPageRank.mMult(prep, t0.df, "v0", alpha, teleport, vCol)
-          .observe("dots", sum(col("v0") * col("w")), sum(col("w") * col("w")))
+          InOutPageRank.innerStep(prep, st, alpha, alpha / 2, slot(0.01), slot(1.0), vCol)
+        case "a4_step" =>
+          ArnoldiPageRank.extend(prep, t0.df, alpha, new ArnoldiPageRank.Slots(k), vCol)
       }
       try step.queryExecution.explainString(FormattedMode)
       finally t0.handle.unpersist(false)

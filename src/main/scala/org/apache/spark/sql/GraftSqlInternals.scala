@@ -31,9 +31,12 @@ final class ScalarSlot(@volatile var value: Double) extends Serializable {
 
 /** Reads a ScalarSlot. foldable=false keeps the optimizer from
   * constant-folding it into an inline literal; two reads of different slots
-  * are never equal, so distinct scalars never merge.
+  * are never equal, so distinct scalars never merge. The hash is constant:
+  * a slot's identity hash would reorder subexpression elimination, and so
+  * make new source to compile, in every solve.
   */
 case class SlotValue(slot: ScalarSlot) extends LeafExpression {
+  override def hashCode(): Int = 0x5107
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = false
   override def foldable: Boolean = false
@@ -95,11 +98,6 @@ private[sql] final class GraftIntBuffer(initial: Int) {
 }
 
 object GraftSqlInternals {
-
-  /** Column reading a slot fixed at `value`: a per-iteration scalar of a
-    * step that is rebuilt every iteration, with iteration-stable codegen.
-    */
-  def stableLit(value: Double): Column = slotLit(new ScalarSlot(value))
 
   /** Column reading `slot`, which the driver sets before each job. */
   def slotLit(slot: ScalarSlot): Column = columnOf(SlotValue(slot))
@@ -254,82 +252,60 @@ object GraftSqlInternals {
   private[sql] def replay(chunks: RDD[GraftRowChunk], nFields: Int): RDD[InternalRow] =
     chunks.mapPartitions(unpackChunks(_, nFields), preservesPartitioning = true)
 
-  private def truncateImpl(cdf: CDataFrame, level: StorageLevel,
-      eagerCount: Boolean): Truncated = {
-    val chunks = cacheChunks(cdf.queryExecution.toRdd,
-      cdf.schema.fields.map(_.dataType), level, eagerCount)
-    val logical = LogicalRDD.fromDataset(replay(chunks, cdf.schema.length), cdf,
-      isStreaming = false)
-    Truncated(CDataset.ofRows(cdf.sparkSession, logical), chunks)
-  }
-
-  /** Persist the computed rows of a DataFrame and rebuild it as a flat
-    * LogicalRDD scan — what `Dataset.localCheckpoint` does, but returning
-    * the underlying RDD handle so the caller can unpersist it
-    * deterministically instead of waiting for the ContextCleaner. Output
-    * partitioning/ordering are preserved (LogicalRDD.fromDataset), so
-    * co-partitioned joins stay shuffle-free.
-    */
-  def truncate(df: DataFrame,
-      level: StorageLevel = StorageLevel.MEMORY_AND_DISK): Truncated =
-    truncateImpl(df.asInstanceOf[CDataFrame], level, eagerCount = false)
-
-  /** `truncate` + EAGER materialization in ONE job, returning the metrics of
-    * any `Dataset.observe` (CollectMetrics) nodes in the plan.
-    *
-    * This is the single-action iteration kernel: an iterative solver needs
-    * (a) the next iterate materialized + lineage-truncated and (b) a handful
-    * of global scalars about it (residual, dangling mass, sum). Running a
-    * separate `.agg().head()` pays one extra stage barrier plus a full
-    * read-back of the just-cached data per iteration; `observe` computes the
-    * same scalars in AggregatingAccumulators as a side-effect of the SAME
-    * tasks that write the cache, so the per-iteration job has no dedicated
-    * aggregation stage at all.
+  /** Persist the computed rows of a DataFrame as chunks and rebuild it as a
+    * flat LogicalRDD scan — an eager `Dataset.localCheckpoint` — in ONE job
+    * that also returns the metrics of its `Dataset.observe` nodes (computed
+    * by the tasks that write the cache: no `.agg().head()` job or read-back),
+    * with the RDD handle, for a deterministic unpersist. Output partitioning
+    * and ordering are kept (LogicalRDD.fromDataset), so co-partitioned joins
+    * stay shuffle-free.
     */
   def truncateObserved(df: DataFrame,
       level: StorageLevel = StorageLevel.MEMORY_AND_DISK): (Truncated, Map[String, Row]) = {
     val cdf = df.asInstanceOf[CDataFrame]
     val qe = cdf.queryExecution
-    val t = truncateImpl(cdf, level, eagerCount = true)
-    (t, qe.observedMetrics)
+    val chunks = cacheChunks(qe.toRdd, cdf.schema.fields.map(_.dataType), level, eager = true)
+    val logical = LogicalRDD.fromDataset(replay(chunks, cdf.schema.length), cdf,
+      isStreaming = false)
+    (Truncated(CDataset.ofRows(cdf.sparkSession, logical), chunks), qe.observedMetrics)
   }
 
   // ------------------------------------------------- plan once, execute many
 
   private val stepPlans = new java.util.concurrent.atomic.AtomicLong
 
-  /** Solver steps planned by `iterate` in this JVM, one per solve. */
+  /** Solver steps planned by `iterate` in this JVM, one per step kind. */
   def stepPlanCount: Long = stepPlans.get
 
-  /** Start an iterative solve whose step is planned ONCE.
+  /** Start an iterative solve whose steps are planned ONCE.
     *
-    * The first iterate is `initial`, cached as chunks (as `truncate` does);
-    * its scan is the placeholder leaf. `step` builds the next iterate from a
-    * frame, and is called exactly once, over the placeholder. The physical
-    * plan of that frame is kept for the whole solve, and each
-    * `PlannedIteration.step()` executes a fresh copy of it over the current
-    * iterate's chunks: the per-iteration driver cost drops to code
-    * generation and RDD building — no DataFrame build, analysis,
-    * optimization or physical planning. Per-iteration scalars enter the
-    * step as `slotLit` columns and are set by the driver before each step.
+    * The first iterate is `initial`, cached as chunks (lazily); its scan is
+    * the placeholder leaf. Each of `steps` (the solve's step kinds; most
+    * solvers have one) builds the next iterate from a frame, and is called
+    * exactly once, over the placeholder. Each kind's physical plan is kept
+    * for the whole solve, and `PlannedIteration.step(kind)` executes a
+    * fresh copy of it over the current iterate's chunks: the per-iteration
+    * driver cost drops to code generation and RDD building — no DataFrame
+    * build, analysis, optimization or physical planning. Per-iteration
+    * scalars enter a step as `slotLit` columns, set before each step.
     *
-    * The kept plan relies on two properties of the placeholder holding for
-    * every iterate, both checked here:
-    *  - schema: the step's output has the iterate's column names and types,
+    * The kept plans rely on two properties of the placeholder holding for
+    * every iterate, both checked here for every kind:
+    *  - schema: a step's output has the iterate's column names and types,
     *    nullable only where the iterate is;
     *  - layout: with `keys`, every iterate is hash-partitioned on them at
     *    the session's shuffle width — `initial` is repartitioned if it is
-    *    not, and the step's output must be — so joins on the keys need no
+    *    not, and every step's output must be — so joins on the keys need no
     *    exchange on the iterate side. Without `keys` the placeholder claims
     *    no partitioning (and no ordering in either case).
     *
-    * The first iterate and the step are planned without adaptive execution,
+    * The first iterate and the steps are planned without adaptive execution,
     * whatever the session's setting: AQE re-plans from the logical plan at
     * run time, which would read the placeholder's RDD again, and a fixed
     * plan (with a layout known before it runs) is the point.
     */
   def iterate(initial: DataFrame, keys: Seq[String] = Nil)(
-      step: DataFrame => DataFrame): PlannedIteration = {
+      steps: (DataFrame => DataFrame)*): PlannedIteration = {
     val session = initial.asInstanceOf[CDataFrame].sparkSession
     // optimized logical plan + physical plan, with the preparation rules of
     // a non-adaptive query (the subquery preparations, which omit only
@@ -363,19 +339,22 @@ object GraftSqlInternals {
     val rows = replay(chunks, output.length)
     val leaf = LogicalRDD(output, rows, partitioning, Nil)(session, Some(stats))
 
-    val stepDf = step(CDataset.ofRows(session, leaf))
     val in = leaf.schema
-    val out = stepDf.schema
-    require(out.length == in.length && out.zip(in).forall { case (o, i) =>
-      o.name == i.name && o.dataType == i.dataType && (i.nullable || !o.nullable)
-    }, s"step output ${out.simpleString} does not fit the iterate ${in.simpleString}")
-    val plan = planned(stepDf)._2
-    stepPlans.incrementAndGet()
-    require(keys.isEmpty || hashedOn(plan.outputPartitioning,
-      keys.map(k => plan.output(output.indexWhere(_.name == k))), width),
-      s"step output is not hash-partitioned on ${keys.mkString(", ")} at " +
-        s"width $width: ${plan.outputPartitioning}")
-    new PlannedIteration(session, output, partitioning, stats, rows, plan, chunks)
+    val plans = steps.map { step =>
+      val stepDf = step(CDataset.ofRows(session, leaf))
+      val out = stepDf.schema
+      require(out.length == in.length && out.zip(in).forall { case (o, i) =>
+        o.name == i.name && o.dataType == i.dataType && (i.nullable || !o.nullable)
+      }, s"step output ${out.simpleString} does not fit the iterate ${in.simpleString}")
+      val plan = planned(stepDf)._2
+      stepPlans.incrementAndGet()
+      require(keys.isEmpty || hashedOn(plan.outputPartitioning,
+        keys.map(k => plan.output(output.indexWhere(_.name == k))), width),
+        s"step output is not hash-partitioned on ${keys.mkString(", ")} at " +
+          s"width $width: ${plan.outputPartitioning}")
+      plan
+    }
+    new PlannedIteration(session, output, partitioning, stats, rows, plans, chunks)
   }
 
   private def hashedOn(p: Partitioning, keys: Seq[Expression], width: Int): Boolean =
@@ -423,12 +402,13 @@ object GraftSqlInternals {
 
 }
 
-/** The iterate of a solve whose step was planned once
-  * (`GraftSqlInternals.iterate`). `step()` runs one iteration as ONE job —
-  * the next iterate materialized as cached chunks, with the step's observed
-  * metrics — and retires the previous iterate's blocks. `close()` drops the
-  * kept plan and the placeholder; the current iterate stays cached, since
-  * `frame` is what the solve returns. `discard()` drops its blocks as well.
+/** The iterate of a solve whose steps were planned once
+  * (`GraftSqlInternals.iterate`). `step(kind)` runs one step of that kind as
+  * ONE job — the next iterate materialized as cached chunks, with the
+  * step's observed metrics — and retires the previous iterate's blocks.
+  * `close()` drops the kept plans and the placeholder; the current iterate
+  * stays cached, since `frame` is what the solve returns. `discard()` drops
+  * its blocks as well.
   */
 final class PlannedIteration private[sql] (
     session: CSparkSession,
@@ -436,7 +416,7 @@ final class PlannedIteration private[sql] (
     partitioning: Partitioning,
     stats: Statistics,
     private var placeholder: RDD[InternalRow],
-    private var plan: SparkPlan,
+    private var plans: Seq[SparkPlan],
     private var chunks: RDD[GraftRowChunk]) {
 
   private val types = output.map(_.dataType).toArray
@@ -446,12 +426,12 @@ final class PlannedIteration private[sql] (
     LogicalRDD(output, GraftSqlInternals.replay(chunks, types.length),
       partitioning, Nil)(session, Some(stats)).newInstance())
 
-  /** Run the kept step over the current iterate; returns its observed
-    * metrics by `observe` name.
+  /** Run the kept step `kind` (its index in `iterate`'s steps) over the
+    * current iterate; returns its observed metrics by `observe` name.
     */
-  def step(): Map[String, Row] = {
-    require(plan != null, "iteration is closed")
-    val exec = GraftSqlInternals.refresh(plan, placeholder,
+  def step(kind: Int = 0): Map[String, Row] = {
+    require(plans != null, "iteration is closed")
+    val exec = GraftSqlInternals.refresh(plans(kind), placeholder,
       GraftSqlInternals.replay(chunks, types.length))
     val next = session.withActive(GraftSqlInternals.cacheChunks(
       new SQLExecutionRDD(exec.execute(), session.sessionState.conf),
@@ -462,7 +442,7 @@ final class PlannedIteration private[sql] (
   }
 
   def close(): Unit = {
-    plan = null
+    plans = null
     placeholder = null
   }
 

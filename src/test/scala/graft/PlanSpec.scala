@@ -68,7 +68,7 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
         i * 0.125,
         if (i % 11 == 0) null else Seq.tabulate(i % 6)(j => (i * j).toDouble))
     }.toDF("id", "s", "d", "arr")
-    val t = GraftSqlInternals.truncate(df.repartition(7))
+    val (t, _) = GraftSqlInternals.truncateObserved(df.repartition(7))
     val a = df.collect().map(_.toString).sorted
     val b = t.df.collect().map(_.toString).sorted
     assert(a.sameElements(b), "blocked cache lost or altered rows")
@@ -87,7 +87,7 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     // the iterate shape: all fixed-width, no nulls → fixed-stride chunks
     val df = (0 until 20000).map(i => (i.toLong, 1.0 / (i + 1), i % 3))
       .toDF("id", "rank", "tag")
-    val t = GraftSqlInternals.truncate(df.repartition(5))
+    val (t, _) = GraftSqlInternals.truncateObserved(df.repartition(5))
     val chunks = t.handle.asInstanceOf[org.apache.spark.rdd.RDD[GraftRowChunk]]
       .collect()
     assert(chunks.nonEmpty && chunks.forall(_.stride == 32), // bitset + 3 slots
@@ -102,7 +102,7 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     val dfN = (0 until 5000).map(i =>
       (i.toLong, if (i >= 2500 && i % 97 == 0) None else Some(i * 0.5)))
       .toDF("id", "maybe").coalesce(1)
-    val tN = GraftSqlInternals.truncate(dfN)
+    val (tN, _) = GraftSqlInternals.truncateObserved(dfN)
     val chunksN = tN.handle.asInstanceOf[org.apache.spark.rdd.RDD[GraftRowChunk]]
       .collect()
     assert(chunksN.nonEmpty && chunksN.forall(_.stride == 24),
@@ -169,6 +169,21 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     assert(innerSt.iterations == 3 && innerPowerJobs == 0,
       s"$innerPowerJobs kernel jobs in ${innerSt.iterations} inner iterations")
     assert(innerPlans == 1, s"a solve in inner mode planned $innerPlans steps")
+  }
+
+  test("Arnoldi plans its three step kinds once: k+1 jobs per CGS restart, 2k+1 per CGS2 restart") {
+    import graft.graph.ArnoldiPageRank
+    val k = 4
+    // tol ≥ 1e-9 runs single-pass CGS (one extend job per basis column and
+    // one restart job), tol < 1e-9 CGS2 (a correct job after every extend)
+    for ((tol, perRestart) <- Seq(1e-7 -> (k + 1), 1e-10 -> (2 * k + 1))) {
+      val ((_, st), jobs, plans) = jobsAndPlans("ArnoldiPageRank.scala")(ArnoldiPageRank.run(
+        generated, ArnoldiPageRank.ArnoldiConfig(tol = tol, k = k, maxRestarts = 60)))
+      assert(st.reason.converged && st.iterations >= 2, s"tol $tol: degenerate solve: $st")
+      assert(jobs == 1 + st.iterations * perRestart,
+        s"tol $tol: $jobs jobs for ${st.iterations} restarts")
+      assert(plans <= 3, s"tol $tol: $plans step plans")
+    }
   }
 
   test("CC and LP plan their round once and submit one job per round") {

@@ -27,6 +27,7 @@ class ProbeSpec extends AnyFunSuite with SparkTestBase {
         s"${t.jobsIn("PageRank.scala")} jobs for ${st.iterations} iterations: ${t.jobsBySite}")
       assert(t.jobsIn("PageRank.scala") == sites.count(_.contains(" at PageRank.scala:")))
       assert(t.jobs == sites.size)
+      assert(t.plans == 1, s"step planned ${t.plans} times")
       assert(t.stages >= t.jobs && t.tasks >= t.stages && t.runMs > 0)
       assert(t.stageMsBySite.keys.exists(_.startsWith("PageRank.scala:")))
     } finally spark.conf.set(aqe, was)

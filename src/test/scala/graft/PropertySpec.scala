@@ -35,6 +35,18 @@ class PropertySpec extends AnyFunSuite with SparkTestBase {
       assert(math.abs(got.values.sum - 1.0) < 1e-10)
     }
 
+    test(s"property[$seed]: Arnoldi reaches the dense oracle's fixed point") {
+      val (n, edges) = randomGraph(seed)
+      val g = GraphFixtures.linkGraph(spark, n, edges)
+      val (ranks, stats) = graft.graph.ArnoldiPageRank.run(g,
+        graft.graph.ArnoldiPageRank.ArnoldiConfig(alpha = 0.85, tol = 1e-10))
+      assert(stats.reason.converged, s"seed=$seed: $stats")
+      val got = ranks.collect().map(r => r.id -> r.rank).toMap
+      val (exp, _) = DenseOracle.pagerank(n, edges, 0.85, tol = 1e-13)
+      (0 until n).foreach(i => assert(math.abs(got(i.toLong) - exp(i)) < 1e-6,
+        s"seed=$seed vertex $i: got ${got(i.toLong)}, expected ${exp(i)}"))
+    }
+
     test(s"property[$seed]: PageRank invariant under vertex relabeling") {
       val (n, edges) = randomGraph(seed + 100)
       val relabeled = edges.map { case (s, d, w) => (n - 1 - s, n - 1 - d, w) }

@@ -50,6 +50,52 @@ class SolversSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  // happy breakdown: M·x = x from the start on the first two (β = 0 at the
+  // first extend step, one basis column), and a Krylov space of at most 5
+  // dimensions on g3 at k = 8
+  for ((name, (n, edges)) <- Seq("a single vertex" -> (1, Nil),
+      "5 vertices without edges" -> (5, Nil), "g3 (fewer vertices than k)" -> GraphFixtures.g3)) {
+    test(s"arnoldi breaks down on $name and converges in one restart") {
+      val g = GraphFixtures.linkGraph(spark, n, edges)
+      val (expected, _) = DenseOracle.pagerank(n, edges, 0.85, tol = 1e-13)
+      val (ranks, stats) = ArnoldiPageRank.run(g,
+        ArnoldiPageRank.ArnoldiConfig(alpha = 0.85, tol = 1e-10, k = 8, maxRestarts = 40))
+      assert(stats.reason.converged && stats.iterations == 1, s"$name: $stats")
+      val got = ranks.collect().map(r => r.id -> r.rank).toMap
+      (0 until n).foreach(i => assert(math.abs(got(i.toLong) - expected(i)) < 1e-6,
+        s"$name vertex $i: got ${got(i.toLong)}, expected ${expected(i)}"))
+    }
+  }
+
+  test("arnoldi with k < 1 is a require error") {
+    val (n, edges) = GraphFixtures.g2
+    val g = GraphFixtures.linkGraph(spark, n, edges)
+    for (k <- Seq(0, -1)) {
+      val e = intercept[IllegalArgumentException](
+        ArnoldiPageRank.run(g, ArnoldiPageRank.ArnoldiConfig(k = k)))
+      assert(e.getMessage.contains(s"k >= 1, got $k"), e.getMessage)
+    }
+  }
+
+  test("a checkpoint cadence below 1 is a require error in every rank solver") {
+    val (n, edges) = GraphFixtures.g2
+    val g = GraphFixtures.linkGraph(spark, n, edges)
+    val dir = Some(java.nio.file.Files.createTempDirectory("graft-cadence").toString)
+    for (every <- Seq(0, -2); (name, solve) <- Seq[(String, () => Any)](
+        "power" -> (() => PageRank.run(g, PageRankConfig(maxIter = 3,
+          checkpointDir = dir, checkpointEvery = every))),
+        "multi-seed PPR" -> (() => PageRank.runMultiSeed(g, Seq(0L), PageRankConfig(
+          maxIter = 3, checkpointDir = dir, checkpointEvery = every))),
+        "inout" -> (() => InOutPageRank.run(g, InOutPageRank.InOutConfig(maxIter = 3,
+          checkpointDir = dir, checkpointEvery = every))),
+        "arnoldi" -> (() => ArnoldiPageRank.run(g, ArnoldiPageRank.ArnoldiConfig(
+          maxRestarts = 3, checkpointDir = dir, checkpointEvery = every))))) {
+      val e = intercept[IllegalArgumentException](solve())
+      assert(e.getMessage.contains(s"checkpointEvery must be at least 1, got $every"),
+        s"$name: ${e.getMessage}")
+    }
+  }
+
   test("inout + arnoldi honor a personalization vector (fixed point vs dense oracle)") {
     import spark.implicits._
     val (n, edges) = GraphFixtures.g2
